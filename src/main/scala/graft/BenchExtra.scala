@@ -54,6 +54,11 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("time")
+    if (args.length < 2) {
+      System.err.println("usage: graft.BenchExtra time|noop Q1,Q2,... " +
+        "[repeats] | explain OUTDIR [suffix] [q...]")
+      return
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)

@@ -35,15 +35,6 @@ object Aggregates {
         min(col(ts)).as("ts_min"),
         max(col(ts)).as("ts_max"))
 
-  /** Distinct models per thread, sorted — exporter front-matter `models`
-    * (reference: exporter.py:163-165,228 collect + sort). */
-  def threadModels(
-      msgs: DataFrame,
-      conv: String = "conversation_id",
-      model: String = "model"): DataFrame =
-    msgs.groupBy(col(conv))
-      .agg(array_sort(collect_set(col(model))).as("models"))
-
   /** Run summary (reference: parser.py:360-363: threads, messages). */
   def runSummary(msgs: DataFrame, conv: String = "conversation_id"): DataFrame =
     msgs.agg(

@@ -90,13 +90,16 @@ object Main {
     val spark = session()
     spark.sparkContext.setLogLevel("WARN")
     args.head match {
-      case "parse" => parseMode(spark, args)
+      case "parse" => parseMode(spark, args).fold(identity, _ => 0)
       case "export" => exportMode(spark, args)
       case "chain" =>
-        val rc = parseMode(spark, args)
-        if (rc != 0) rc
-        else exportMode(spark,
-          args ++ Array("--parsed-root", opt(args, "outdir").get))
+        // one DAG: Markdown renders from the routed snapshot parse just
+        // committed, not from a re-listing and re-parse of the JSONL tree
+        // it also wrote (that tree is an output, and it is what
+        // --validate-schema checks)
+        parseMode(spark, args).fold(identity, routed =>
+          writeMarkdown(spark, args, exportOutdir(args), Some(routed),
+            jsonlFiles(spark, req(args, "outdir"))))
       case other =>
         System.err.println(I18n.msg("cli.unknown_mode", "mode" -> other))
         2
@@ -112,9 +115,12 @@ object Main {
 
   /** parse: raw export JSON → normalized messages → per-thread JSONL +
     * routed (role, tool) snapshot sinks + distributed thread index +
-    * pointer manifest with per-partition lineage.
+    * pointer manifest with per-partition lineage. Returns the committed
+    * routed snapshot (every thread of this run, resumed ones included),
+    * or the exit code when the input is missing.
     */
-  def parseMode(spark: SparkSession, args: Array[String]): Int = {
+  def parseMode(spark: SparkSession, args: Array[String])
+      : Either[Int, DataFrame] = {
     import spark.implicits._
     val input = req(args, "input")
     val outdir = req(args, "outdir")
@@ -122,7 +128,7 @@ object Main {
     if (!fsExists(spark, input)) {
       System.err.println(
         I18n.msg("cli.parse.input_missing", "path" -> input))
-      return 2
+      return Left(2)
     }
 
     // parse-failure counter rides the SAME scan via observe (an extra
@@ -231,73 +237,92 @@ object Main {
     // human summary on stderr, localized; stdout JSON stays stable
     System.err.println(I18n.msg("cli.parse.done",
       "threads" -> summary.getLong(0), "messages" -> summary.getLong(1)))
-    0
+    Right(routed)
   }
 
   /** export: parsed JSONL tree → Markdown files (split-aware). */
   def exportMode(spark: SparkSession, args: Array[String]): Int = {
     val root = req(args, "parsed-root")
-    val outdir = opt(args, "export-outdir")
-      .getOrElse(req(args, "outdir"))
+    val outdir = exportOutdir(args)
     if (!fsExists(spark, root)) {
       System.err.println(
         I18n.msg("cli.export.root_missing", "path" -> root))
       return 4
     }
+    // a parse run that produced zero threads leaves no JSONL, and a read
+    // of zero paths throws path-not-found — that is a legitimate empty
+    // export (parts:0, schema 0/0), not an exit-99 crash
+    val files = jsonlFiles(spark, root)
+    val rows = if (files.isEmpty) None else Some(
+      spark.read.schema(jsonlSchema)
+        .option("encoding", "UTF-8")
+        .json(files: _*)
+        .filter(col("record_type") === "message")
+        .withColumn("model", col("meta.model"))
+        .drop("meta", "record_type"))
+    writeMarkdown(spark, args, outdir, rows, files)
+  }
+
+  private def exportOutdir(args: Array[String]): String =
+    opt(args, "export-outdir").getOrElse(req(args, "outdir"))
+
+  private val jsonlSchema = StructType(Seq(
+    StructField("record_type", StringType),
+    StructField("provider_id", StringType),
+    StructField("conversation_id", StringType),
+    StructField("message_id", StringType),
+    StructField("parent_id", StringType),
+    StructField("role", StringType),
+    StructField("ts", LongType),
+    StructField("text", StringType),
+    StructField("meta", StructType(Seq(StructField("model", StringType))))))
+
+  /** The per-thread JSONL files under a parsed root, listed once on the
+    * driver. Readers get these paths, not the glob: the glob is then
+    * expanded once, and Spark's metadata-dir probe no longer warns about
+    * a literal glob path that does not exist. Glob metacharacters in the
+    * listed names are escaped, because readers glob their paths again
+    * and a thread dir is named after its conversation id, which may hold
+    * `[` or `{` (the id falls back to the input file's stem). */
+  private def jsonlFiles(spark: SparkSession, root: String): Seq[String] = {
+    val glob = new org.apache.hadoop.fs.Path(s"$root/*/thread-*/parsed.jsonl")
+    Option(glob.getFileSystem(spark.sessionState.newHadoopConf())
+      .globStatus(glob)).toSeq.flatten
+      .map(_.getPath.toString.replaceAll("""([\\*?\[\]{}])""", """\\$1"""))
+  }
+
+  /** The export tail shared by `export` and `chain`: render + pack the
+    * message rows (None = no threads), write the parts, optionally
+    * validate the JSONL files, report. Render only sorts and reads
+    * values, so rows with the same values give the same bytes whether
+    * they come from the JSONL tree or from the routed snapshot that
+    * tree was written from. */
+  private def writeMarkdown(spark: SparkSession, args: Array[String],
+      outdir: String, rows: Option[DataFrame], jsonl: => Seq[String]): Int = {
     val tz = opt(args, "tz").getOrElse("UTC")
     val formatting = opt(args, "formatting").getOrElse("light")
     val split = opt(args, "split").map(Exporter.SplitConf.parse)
       .getOrElse(Exporter.SplitConf.none)
 
-    // a parse run that produced zero threads leaves the JSONL glob
-    // empty, and both reads below throw path-not-found on an empty
-    // glob — that is a legitimate empty export (parts:0, schema 0/0),
-    // not an exit-99 crash
-    val jsonlGlob = s"$root/*/thread-*/parsed.jsonl"
-    val globPath = new org.apache.hadoop.fs.Path(jsonlGlob)
-    val nJsonl = Option(globPath
-      .getFileSystem(spark.sessionState.newHadoopConf())
-      .globStatus(globPath)).map(_.length).getOrElse(0)
-    if (nJsonl == 0) {
-      val zeroSchema = if (flag(args, "validate-schema"))
-        ""","schema_records":0,"schema_invalid":0""" else ""
-      println(s"""{"mode":"export","parts":0$zeroSchema}""")
-      System.err.println(I18n.msg("cli.export.done", "parts" -> 0))
-      return 0
-    }
-
-    val schema = StructType(Seq(
-      StructField("record_type", StringType),
-      StructField("provider_id", StringType),
-      StructField("conversation_id", StringType),
-      StructField("message_id", StringType),
-      StructField("parent_id", StringType),
-      StructField("role", StringType),
-      StructField("ts", LongType),
-      StructField("text", StringType),
-      StructField("meta", StructType(Seq(StructField("model", StringType))))))
-    val rows = spark.read.schema(schema)
-      .option("encoding", "UTF-8")
-      .json(jsonlGlob)
-      .filter(col("record_type") === "message")
-      .withColumn("model", col("meta.model"))
-      .drop("meta", "record_type")
-
-    val parts = Exporter.exportThreads(rows, tz, formatting, split)
     // writeParts counts via an accumulator inside the single write pass
     // (a separate parts.count() re-executed the whole render+pack
     // pipeline — round-1 double render)
-    val nParts = Exporter.writeParts(parts, s"$outdir/md")
+    val nParts = rows.fold(0L)(r => Exporter.writeParts(
+      Exporter.exportThreads(r, tz, formatting, split), s"$outdir/md"))
 
-    // opt-in runtime JSON-Schema validation of the JSONL records being
-    // exported (reference: schema_validation.py is likewise opt-in);
-    // one extra narrow text scan, only when requested
+    // opt-in runtime JSON-Schema validation of the JSONL records as
+    // written (reference: schema_validation.py is likewise opt-in); one
+    // extra narrow text scan, only when requested
     val validated = if (flag(args, "validate-schema")) {
-      val lines = spark.read.text(jsonlGlob)
-        .filter(col("value").contains("\"record_type\": \"message\""))
-      val r = graft.parse.SchemaContract.summarize(
-        graft.parse.SchemaContract.validateJsonl(lines)).head()
-      s""","schema_records":${r.getLong(0)},"schema_invalid":${r.getLong(1)}"""
+      val files = jsonl
+      val (records, invalid) = if (files.isEmpty) (0L, 0L) else {
+        val lines = spark.read.text(files: _*)
+          .filter(col("value").contains("\"record_type\": \"message\""))
+        val r = graft.parse.SchemaContract.summarize(
+          graft.parse.SchemaContract.validateJsonl(lines)).head()
+        (r.getLong(0), r.getLong(1))
+      }
+      s""","schema_records":$records,"schema_invalid":$invalid"""
     } else ""
     println(s"""{"mode":"export","parts":$nParts$validated}""")
     System.err.println(I18n.msg("cli.export.done", "parts" -> nParts))

@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Enrich stage (north-rule addition; the reference has no joins —
-  * SURVEY.md §2.6): attach tool/model metadata from small dimension
-  * tables with explicit broadcast-hash joins. At 100 TB the fact side
-  * never shuffles for these: the dims are a few KB, so the join is a
+  * SURVEY.md §2.6): attach tool metadata from a small dimension table
+  * with an explicit broadcast-hash join. At 100 TB the fact side never
+  * shuffles for it: the dim is a few KB, so the join is a
   * map-side BroadcastHashJoin inside the same whole-stage-codegen span
   * as the parse projections.
   */
@@ -25,26 +25,9 @@ object Enrich {
       .toDF("tool", "category", "is_builtin")
   }
 
-  /** model slug → family dimension. */
-  def dimModel(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("gpt-4o", "gpt-4", 128000),
-      ("gpt-4o-mini", "gpt-4", 128000),
-      ("gpt-5", "gpt-5", 256000),
-      ("o3", "o-series", 200000))
-      .toDF("model", "family", "context_window")
-  }
-
   /** Left-join tool metadata onto turns. Broadcast is explicit so the
     * plan is a BroadcastHashJoin regardless of autoBroadcast thresholds.
     */
   def attachToolMeta(turns: DataFrame): DataFrame =
     turns.join(broadcast(dimTool(turns.sparkSession)), Seq("tool"), "left")
-
-  def attachModelMeta(turns: DataFrame, modelCol: String = "model"): DataFrame =
-    turns.join(
-      broadcast(dimModel(turns.sparkSession)
-        .withColumnRenamed("model", modelCol)),
-      Seq(modelCol), "left")
 }

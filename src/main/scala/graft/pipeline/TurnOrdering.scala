@@ -21,9 +21,6 @@ import org.apache.spark.sql.functions._
   *    are handled downstream: the routed WRITE salts on message_id so one
   *    conversation never serializes into a single output task (see
   *    Router.scala).
-  *  - For sinks that only need sorted-by order (per-thread JSONL), prefer
-  *    [[sortedForWrite]]: repartitionByRange gives range-partitioned,
-  *    globally ordered output without the row_number exchange.
   */
 object TurnOrdering {
 
@@ -36,27 +33,4 @@ object TurnOrdering {
       .orderBy(col(ts).asc_nulls_last, col(tie).asc)
     df.withColumn("turn_idx", row_number().over(w) - 1)
   }
-
-  /** Range-partition by (conv, ts, tie) + sort within partitions: stable
-    * global order for file sinks with no window needed.
-    */
-  def sortedForWrite(
-      df: DataFrame,
-      conv: String = "conversation_id",
-      ts: String = "ts",
-      tie: String = "message_id",
-      numPartitions: Option[Int] = None): DataFrame = {
-    val cols = Seq(col(conv), col(ts).asc_nulls_last, col(tie))
-    val parts = numPartitions
-      .map(n => df.repartitionByRange(n, col(conv)))
-      .getOrElse(df.repartitionByRange(col(conv)))
-    parts.sortWithinPartitions(cols: _*)
-  }
-
-  /** Salt column for skew-prone wide ops that do NOT need whole-thread
-    * state: pmod(xxhash64(tie), buckets) on hot conversations only.
-    * Hot set comes from a cheap first-pass count (see SURVEY.md §4.2.3).
-    */
-  def saltColumn(tie: String, buckets: Int) =
-    pmod(xxhash64(col(tie)), lit(buckets)).cast("int")
 }

@@ -41,8 +41,6 @@ object PyJson {
     sb.toString
   }
 
-  def strOrNull(s: String): String = if (s == null) "null" else str(s)
-
   def arr(xs: Seq[String]): String =
     xs.map(str).mkString("[", ", ", "]")
 

@@ -8,6 +8,33 @@ import graft.app.Main
 class MainAppSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** `n` synthesized conversations as raw export JSONL (conv 0 is a
+    * 400-turn mega thread); returns the file's path. */
+  private def rawCorpus(n: Int): String = {
+    val f = java.nio.file.Files.createTempFile("graft-raw", ".jsonl")
+    java.nio.file.Files.write(f, (graft.gen.TranscriptGen.renderRawJsonl(
+      graft.gen.TranscriptGen.synthesize(spark, n)).collect()
+      .mkString("\n") + "\n").getBytes("UTF-8"))
+    f.toString
+  }
+
+  /** The Markdown files under `out/md`: file name → bytes. */
+  private def mdFiles(out: java.nio.file.Path): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val dir = out.resolve("md")
+    if (!java.nio.file.Files.isDirectory(dir)) Map.empty
+    else java.nio.file.Files.list(dir).iterator().asScala.map { p =>
+      p.getFileName.toString ->
+        java.nio.file.Files.readAllBytes(p).toSeq
+    }.toMap
+  }
+
+  private def stdoutOf(body: => Unit): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(buf, true, "UTF-8"))(body)
+    buf.toString("UTF-8")
+  }
+
   test("chain: raw fixture → parsed JSONL + routed sinks + manifest → markdown") {
     val out = java.nio.file.Files.createTempDirectory("graft-app")
     val rc = Main.run(Array("chain",
@@ -53,6 +80,79 @@ class MainAppSpec extends AnyFunSuite {
     }
     assert(outStream.toString("UTF-8")
       .contains(""""schema_records":16,"schema_invalid":0"""))
+  }
+
+  test("chain renders the same Markdown as parse + standalone export") {
+    // chain renders from the routed snapshot, export from the JSONL tree
+    // written from it: same rows, so the same files, byte for byte
+    val in = rawCorpus(120)
+    Seq(Seq("--split", "count=7"),
+        Seq("--formatting", "none", "--tz", "Asia/Tokyo")).foreach { opts =>
+      val a = java.nio.file.Files.createTempDirectory("graft-chain")
+      val b = java.nio.file.Files.createTempDirectory("graft-parse-export")
+      assert(Main.run(Array("chain", "--input", in,
+        "--outdir", a.toString) ++ opts) === 0)
+      assert(Main.run(Array("parse", "--input", in,
+        "--outdir", b.toString)) === 0)
+      assert(Main.run(Array("export", "--parsed-root", b.toString,
+        "--outdir", b.toString) ++ opts) === 0)
+      val (viaChain, viaExport) = (mdFiles(a), mdFiles(b))
+      assert(viaChain.size >= 120, opts)
+      assert(viaChain.keySet === viaExport.keySet, opts)
+      viaChain.foreach { case (name, bytes) =>
+        assert(bytes === viaExport(name), s"$name ${opts.mkString(" ")}")
+      }
+    }
+  }
+
+  test("chain renders only this run's threads; --resume renders them all") {
+    val out = java.nio.file.Files.createTempDirectory("graft-chain-stale")
+    // a thread another run left in the outdir; the `[1]` in its id also
+    // pins that export's listed JSONL paths are read literally, not as
+    // globs
+    val staleCid = "stale[1]"
+    val staleDir = out.resolve(s"openai/thread-$staleCid")
+    java.nio.file.Files.createDirectories(staleDir)
+    java.nio.file.Files.writeString(staleDir.resolve("parsed.jsonl"),
+      graft.route.Router.threadHeaderLine("openai", staleCid, 1) + "\n" +
+        graft.route.Router.messageJsonLine(graft.model.Schemas.Message(
+          "openai", staleCid, "m-1", Some("m-0"), "user", None,
+          1700000000000L, "text", Seq("left over"), "left over")) + "\n")
+    val staleMd = s"thread-$staleCid.md"
+
+    assert(Main.run(Array("chain", "--input", rawCorpus(20),
+      "--outdir", out.toString)) === 0)
+    val first = mdFiles(out)
+    assert(first.size === 20)
+    assert(!first.contains(staleMd), "chain must render its own threads only")
+
+    // standalone export keeps the reference's rglob: every JSONL under
+    // the root, the leftover included
+    val exported = java.nio.file.Files.createTempDirectory("graft-export-all")
+    val report = stdoutOf {
+      assert(Main.run(Array("export", "--parsed-root", out.toString,
+        "--outdir", exported.toString, "--validate-schema")) === 0)
+    }
+    assert(report.contains(""""parts":21,"""), report)
+    assert(report.contains(""""schema_invalid":0"""), report)
+    val all = mdFiles(exported)
+    assert(all.keySet === first.keySet + staleMd)
+    first.foreach { case (name, bytes) => assert(all(name) === bytes, name) }
+
+    // resume after one added thread: JSONL is rewritten for the new
+    // thread only, but Markdown is rendered for every thread of the run
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(out.resolve("md")).iterator().asScala.toSeq
+      .reverse.foreach(p => java.nio.file.Files.delete(p))
+    val resumed = stdoutOf {
+      assert(Main.run(Array("chain", "--input", rawCorpus(21),
+        "--outdir", out.toString, "--resume")) === 0)
+    }
+    assert(resumed.contains(""""skipped_threads":20"""), resumed)
+    val again = mdFiles(out)
+    assert(again.size === 21)
+    assert(!again.contains(staleMd))
+    first.foreach { case (name, bytes) => assert(again(name) === bytes, name) }
   }
 
   test("parse --input-format text: routed sinks match the JSON path") {
