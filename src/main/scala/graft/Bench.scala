@@ -43,25 +43,7 @@ object Bench {
       Runtime.getRuntime.availableProcessors().toString)
     // ~5.5M turns: large enough that fixed job overhead (<6 s) is noise
     val nConvs = sys.env.getOrElse("SPARK_GRAFT_CONVS", "480000").toInt
-    val shm = java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get("/dev/shm"))
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // task-side commit: the v1 driver-side merge measured ~4 s serial
-      // on the routed fan-out write
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        "2")
-      .config("spark.driver.memory",
-        sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-    // shuffle to tmpfs: the sandbox disk (~380 MB/s) would otherwise
-    // serialize every exchange
-    val spark = (if (shm) b.config("spark.local.dir", "/dev/shm/graft-shuffle")
-                 else b).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
 
     // Per-query repeat-min, INTERLEAVED (full sorted sweep per round,
     // not per-query back-to-back repeats): single shots on this
@@ -260,5 +242,30 @@ object Bench {
     java.nio.file.Files.walk(work).iterator().asScala.toSeq.reverse
       .foreach(p => java.nio.file.Files.deleteIfExists(p))
     spark.stop()
+  }
+
+  /** The benches' session, shared with [[BenchExtra]] so their numbers
+    * compare. */
+  def session(cpus: String): SparkSession = {
+    val shm = java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get("/dev/shm"))
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // task-side commit: the v1 driver-side merge measured ~4 s serial
+      // on the routed fan-out write
+      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
+        "2")
+      .config("spark.driver.memory",
+        sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
+    // shuffle to tmpfs: the sandbox disk (~380 MB/s) would otherwise
+    // serialize every exchange
+    val spark = (if (shm) b.config("spark.local.dir", "/dev/shm/graft-shuffle")
+                 else b).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Extra measurement harness for optimization work (guide §1) — NOT the
   * driver bench (that is the frozen graft.Bench). Three modes:
@@ -22,7 +21,7 @@ import org.apache.spark.sql.SparkSession
   *     times the query with the noop sink (computes every column,
   *     guide §1.4) instead of count().
   *
-  * Session config mirrors Bench exactly so numbers are comparable.
+  * The session is Bench's own, so numbers are comparable.
   */
 object BenchExtra {
 
@@ -62,21 +61,7 @@ object BenchExtra {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val shm = java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get("/dev/shm"))
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version",
-        "2")
-      .config("spark.driver.memory",
-        sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-    val spark = (if (shm) b.config("spark.local.dir", "/dev/shm/graft-shuffle")
-                 else b).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.session(cpus)
 
     mode match {
       case "explain" =>

@@ -9,7 +9,6 @@ import graft.export.Exporter
 import graft.lineage.Lineage
 import graft.model.Schemas
 import graft.parse.ChatGptParser
-import graft.pipeline.TurnOrdering
 import graft.route.Router
 
 /** spark-submit entry point: `parse | export | chain` job modes
@@ -132,7 +131,7 @@ object Main {
     }
 
     // parse-failure counter rides the SAME scan via observe (an extra
-    // corruptRows() pass would re-parse all the raw input); the metric
+    // counting pass would re-parse all the raw input); the metric
     // materializes with the routed write action below
     // unique name: repeated parse runs in one session (chain, tests)
     // must not collide on the listener registration
@@ -140,11 +139,8 @@ object Main {
       "parse_metrics_" + java.util.UUID.randomUUID())
     val msgs = opt(args, "input-format").getOrElse("json") match {
       case "json" =>
-        val raw = ChatGptParser.readRawAuto(spark, input)
-        val rawObserved = raw.observe(obs,
-          count(when(col("_corrupt_record").isNotNull &&
-            col("mapping").isNull, 1)).as("corrupt_lines"))
-        ChatGptParser.normalize(rawObserved, provider)
+        ChatGptParser.normalize(ChatGptParser.readRawAuto(spark, input)
+          .observe(obs, ChatGptParser.corruptLines), provider)
       case "text" =>
         // plain-text transcript logs (grok wire format): one document
         // per FILE, conv id = file stem; turns with malformed headers

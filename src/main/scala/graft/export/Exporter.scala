@@ -29,10 +29,7 @@ object Exporter {
   final case class SplitConf(
       mode: Option[String], // size | count | auto
       sizeLimit: Option[Long],
-      countLimit: Option[Int],
-      softOverflow: Double = 0.20,
-      hard: Boolean = false,
-      tinyTailThreshold: Int = 20)
+      countLimit: Option[Int])
 
   object SplitConf {
     val none: SplitConf = SplitConf(None, None, None)
@@ -178,16 +175,16 @@ object Exporter {
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
 
   /** Greedy packer over rendered blocks (E13) — byte accounting with
-    * 1024B front-matter approximation (or exact re-render in hard
-    * mode), soft overflow +20%, tiny-tail merge. Returns block index
-    * ranges per part. Verified golden: 50 msgs, count=10, tail 20 →
-    * parts 10/10/30.
+    * a 1024B front-matter approximation, soft overflow +20%, tiny-tail
+    * merge (reference: exporter.py:239-342). Returns block index ranges
+    * per part. Verified golden: 50 msgs, count=10, tail 20 → parts
+    * 10/10/30.
     */
-  def packBlocks(blocks: IndexedSeq[String], conf: SplitConf,
-      hardFmLen: Int => Int = _ => 1024): IndexedSeq[IndexedSeq[Int]] = {
-    val sizeLimit = conf.sizeLimit
-    val countLimit = conf.countLimit
+  def packBlocks(blocks: IndexedSeq[String],
+      conf: SplitConf): IndexedSeq[IndexedSeq[Int]] = {
     val fmApprox = 1024
+    val softOverflow = 0.20
+    val tinyTailThreshold = 20
     val parts = scala.collection.mutable.ArrayBuffer.empty[IndexedSeq[Int]]
     var buf = scala.collection.mutable.ArrayBuffer.empty[Int]
     var bufBytes = 0L
@@ -198,38 +195,18 @@ object Exporter {
       bufBytes = 0L
     }
 
-    def hardWillOverflow(blockIdx: Int): Boolean = sizeLimit.exists { lim =>
-      if (conf.hard) {
-        val fm = hardFmLen(buf.length + 1)
-        val body = buf.map(blocks(_)).map(utf8Len).sum +
-          utf8Len(blocks(blockIdx))
-        fm + body > lim
-      } else bufBytes + utf8Len(blocks(blockIdx)) + fmApprox > lim
-    }
-
-    var i = 0
-    while (i < blocks.length) {
+    for (i <- blocks.indices) {
       val bsz = utf8Len(blocks(i))
-      val overSize = sizeLimit.isDefined && hardWillOverflow(i)
-      val overCount = !overSize && countLimit.exists(buf.length >= _)
+      val overSize = conf.sizeLimit.exists(bufBytes + bsz + fmApprox > _)
+      val overCount = !overSize && conf.countLimit.exists(buf.length >= _)
       if (overSize || overCount) {
-        val withinSoft = sizeLimit.exists { lim =>
-          !overCount &&
-            bufBytes + bsz + fmApprox <= (lim * (1 + conf.softOverflow)).toLong
+        val withinSoft = !overCount && conf.sizeLimit.exists { lim =>
+          bufBytes + bsz + fmApprox <= (lim * (1 + softOverflow)).toLong
         }
-        val smallTail = blocks.length - (i + 1) <= conf.tinyTailThreshold
-        if (!conf.hard && (withinSoft || smallTail)) {
-          buf += i; bufBytes += bsz
-          i += 1
-        } else {
-          flush()
-          buf += i; bufBytes += bsz
-          i += 1
-        }
-      } else {
-        buf += i; bufBytes += bsz
-        i += 1
+        val smallTail = blocks.length - (i + 1) <= tinyTailThreshold
+        if (!withinSoft && !smallTail) flush()
       }
+      buf += i; bufBytes += bsz
     }
     flush()
     if (parts.isEmpty) IndexedSeq(blocks.indices)
@@ -266,13 +243,23 @@ object Exporter {
       return Seq(MdPart(cid, 1, 1, partFileName(cid, ""), md))
     }
 
+    // split-mode front matter (reference: exporter.py:320-333)
     def fmLines(msgCount: Int, partIdx: Int, partTotal: Int): Seq[String] =
-      splitFmLines(cid, provider, models, tsMin, tsMax, msgCount,
-        partIdx, partTotal, generatedAtUtc, tz)
+      Seq(
+        "---",
+        s"thread: $cid",
+        s"provider: $provider",
+        s"models: ${asYamlList(models)}",
+        s"message_count: $msgCount",
+        s"range: ${toIsoUtc(tsMin)} 〜 ${toIsoUtc(tsMax)}",
+        s"part_index: $partIdx",
+        s"part_total: $partTotal",
+        s"generated_at_utc: $generatedAtUtc",
+        s"tz: ${tz.getId}",
+        "---",
+        "")
 
-    val hardFm = (n: Int) =>
-      utf8Len(fmLines(n, 1, 0).mkString("\n"))
-    val ranges = packBlocks(blocks, split, hardFm)
+    val ranges = packBlocks(blocks, split)
     val total = ranges.length
     ranges.zipWithIndex.map { case (idxs, p) =>
       val page = fmLines(idxs.length, p + 1, total).mkString("\n") +
@@ -281,28 +268,6 @@ object Exporter {
       MdPart(cid, p + 1, total, partFileName(cid, suffix), page)
     }
   }
-
-  /** Split-mode front matter (reference: exporter.py:320-333; shared by
-    * renderThread and the no-write preview so hard-mode byte accounting
-    * agrees between them). */
-  private def splitFmLines(
-      cid: String, provider: String, models: Seq[String],
-      tsMin: Option[Double], tsMax: Option[Double], msgCount: Int,
-      partIdx: Int, partTotal: Int, generatedAtUtc: String,
-      tz: ZoneId): Seq[String] =
-    Seq(
-      "---",
-      s"thread: $cid",
-      s"provider: $provider",
-      s"models: ${asYamlList(models)}",
-      s"message_count: $msgCount",
-      s"range: ${toIsoUtc(tsMin)} 〜 ${toIsoUtc(tsMax)}",
-      s"part_index: $partIdx",
-      s"part_total: $partTotal",
-      s"generated_at_utc: $generatedAtUtc",
-      s"tz: ${tz.getId}",
-      "---",
-      "")
 
   /** Distributed export: group by conversation, render + pack per
     * group. Input needs columns: conversation_id, provider_id,
@@ -331,107 +296,18 @@ object Exporter {
       }
   }
 
-  /** Split preview (E14, reference: exporter.py:211-219): per-thread
-    * part estimate WITHOUT writing anything. Blocks are rendered (byte
-    * sizes are what the packer decides on) and the REAL packer runs, so
-    * `n_parts` equals exactly what writeParts would produce;
-    * `est_parts_by_size` is the reference's cheap total/limit estimate
-    * for comparison. */
-  final case class PartPreview(
-      conversation_id: String,
-      n_messages: Int,
-      total_bytes: Long,
-      n_parts: Int,
-      est_parts_by_size: Int)
-
-  def previewThreads(
-      msgs: DataFrame,
-      tz: String = "UTC",
-      formatting: String = "light",
-      split: SplitConf = SplitConf.none,
-      generatedAtUtc: String = "1970-01-01T00:00:00+00:00")
-      : Dataset[PartPreview] = {
-    val spark = msgs.sparkSession
-    import spark.implicits._
-    val withModel =
-      if (msgs.columns.contains("model")) msgs
-      else msgs.withColumn("model", lit(null).cast("string"))
-    val zoneId = tz
-    withModel
-      .select("conversation_id", "provider_id", "message_id", "parent_id",
-        "role", "ts", "text", "model")
-      .as[ExportMsg]
-      .groupByKey(_.conversation_id)
-      .mapGroups { (cid, it) =>
-        val zone = ZoneId.of(zoneId)
-        val msgsSeq = it.toSeq
-        val sorted = msgsSeq.sortBy(m => (m.ts.isEmpty, m.ts, m.message_id))
-        val provider =
-          sorted.headOption.map(_.provider_id).getOrElse("unknown")
-        val models = sorted.flatMap(_.model).distinct.sorted
-        val tss = sorted.flatMap(_.ts)
-        val blocks =
-          sorted.map(renderBlock(_, zone, formatting)).toIndexedSeq
-        val total = blocks.map(utf8Len(_).toLong).sum
-        val nParts =
-          if (split.mode.isEmpty) 1
-          else {
-            val hardFm = (n: Int) => utf8Len(splitFmLines(cid, provider,
-              models, tss.minOption.map(_.toDouble),
-              tss.maxOption.map(_.toDouble), n, 1, 0, generatedAtUtc,
-              zone).mkString("\n"))
-            packBlocks(blocks, split, hardFm).length
-          }
-        val est = split.sizeLimit
-          .map(l => math.max(1, math.ceil(total.toDouble / l).toInt))
-          .getOrElse(1)
-        PartPreview(cid, sorted.size, total, nParts, est)
-      }
-  }
-
-  /** Write parts as files (executor-side, through the Hadoop FS of
-    * outDir's scheme), atomic per file; returns the number of parts
+  /** Write parts as files, executor-side and atomic per file
+    * ([[graft.util.AtomicFiles]]); returns the number of parts
     * written, counted by accumulator inside this single pass — no
     * second execution of the render+pack pipeline. */
   def writeParts(parts: Dataset[MdPart], outDir: String): Long = {
     val acc = parts.sparkSession.sparkContext.longAccumulator("md_parts")
-    val scheme = Option(new org.apache.hadoop.fs.Path(outDir)
-      .toUri.getScheme)
-    val local = scheme.isEmpty || scheme.contains("file")
-    val confOverlay =
-      if (local) Map.empty[String, String]
-      else graft.util.HadoopConfs.capture(
-        parts.sparkSession.sessionState.newHadoopConf())
+    val out = graft.util.AtomicFiles.writer(outDir,
+      parts.sparkSession.sessionState.newHadoopConf())
     parts.foreachPartition { (it: Iterator[MdPart]) =>
-      val utf8 = java.nio.charset.StandardCharsets.UTF_8
-      if (local) {
-        // java.nio fast path for local schemes (Hadoop LocalFileSystem
-        // costs ~45 ms per small file — see Router.writeThreadJsonl)
-        val dir = java.nio.file.Paths.get(outDir.stripPrefix("file:"))
-        java.nio.file.Files.createDirectories(dir)
-        it.foreach { p =>
-          val tmp = dir.resolve(p.file_name + ".tmp")
-          java.nio.file.Files.write(tmp, p.content.getBytes(utf8))
-          java.nio.file.Files.move(tmp, dir.resolve(p.file_name),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          acc.add(1L)
-        }
-      } else {
-        val conf = graft.util.HadoopConfs.restore(confOverlay)
-        val dir = new org.apache.hadoop.fs.Path(outDir)
-        val fs = dir.getFileSystem(conf)
-        fs.mkdirs(dir)
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          dir.toUri, conf)
-        it.foreach { p =>
-          val tmp = new org.apache.hadoop.fs.Path(dir, p.file_name + ".tmp")
-          val out = fs.create(tmp, true)
-          try out.write(p.content.getBytes(utf8)) finally out.close()
-          fc.rename(tmp, new org.apache.hadoop.fs.Path(dir, p.file_name),
-            org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-          acc.add(1L)
-        }
+      it.foreach { p =>
+        out.write(p.file_name, p.content)
+        acc.add(1L)
       }
     }
     acc.value

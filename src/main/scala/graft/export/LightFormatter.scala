@@ -10,13 +10,12 @@ package graft.export
   *  - strip trailing blank lines
   *  - formatting == "none" → identity
   *
-  * Inherently sequential per string, so it lives here as a pure static
-  * function; [[graft.functions.RenderLightMarkdown]] wraps it as a
-  * codegen'd Catalyst expression for use inside DataFrame plans.
+  * Inherently sequential per string, so it lives here as a pure
+  * function that `Exporter.renderBlock` calls per message.
   */
 object LightFormatter {
 
-  /** Java-callable entry for generated code. */
+  /** One message text, light-formatted by the rules above. */
   def render(raw: String): String = {
     // Python splitlines() splits on \n, \r, \r\n (and unicode seps —
     // those don't appear in JSON-decoded chat text in practice; we

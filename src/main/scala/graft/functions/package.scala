@@ -39,10 +39,6 @@ package object functions {
   def unicode_normalize(col: Column, form: String = "NFC"): Column =
     c(UnicodeNormalize(e(col), form))
 
-  /** Reference "light" Markdown formatting (codegen'd). */
-  def render_light_md(text: Column): Column =
-    c(RenderLightMarkdown(e(text)))
-
   /** Latest value at-or-before a timestamp from a sorted change
     * history (codegen'd binary search). */
   def asof_lookup(history: Column, ts: Column): Column =

@@ -94,12 +94,11 @@ object Lineage {
     new graft.table.SnapshotParquetTable(tableRoot)
       .currentSnapshot(spark).isDefined
 
-  /** Atomic manifest commit: write tmp, atomic rename — same protocol
-    * as the reference (tmp → replace) and the same shape as an Iceberg
-    * snapshot's metadata pointer swap. The manifest is a bounded
-    * POINTER document: run-level stats, per-partition lineage (one row
-    * per task) and the thread-index table path — never the per-thread
-    * entries themselves. Hadoop FS IO so hdfs:/s3a: manifests work. */
+  /** Atomic manifest commit (tmp → replace, [[graft.util.AtomicFiles]]).
+    * The manifest is a bounded POINTER document: run-level stats,
+    * per-partition lineage (one row per task) and the thread-index
+    * table path — never the per-thread entries themselves. Hadoop FS IO
+    * so hdfs:/s3a: manifests work. */
   def writeManifest(
       path: String,
       provider: String,
@@ -124,20 +123,10 @@ object Lineage {
         "row_count" -> p.row_count,
         "ts_min" -> p.ts_min,
         "ts_max" -> p.ts_max))))
-    val p = new org.apache.hadoop.fs.Path(path)
     // pass the SESSION conf (spark.hadoop.* — S3 creds, defaultFS)
     // from callers with a session; bare defaults only as a fallback
-    val conf = Option(hadoopConf)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val fs = p.getFileSystem(conf)
-    Option(p.getParent).foreach(fs.mkdirs(_))
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.getParent, p.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(p.toUri, conf)
-      .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    graft.util.AtomicFiles.commit(path, json, Option(hadoopConf)
+      .getOrElse(new org.apache.hadoop.conf.Configuration()))
   }
 
   /** Resume filter: conversations whose (conversation_id, count) already

@@ -30,9 +30,7 @@ import graft.model.Schemas
   *
   * The BFS linearization (adapter.py:100-141) is deliberately NOT on
   * this path: the adapter's final sort by (ts, message_id) makes BFS
-  * order unobservable in normalized output (see SURVEY.md §2 A5). It
-  * exists as its own operator — [[Linearize.linearized]] — for callers
-  * that want branch-aware thread order.
+  * order unobservable in normalized output (see SURVEY.md §2 A5).
   */
 object ChatGptParser {
 
@@ -129,9 +127,6 @@ object ChatGptParser {
           col("update_time").cast(StringType), lit("")))), 1, 12),
     lit("unknown"))
 
-  /** The conversation-id coalesce chain, shared with [[Linearize]]. */
-  private[parse] def conversationIdCol: Column = conversationId
-
   /** Normalize raw conversations into the message contract.
     *
     * Output columns (Schemas.messageColumns): provider_id,
@@ -199,14 +194,13 @@ object ChatGptParser {
       .withColumn("text", array_join(col("parts"), "\n"))
   }
 
-  /** Corrupt-line counter (reference warn-skips broken lines and reports
-    * them in the run summary, parser.py:82-84,338-345). Use with
-    * df.observe or as a side aggregate.
-    */
-  def corruptRows(raw: DataFrame): DataFrame =
+  /** Corrupt-line count over a raw read (reference warn-skips broken
+    * lines and reports them in the run summary, parser.py:82-84,338-345):
+    * an aggregate for `observe` on the scan that parses anyway, or for a
+    * side `select`. */
+  def corruptLines: Column =
     // also references a data column (mapping) — Spark disallows queries
     // touching ONLY the corrupt-record column on raw file scans
-    raw.select(count(
-      when(col("_corrupt_record").isNotNull && col("mapping").isNull, 1))
-      .as("corrupt_lines"))
+    count(when(col("_corrupt_record").isNotNull && col("mapping").isNull, 1))
+      .as("corrupt_lines")
 }

@@ -1,6 +1,6 @@
 package graft.route
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.model.Schemas.Message
@@ -141,58 +141,20 @@ object Router {
 
   /** Write per-thread parsed.jsonl files in the reference layout under
     * `outDir/<provider>/thread-<cid>/parsed.jsonl`, atomically
-    * (tmp → rename, like parser.py:286,324). Executor-side IO through
-    * the Hadoop FileSystem of outDir's scheme (file:/hdfs:/s3a: all
-    * work — java.nio would silently break off the local disk); one
-    * file per conversation, written from whichever task owns the
-    * group — no driver collect.
+    * (tmp → rename, like parser.py:286,324; [[graft.util.AtomicFiles]],
+    * so file:/hdfs:/s3a: all work); one file per conversation, written
+    * from whichever task owns the group — no driver collect.
     */
   def writeThreadJsonl(
       msgs: Dataset[Message],
       outDir: String,
       provider: String = "openai"): Unit = {
-    val scheme = Option(new org.apache.hadoop.fs.Path(outDir)
-      .toUri.getScheme)
-    val local = scheme.isEmpty || scheme.contains("file")
-    val confOverlay =
-      if (local) Map.empty[String, String]
-      else graft.util.HadoopConfs.capture(
-        msgs.sparkSession.sessionState.newHadoopConf())
+    val out = graft.util.AtomicFiles.writer(outDir,
+      msgs.sparkSession.sessionState.newHadoopConf())
     threadJsonl(msgs).foreachPartition {
       (it: Iterator[(String, String)]) =>
-        val utf8 = java.nio.charset.StandardCharsets.UTF_8
-        if (local) {
-          // java.nio fast path: Hadoop's LocalFileSystem measured ~45 ms
-          // per small file (checksum wrapper + permission plumbing) vs
-          // <1 ms here — at one file per conversation that difference is
-          // the whole write stage
-          val baseDir = outDir.stripPrefix("file:")
-          it.foreach { case (cid, content) =>
-            val dir = java.nio.file.Paths.get(baseDir, provider,
-              s"thread-$cid")
-            java.nio.file.Files.createDirectories(dir)
-            val tmp = dir.resolve("parsed.tmp")
-            java.nio.file.Files.write(tmp, content.getBytes(utf8))
-            java.nio.file.Files.move(tmp, dir.resolve("parsed.jsonl"),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          }
-        } else {
-          val conf = graft.util.HadoopConfs.restore(confOverlay)
-          val base = new org.apache.hadoop.fs.Path(s"$outDir/$provider")
-          val fs = base.getFileSystem(conf)
-          val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-            base.toUri, conf)
-          it.foreach { case (cid, content) =>
-            val dir = new org.apache.hadoop.fs.Path(base, s"thread-$cid")
-            fs.mkdirs(dir)
-            val tmp = new org.apache.hadoop.fs.Path(dir, "parsed.tmp")
-            val out = fs.create(tmp, true)
-            try out.write(content.getBytes(utf8)) finally out.close()
-            fc.rename(tmp,
-              new org.apache.hadoop.fs.Path(dir, "parsed.jsonl"),
-              org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-          }
+        it.foreach { case (cid, content) =>
+          out.write(s"$provider/thread-$cid/parsed.jsonl", content)
         }
     }
   }

@@ -39,6 +39,10 @@ class FingerprintStore(val root: String) {
 
   private def batchDir(id: Long) = f"batch-$id%05d"
 
+  private def commitPointer(spark: SparkSession, json: String): Unit =
+    graft.util.AtomicFiles.commit(pointer.toString, json,
+      spark.sessionState.newHadoopConf())
+
   /** (first committed batch id, committed batch count). */
   def committed(spark: SparkSession): (Long, Long) = {
     val f = fs(spark)
@@ -90,14 +94,7 @@ class FingerprintStore(val root: String) {
     if (f.exists(dir)) f.delete(dir, true)
     read(spark).distinct()
       .write.mode(SaveMode.ErrorIfExists).parquet(dir.toString)
-    val json = PyJson.obj("first" -> id.toString, "count" -> "1")
-    val tmp = new Path(root, s"_current.json.tmp-$id")
-    val out = f.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new Path(root).toUri, spark.sessionState.newHadoopConf())
-    fc.rename(tmp, pointer, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    commitPointer(spark, PyJson.obj("first" -> id.toString, "count" -> "1"))
     (first until first + n).foreach(i =>
       f.delete(new Path(root, batchDir(i)), true))
     id
@@ -119,15 +116,8 @@ class FingerprintStore(val root: String) {
     if (f.exists(dir)) f.delete(dir, true)
     fps.select("fp").write.mode(SaveMode.ErrorIfExists)
       .parquet(dir.toString)
-    val json = PyJson.obj(
-      "first" -> first.toString, "count" -> (n + 1).toString)
-    val tmp = new Path(root, s"_current.json.tmp-$id")
-    val out = f.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new Path(root).toUri, spark.sessionState.newHadoopConf())
-    fc.rename(tmp, pointer, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    commitPointer(spark, PyJson.obj(
+      "first" -> first.toString, "count" -> (n + 1).toString))
     id
   }
 }

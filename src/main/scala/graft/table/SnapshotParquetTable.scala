@@ -6,7 +6,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 import graft.util.PyJson
 
-/** Minimal Iceberg-shaped table abstraction (SURVEY.md §7.1): immutable
+/** One committed snapshot: its id and its data directory. */
+final case class Snapshot(id: Long, dataPath: String)
+
+/** Minimal Iceberg-shaped table (SURVEY.md §7.1): immutable
   * snapshot data directories + an atomically swapped JSON pointer file.
   *
   * Why not plain `SaveMode.Overwrite`: overwrite DELETES the existing
@@ -17,38 +20,21 @@ import graft.util.PyJson
   * and only then swaps `_current.json`; readers always see the last
   * complete snapshot, a crash leaves at worst an orphaned (ignored)
   * data dir, and history enables time-travel debugging/GC exactly like
-  * an Iceberg metadata pointer. On a real cluster the trait is the seam
-  * where an Iceberg catalog slots in unchanged.
+  * an Iceberg metadata pointer.
   *
   * All IO goes through the Hadoop FileSystem of the root's scheme, so
   * `file:`, `hdfs:` and `s3a:` roots behave identically (rename
   * atomicity is per-FS: posix/HDFS atomic; object stores get
   * read-committed via the tiny pointer object).
-  */
-trait TranscriptTable {
-  def root: String
-
-  /** Write df as the table's next snapshot; atomic pointer swap on
-    * success. Returns the committed snapshot. */
-  def commit(df: DataFrame, partitionBy: Seq[String] = Nil): Snapshot
-
-  /** Current snapshot's data as a DataFrame. */
-  def read(spark: SparkSession): DataFrame
-
-  def currentSnapshot(spark: SparkSession): Option[Snapshot]
-}
-
-final case class Snapshot(id: Long, dataPath: String)
-
-/** @param retainSnapshots how many newest snapshot data dirs commit()
+  *
+  * @param retainSnapshots how many newest snapshot data dirs commit()
   *   keeps (Iceberg's expire-snapshots contract: without expiry every
   *   commit grows the table by a full data copy — on the bench's tmpfs
   *   work dirs that is RAM). The pointer's current snapshot is never
   *   deleted; readers holding an already-expired path break, exactly
   *   as with Iceberg — retain enough history for in-flight readers.
   */
-class SnapshotParquetTable(val root: String, retainSnapshots: Int = 2)
-    extends TranscriptTable {
+class SnapshotParquetTable(val root: String, retainSnapshots: Int = 2) {
 
   private def fs(spark: SparkSession): FileSystem =
     new Path(root).getFileSystem(
@@ -65,7 +51,7 @@ class SnapshotParquetTable(val root: String, retainSnapshots: Int = 2)
 
   private def pointer = new Path(root, "_current.json")
 
-  override def currentSnapshot(spark: SparkSession): Option[Snapshot] = {
+  def currentSnapshot(spark: SparkSession): Option[Snapshot] = {
     val f = fs(spark)
     if (!f.exists(pointer)) None
     else {
@@ -93,7 +79,9 @@ class SnapshotParquetTable(val root: String, retainSnapshots: Int = 2)
       .maxOption.map(_ + 1).getOrElse(0L)
   }
 
-  override def commit(df: DataFrame,
+  /** Write df as the table's next snapshot; atomic pointer swap on
+    * success. Returns the committed snapshot. */
+  def commit(df: DataFrame,
       partitionBy: Seq[String] = Nil): Snapshot = {
     val spark = df.sparkSession
     val f = fs(spark)
@@ -103,21 +91,10 @@ class SnapshotParquetTable(val root: String, retainSnapshots: Int = 2)
     val w = df.write.mode(SaveMode.ErrorIfExists)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(dataDir)
-    // pointer swap: tmp file + atomic rename (same protocol as the
-    // reference's parsed.jsonl tmp→replace, parser.py:286,324)
-    val json = PyJson.obj(
+    // pointer swap: the snapshot is visible only once this commits
+    graft.util.AtomicFiles.commit(pointer.toString, PyJson.obj(
       "snapshot_id" -> id.toString,
-      "data_path" -> PyJson.str(rel))
-    val tmp = new Path(root, s"_current.json.tmp-$id")
-    val out = f.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // FileContext.rename(OVERWRITE) is the atomic replace (plain
-    // FileSystem.rename refuses existing targets; delete-then-rename
-    // would open a no-pointer window)
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new Path(root).toUri, spark.sessionState.newHadoopConf())
-    fc.rename(tmp, pointer, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      "data_path" -> PyJson.str(rel)), spark.sessionState.newHadoopConf())
     expireSnapshots(spark, retainSnapshots)
     Snapshot(id, dataDir)
   }
@@ -141,7 +118,8 @@ class SnapshotParquetTable(val root: String, retainSnapshots: Int = 2)
     toDelete.size
   }
 
-  override def read(spark: SparkSession): DataFrame =
+  /** Current snapshot's data as a DataFrame. */
+  def read(spark: SparkSession): DataFrame =
     currentSnapshot(spark) match {
       case Some(s) => spark.read.parquet(s.dataPath)
       case None => throw new java.util.NoSuchElementException(

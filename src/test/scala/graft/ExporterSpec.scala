@@ -2,12 +2,10 @@ package graft
 
 import java.time.ZoneId
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.export.{Exporter, LightFormatter, SizeExpr}
 import graft.export.Exporter.{ExportMsg, SplitConf}
-import graft.model.Schemas
 import graft.parse.ChatGptParser
 
 class ExporterSpec extends AnyFunSuite {
@@ -51,27 +49,6 @@ class ExporterSpec extends AnyFunSuite {
     assert(blockCounts === Seq.fill(14)(2) :+ 22)
   }
 
-  test("split preview (E14): no-write estimate equals actual packing") {
-    import spark.implicits._
-    val msgs = (0 until 50).map(msg)
-    val df = spark.createDataset(msgs).toDF()
-    for (spec <- Seq("count=10", "size=1K", "auto")) {
-      val conf = SplitConf.parse(spec)
-      val want = Exporter.renderThread("c50", msgs, ZoneId.of("UTC"),
-        "light", conf, "PINNED").length
-      val got = Exporter.previewThreads(df, "UTC", "light", conf,
-        "PINNED").collect()
-      assert(got.length === 1)
-      assert(got.head.n_parts === want, s"spec=$spec")
-      assert(got.head.n_messages === 50)
-      assert(got.head.total_bytes > 0L)
-    }
-    // no-split preview: one part, est 1
-    val noSplit = Exporter.previewThreads(df, "UTC", "light",
-      SplitConf.none, "PINNED").collect().head
-    assert(noSplit.n_parts === 1 && noSplit.est_parts_by_size === 1)
-  }
-
   test("sanitize filename: long-extension clamp mirrors Python slicing") {
     // extension longer than maxLen-3: Python root[:negative] degrades
     // gracefully instead of throwing
@@ -105,20 +82,6 @@ class ExporterSpec extends AnyFunSuite {
     // unclosed fence with trailing blanks: blanks are INSIDE code,
     // kept; then fence closed
     assert(LightFormatter.render("```\ncode\n\n\n") === "```\ncode\n\n\n```")
-  }
-
-  test("render_light_md codegen expression equals the Scala function") {
-    import spark.implicits._
-    graft.functions.RenderLightMarkdown.register(spark)
-    val texts = Seq("a\n\n\n\nb", "```\nx", "plain", "", "x\n\n```js\ncode\n\n\nmore\n```\n\n\ny")
-    val df = texts.toDF("t")
-    val got = df.select(call_function("render_light_md", col("t")))
-      .as[String].collect()
-    assert(got.toSeq === texts.map(LightFormatter.render))
-    // proof it's codegen not fallback: plan contains the expression
-    val plan = df.select(call_function("render_light_md", col("t")))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("render_light_md"))
   }
 
   test("iso / local formatting matches Python reference output") {

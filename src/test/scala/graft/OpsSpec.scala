@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{CorpusStats, Dedup, Hyperplanes, Multimodal, Similarity,
-  TextAnalysis}
+import graft.ops.{CorpusStats, Dedup, Hyperplanes, Similarity, TextAnalysis}
 import graft.streaming.StreamingPipeline
 
 /** Semantics tests for the training-data operators (cross-engine
@@ -603,96 +602,6 @@ class OpsSpec extends AnyFunSuite {
     assert(res.forall(r => r.getInt(2) >= 1 && r.getInt(2) <= 5))
   }
 
-  test("multimodal: batched decode + features + frame sampling") {
-    val media = Multimodal.syntheticMedia(docs)
-    val meta = Multimodal.decodeMeta(media, batchSize = 64)
-    assert(meta.count() === docs.count())
-    val m = meta.filter(col("kind") === "image").head()
-    assert(m.duration_ms === 0L) // images have no duration
-    // determinism
-    val f1 = Multimodal.extractFeatures(media, dim = 8).collect()
-      .map(r => r.media_id -> r.feature.toSeq).toMap
-    val f2 = Multimodal.extractFeatures(media, dim = 8).collect()
-      .map(r => r.media_id -> r.feature.toSeq).toMap
-    assert(f1 === f2)
-    assert(f1.values.forall(_.size == 8))
-    val frames = Multimodal.frameSamplePlan(meta, everyMs = 1000, maxFrames = 4)
-    assert(frames.groupBy("media_id").count().agg(max("count")).head()
-      .getLong(0) <= 4)
-  }
-
-  test("multimodal Codec.ExternalProcess: stub decoder proves the ffmpeg seam") {
-    import spark.implicits._
-    // stand-in for ffmpeg/ffprobe: a subprocess speaking the
-    // ExternalProcess batch protocol — computes deterministic "video
-    // features" (per-cell byte sums) and fixed meta, ERRs on blobs
-    // containing CORRUPT, and logs one marker line per invocation so
-    // the per-BATCH amortization contract is assertable
-    val dir = java.nio.file.Files.createTempDirectory("graft-codec")
-    val stub = dir.resolve("stub_codec.py")
-    val invLog = dir.resolve("invocations.log")
-    java.nio.file.Files.writeString(stub,
-      s"""import sys, base64
-         |with open(${"\"" + invLog + "\""}, "a") as lg: lg.write("x\\n")
-         |mode = sys.argv[1]
-         |dim = int(sys.argv[2]) if len(sys.argv) > 2 else 0
-         |n = int(sys.stdin.readline())
-         |for _ in range(n):
-         |    hdr = sys.stdin.readline().split()
-         |    data = base64.b64decode(sys.stdin.readline().strip())
-         |    if b"CORRUPT" in data:
-         |        print("ERR"); continue
-         |    if mode == "meta":
-         |        print(f"640 480 {len(data) * 10}")
-         |    else:
-         |        cells = [sum(data[i::dim]) % 256 for i in range(dim)]
-         |        print("OK " + ",".join(f"{c / 255.0:.6f}" for c in cells))
-         |""".stripMargin)
-    val codec = Multimodal.Codec.ExternalProcess(
-      Seq("python3", stub.toString))
-    val recs = (0 until 5).map(i => Multimodal.MediaRecord(
-      i.toLong, "video",
-      (if (i == 3) s"CORRUPT-blob-$i" else s"fake-mp4-bytes-$i")
-        .getBytes("UTF-8"),
-      "video/mp4"))
-    val media = recs.toDS().repartition(1)
-    // VIDEO features arrive measured=true through the same
-    // MediaFeature contract — the gap Codec.Real documents
-    val feats = Multimodal.extractFeatures(media, dim = 4,
-        codec = codec, batchSize = 2)
-      .collect().map(f => f.media_id -> f).toMap
-    assert(feats.size === 5)
-    recs.filter(_.media_id != 3L).foreach { r =>
-      val f = feats(r.media_id)
-      assert(f.measured, s"video feature ${r.media_id} not measured")
-      val dim = 4
-      val expected = (0 until dim).map(i =>
-        "%.6f".format((r.content.indices.filter(_ % dim == i)
-          .map(j => r.content(j) & 0xff).sum % 256) / 255.0).toFloat)
-      assert(f.feature.toSeq === expected, s"media ${r.media_id}")
-    }
-    // record-level error isolation: the CORRUPT row falls back to the
-    // flagged Fake vector, its batch-mates unaffected
-    assert(!feats(3L).measured)
-    // per-batch invocation: 5 records at batchSize=2 in 1 partition =
-    // 3 feature spawns (+ more below for meta; count them separately)
-    val featSpawns = java.nio.file.Files.readAllLines(invLog).size
-    assert(featSpawns === 3, s"expected 3 per-batch spawns, $featSpawns")
-    val meta = Multimodal.decodeMeta(media, codec = codec,
-        batchSize = 64)
-      .collect().map(m => m.media_id -> m).toMap
-    assert(meta(0L).width === 640 && meta(0L).height === 480 &&
-      meta(0L).duration_ms === recs(0).content.length * 10L)
-    assert(meta(3L).width === -1 && meta(3L).duration_ms === -1L)
-    // process-level failure: unspawnable command → whole batch falls
-    // back flagged, never task-fatal
-    val dead = Multimodal.Codec.ExternalProcess(
-      Seq("/nonexistent-decoder-binary"))
-    val fb = Multimodal.extractFeatures(media, dim = 4, codec = dead)
-      .collect()
-    assert(fb.length === 5 && fb.forall(!_.measured))
-  }
-
   test("streaming: windowed counts equal the batch aggregation") {
     // file streaming source needs a directory: stage the events file
     val dir = java.nio.file.Files.createTempDirectory("graft-stream")
@@ -823,100 +732,6 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
       .toMap
     assert(s === b)
-  }
-
-  test("multimodal Codec.Real: PNG meta + grid features, WAV duration, corrupt isolation") {
-    import spark.implicits._
-    import graft.ops.Multimodal.{Codec, MediaRecord}
-    // 64×32 PNG, left half black / right half white
-    val img = new java.awt.image.BufferedImage(64, 32,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until 32; x <- 0 until 64)
-      img.setRGB(x, y, if (x < 32) 0x000000 else 0xffffff)
-    val pngOut = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", pngOut)
-    val png = pngOut.toByteArray
-    // 0.5 s of silence, 8 kHz 16-bit mono WAV
-    val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(new Array[Byte](4000 * 2)),
-      fmt, 4000L)
-    val wavOut = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, wavOut)
-    // minimal valid MP4: ftyp + moov{mvhd v0 (timescale 1000,
-    // duration 7500) + trak{tkhd v0 (640×360 as 16.16 fixed)}}
-    def box(tpe: String, payload: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(payload.length + 8)
-      bb.putInt(payload.length + 8).put(tpe.getBytes("ISO-8859-1"))
-        .put(payload)
-      bb.array()
-    }
-    val mvhd = java.nio.ByteBuffer.allocate(100)
-    mvhd.putInt(0).putInt(0).putInt(0).putInt(1000).putInt(7500)
-    val tkhd = java.nio.ByteBuffer.allocate(84)
-    tkhd.position(76)
-    tkhd.putInt(640 << 16).putInt(360 << 16)
-    val mp4 = box("ftyp", "isom0000".getBytes("ISO-8859-1")) ++
-      box("moov", box("mvhd", mvhd.array()) ++
-        box("trak", box("tkhd", tkhd.array())))
-    val media = Seq(
-      MediaRecord(1L, "image", png, "image/png"),
-      MediaRecord(2L, "audio", wavOut.toByteArray, "audio/wav"),
-      MediaRecord(3L, "image", "notanimage".getBytes, "image/png"),
-      MediaRecord(4L, "video", mp4, "video/mp4"),
-      MediaRecord(5L, "video", "notavideo".getBytes, "video/mp4"))
-      .toDS()
-    val meta = graft.ops.Multimodal.decodeMeta(media, codec = Codec.Real)
-      .collect().map(m => m.media_id -> m).toMap
-    assert(meta(1L).width === 64 && meta(1L).height === 32)
-    assert(meta(2L).duration_ms === 500L)
-    assert(meta(3L).width === -1 && meta(3L).height === -1) // isolated, not fatal
-    // MP4 container metadata is MEASURED (box walk), not fabricated
-    assert(meta(4L).width === 640 && meta(4L).height === 360 &&
-      meta(4L).duration_ms === 7500L)
-    // an unreadable video gets -1 sentinels — Fake's plausible-looking
-    // hash dims must never masquerade as measurements
-    assert(meta(5L).width === -1 && meta(5L).height === -1 &&
-      meta(5L).duration_ms === -1L)
-    val featRows = graft.ops.Multimodal.extractFeatures(
-      media, dim = 4, codec = Codec.Real).collect()
-    val feats = featRows.map(f => f.media_id -> f.feature).toMap
-    // 2×2 luminance grid: black cells → -1, white cells → +1
-    assert(feats(1L).zip(Array(-1f, 1f, -1f, 1f))
-      .forall { case (a, b) => math.abs(a - b) < 1e-3 })
-    // undecodable image falls back to the deterministic Fake features
-    assert(feats(3L).toSeq ===
-      Codec.Fake.extractFeatures(
-        Seq(MediaRecord(3L, "image", "notanimage".getBytes, "image/png")), 4)
-        .head.feature.toSeq)
-    // decoded image AND decoded audio are measurements; every
-    // fallback (undecodable image, video pixels) is flagged
-    val measured = featRows.map(f => f.media_id -> f.measured).toMap
-    assert(measured === Map(1L -> true, 2L -> true, 3L -> false,
-      4L -> false, 5L -> false))
-    // the audio fixture is pure silence: a REAL grid-RMS envelope is
-    // exactly zero everywhere (Fake's hash features never are)
-    assert(feats(2L).forall(_ === 0.0f))
-    // non-silent PCM: half silence, half constant amplitude 0.5 —
-    // the envelope must localize the energy in the right time cells
-    val loud = new Array[Byte](4000 * 2)
-    var i = 2000 * 2
-    while (i < loud.length) { // little-endian 16384 = 0.5 full scale
-      loud(i) = 0x00; loud(i + 1) = 0x40; i += 2
-    }
-    val ais2 = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(loud), fmt, 4000L)
-    val wav2 = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais2,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, wav2)
-    val env = graft.ops.Multimodal.extractFeatures(
-      Seq(MediaRecord(6L, "audio", wav2.toByteArray, "audio/wav")).toDS(),
-      dim = 4, codec = Codec.Real).collect().head
-    assert(env.measured)
-    assert(env.feature.zip(Array(0f, 0f, 0.5f, 0.5f))
-      .forall { case (a, b) => math.abs(a - b) < 1e-3 },
-      s"grid-RMS envelope off: ${env.feature.toSeq}")
   }
 
   test("approx profile (q44): HLL distinct estimates within tolerance, exact otherwise") {

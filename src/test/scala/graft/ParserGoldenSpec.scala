@@ -95,7 +95,7 @@ class ParserGoldenSpec extends AnyFunSuite {
         |{"conversation_id": "c2", "mapping": {}}
         |""".stripMargin)
     val raw = ChatGptParser.readRawJsonl(spark, tmp.toString)
-    assert(ChatGptParser.corruptRows(raw).head().getLong(0) === 1L)
+    assert(raw.select(ChatGptParser.corruptLines).head().getLong(0) === 1L)
     val msgs = ChatGptParser.normalize(raw)
     assert(msgs.count() === 1L)
     assert(msgs.head().getAs[Long]("ts") === 1500L)
