@@ -70,6 +70,12 @@ object Main {
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
+      // observed metrics are read from the FINAL adaptive plan, and this
+      // rule swaps a stage that produced no rows for an EmptyRelation,
+      // dropping the CollectMetrics it executed (an all-corrupt input
+      // then reported 0 corrupt lines)
+      .config("spark.sql.adaptive.optimizer.excludedRules",
+        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
       .config("spark.sql.session.timeZone", "UTC")
     // under spark-submit the master comes from the launcher; standalone
     // (sbt runMain / tests) falls back to local
@@ -164,14 +170,24 @@ object Main {
     val indexRoot = s"$providerDir/thread_index"
 
     // ONE pass over the raw JSON for the parse → routed snapshot write
-    // itself. Every downstream stage (stats, index, JSONL, lineage,
-    // summary) reads the COLUMNAR routed table back instead of
+    // itself. Every downstream stage reads the COLUMNAR routed table
+    // back, with its known schema (no inference job), instead of
     // re-parsing raw JSON or caching the whole corpus in executor
     // memory (a full-corpus .cache() at the 10^12-turn target is most
     // of the cluster's RAM; parquet re-reads are pruned and cheap). The
     // snapshot commit also means a crashed run leaves the previous
     // routed tree readable and a --resume can never truncate unchanged
     // threads (round-1 bug).
+    //
+    // Thread stats are aggregated ONCE, and that one pass is the
+    // thread-index write: on resume each row carries the previous
+    // index's count (left join), and `observe` on the write yields the
+    // run summary (threads, messages) and the resume skip count. The
+    // JSONL rewrite set is then derived from the small staged index,
+    // not from a second aggregation of the routed table. The index is
+    // STAGED (data written, pointer not swapped) and published only
+    // after the JSONL write, so a crash in between leaves the previous
+    // index current and the next --resume rewrites the same threads.
     //
     // Adaptive-salting hot detection is the one exception to the single
     // scan, and only on FIRST runs: a resumed run derives the hot set
@@ -191,49 +207,72 @@ object Main {
     val routedData = Router.writeRoutedSinks(msgs, providerDir,
       hotThreshold = hotThreshold, hotSet = hotSet)
     // `tool` itself is a regular column in the routed files; only
-    // (role, tool_sink) are partition directories
-    val routed = spark.read.parquet(routedData)
+    // (role, tool_sink) are partition directories. A run that kept no
+    // rows wrote no files, and reads back as an empty frame.
+    val routed = spark.read
+      .schema(msgs.schema.add("tool_sink", StringType))
+      .parquet(routedData)
+
     val stats = Aggregates.threadStats(routed)
+    val withPrev = prevIndex match {
+      case Some(prev) => stats.join(prev.select(col("conversation_id"),
+        col("count").as("prev_count")), Seq("conversation_id"), "left")
+      case None => stats.withColumn("prev_count", lit(null).cast(LongType))
+    }
+    // thread index: distributed snapshot table — ALL threads (fixes the
+    // reference bug of not re-indexing skipped ones, parser.py:271-274);
+    // the driver holds only the bounded per-partition lineage + pointer
+    val indexObs = new org.apache.spark.sql.Observation(
+      "index_metrics_" + java.util.UUID.randomUUID())
+    val index = new graft.table.SnapshotParquetTable(indexRoot)
+    val staged = index.stage(Lineage.threadEntries(withPrev.observe(indexObs,
+      count(lit(1)).as("threads"),
+      sum(col("count")).as("messages"),
+      count(when(col("prev_count") === col("count"), 1)).as("skipped")))
+      .toDF())
 
     // resume: conversations unchanged vs the previous thread index are
     // skipped for the per-thread JSONL rewrite only. No broadcast
     // hint — on a first resume after large drift `changed` is
     // corpus-sized; AQE picks broadcast when it is actually small.
-    val (toProcess, skipped) = prevIndex match {
+    val toProcess = prevIndex match {
       case Some(prev) =>
-        val changed = Lineage.changedThreads(stats, prev)
-          .select("conversation_id")
-        val n = stats.count() - changed.count()
-        (routed.join(changed, Seq("conversation_id")), n)
-      case None => (routed, 0L)
+        val current = spark.read.schema(Lineage.threadEntrySchema)
+          .parquet(staged.dataPath)
+        routed.join(Lineage.changedThreads(current, prev)
+          .select("conversation_id"), Seq("conversation_id"))
+      case None => routed
     }
-
     val typed = toProcess
       .select(Schemas.messageColumns.map(col): _*)
       .as[Schemas.Message]
     Router.writeThreadJsonl(typed, outdir, provider)
+    index.publish(spark, staged)
 
-    // thread index: distributed snapshot table — ALL threads (fixes the
-    // reference bug of not re-indexing skipped ones, parser.py:271-274);
-    // the driver holds only the bounded per-partition lineage + pointer
-    Lineage.writeThreadIndex(stats, indexRoot)
     val partitions = Lineage.capturePartitions(routed).collect().toSeq
-    val summary = Aggregates.runSummary(routed).head()
-    val corrupt = obs.get.getOrElse("corrupt_lines", 0L) match {
-      case n: Long => n
-      case _ => 0L
-    }
-    Lineage.writeManifest(manifestPath, provider, summary.getLong(0),
+    val threads = observed(indexObs, "threads")
+    val messages = observed(indexObs, "messages")
+    val skipped = observed(indexObs, "skipped")
+    val corrupt = observed(obs, "corrupt_lines")
+    Lineage.writeManifest(manifestPath, provider, threads,
       "thread_index", partitions, corruptLines = corrupt,
       hadoopConf = spark.sessionState.newHadoopConf())
 
-    println(s"""{"mode":"parse","threads":${summary.getLong(0)},""" +
-      s""""messages":${summary.getLong(1)},"skipped_threads":$skipped,""" +
+    println(s"""{"mode":"parse","threads":$threads,""" +
+      s""""messages":$messages,"skipped_threads":$skipped,""" +
       s""""corrupt_lines":$corrupt}""")
     // human summary on stderr, localized; stdout JSON stays stable
     System.err.println(I18n.msg("cli.parse.done",
-      "threads" -> summary.getLong(0), "messages" -> summary.getLong(1)))
+      "threads" -> threads, "messages" -> messages))
     Right(routed)
+  }
+
+  /** A Long metric of an observation whose action has run; 0 when it
+    * is null (a sum over no rows). */
+  private def observed(obs: org.apache.spark.sql.Observation,
+      name: String): Long = obs.get.get(name) match {
+    case Some(n: Long) => n
+    case _ => 0L
   }
 
   /** export: parsed JSONL tree → Markdown files (split-aware). */

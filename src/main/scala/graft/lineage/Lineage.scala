@@ -1,8 +1,9 @@
 package graft.lineage
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.util.PyJson
 
@@ -86,9 +87,14 @@ object Lineage {
     new graft.table.SnapshotParquetTable(tableRoot)
       .commit(threadEntries(threadStats).toDF())
 
+  /** The thread index's row schema: reads that pass it run no
+    * schema-inference job. */
+  val threadEntrySchema: StructType = Encoders.product[ThreadEntry].schema
+
   /** Previous run's thread index (resume anti-join side). */
   def readThreadIndex(spark: SparkSession, tableRoot: String): DataFrame =
-    new graft.table.SnapshotParquetTable(tableRoot).read(spark)
+    new graft.table.SnapshotParquetTable(tableRoot)
+      .read(spark, Some(threadEntrySchema))
 
   def threadIndexExists(spark: SparkSession, tableRoot: String): Boolean =
     new graft.table.SnapshotParquetTable(tableRoot)

@@ -36,14 +36,6 @@ object Schemas {
       parts: Seq[String],
       text: String)
 
-  /** Per-thread stats — manifest index entry
-    * (reference: parser.py:329-337). */
-  final case class ThreadStats(
-      conversation_id: String,
-      count: Long,
-      ts_min: Long,
-      ts_max: Long)
-
   // ---------------------------------------------------------------------
   // Raw ChatGPT-export read schema (fixed contract; reference:
   // providers/openai/adapter.py:15-23 expected_top_keys and the fixture

@@ -3,6 +3,7 @@ package graft.table
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.util.PyJson
 
@@ -82,22 +83,34 @@ class SnapshotParquetTable(val root: String, retainSnapshots: Int = 2) {
   /** Write df as the table's next snapshot; atomic pointer swap on
     * success. Returns the committed snapshot. */
   def commit(df: DataFrame,
-      partitionBy: Seq[String] = Nil): Snapshot = {
-    val spark = df.sparkSession
-    val f = fs(spark)
-    val id = nextId(f)
-    val rel = f"snap-$id%05d"
-    val dataDir = s"$root/$rel"
+      partitionBy: Seq[String] = Nil): Snapshot =
+    publish(df.sparkSession, stage(df, partitionBy))
+
+  /** Write df as the next snapshot's data dir WITHOUT swapping the
+    * pointer: readers keep seeing the current snapshot until
+    * [[publish]]. Unpublished, the dir is an orphan like a crashed
+    * commit's (skipped by the next id, reaped by expiry). */
+  def stage(df: DataFrame, partitionBy: Seq[String] = Nil): Snapshot = {
+    val id = nextId(fs(df.sparkSession))
+    val dataDir = s"$root/${snapDir(id)}"
     val w = df.write.mode(SaveMode.ErrorIfExists)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(dataDir)
-    // pointer swap: the snapshot is visible only once this commits
-    graft.util.AtomicFiles.commit(pointer.toString, PyJson.obj(
-      "snapshot_id" -> id.toString,
-      "data_path" -> PyJson.str(rel)), spark.sessionState.newHadoopConf())
-    expireSnapshots(spark, retainSnapshots)
     Snapshot(id, dataDir)
   }
+
+  /** Make a staged snapshot current (atomic pointer swap), then expire
+    * old snapshot dirs. Returns `s`. */
+  def publish(spark: SparkSession, s: Snapshot): Snapshot = {
+    graft.util.AtomicFiles.commit(pointer.toString, PyJson.obj(
+      "snapshot_id" -> s.id.toString,
+      "data_path" -> PyJson.str(snapDir(s.id))),
+      spark.sessionState.newHadoopConf())
+    expireSnapshots(spark, retainSnapshots)
+    s
+  }
+
+  private def snapDir(id: Long): String = f"snap-$id%05d"
 
   /** Delete all but the newest `keep` snapshot data dirs (never the
     * pointer's current one — it is always among the newest since ids
@@ -118,10 +131,13 @@ class SnapshotParquetTable(val root: String, retainSnapshots: Int = 2) {
     toDelete.size
   }
 
-  /** Current snapshot's data as a DataFrame. */
-  def read(spark: SparkSession): DataFrame =
+  /** Current snapshot's data as a DataFrame. A known `schema` skips
+    * the footer-inference job a schemaless parquet read runs. */
+  def read(spark: SparkSession,
+      schema: Option[StructType] = None): DataFrame =
     currentSnapshot(spark) match {
-      case Some(s) => spark.read.parquet(s.dataPath)
+      case Some(s) => schema.fold(spark.read)(spark.read.schema)
+        .parquet(s.dataPath)
       case None => throw new java.util.NoSuchElementException(
         s"no committed snapshot under $root")
     }
@@ -143,7 +159,7 @@ class SnapshotParquetTable(val root: String, retainSnapshots: Int = 2) {
     * Iceberg's `VERSION AS OF`. Fails loud if the snapshot was expired
     * (same contract as Iceberg after expire_snapshots). */
   def readAt(spark: SparkSession, snapshotId: Long): DataFrame = {
-    val dataDir = new Path(root, f"snap-$snapshotId%05d")
+    val dataDir = new Path(root, snapDir(snapshotId))
     if (!fs(spark).exists(dataDir))
       throw new java.util.NoSuchElementException(
         s"snapshot $snapshotId expired or never committed under $root " +

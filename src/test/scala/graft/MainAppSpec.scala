@@ -243,6 +243,69 @@ class MainAppSpec extends AnyFunSuite {
     assert(manifest.contains("\"corrupt_lines\": 2"))
   }
 
+  test("parse of an empty or all-corrupt export: zero threads, exact corrupt count") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-empty-in")
+    Seq("empty.json" -> ("[]\n", 0),
+        // both lines open with '{', so the input sniffs as JSONL
+        "corrupt.jsonl" -> ("{broken json!!\n{\"truncated\": \n", 2))
+      .foreach { case (name, (content, corrupt)) =>
+        val in = dir.resolve(name)
+        java.nio.file.Files.writeString(in, content)
+        val out = s"$dir/out-$name"
+        val report = stdoutOf {
+          assert(Main.run(Array("parse", "--input", in.toString,
+            "--outdir", out)) === 0, name)
+        }
+        assert(report.contains(""""threads":0,"messages":0,"""), report)
+        assert(report.contains(s""""corrupt_lines":$corrupt}"""), report)
+        val manifest = java.nio.file.Files.readString(
+          java.nio.file.Paths.get(s"$out/openai/manifest.json"))
+        assert(manifest.contains("\"threads\": 0"), manifest)
+        assert(manifest.contains(s""""corrupt_lines": $corrupt,"""), manifest)
+      }
+  }
+
+  /** Spark jobs started by `body`, counted by a listener once the
+    * listener bus has drained. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    n.get
+  }
+
+  test("job counts: parse --resume and chain keep their folded passes") {
+    val (base, grown) = (rawCorpus(40), rawCorpus(42))
+    val out = java.nio.file.Files.createTempDirectory("graft-jobs")
+    assert(Main.run(Array("parse", "--input", base,
+      "--outdir", out.toString)) === 0)
+    val resume = jobsOf {
+      val report = stdoutOf {
+        assert(Main.run(Array("parse", "--input", grown,
+          "--outdir", out.toString, "--resume")) === 0)
+      }
+      assert(report.contains(""""skipped_threads":40,"""), report)
+    }
+    val chainOut = java.nio.file.Files.createTempDirectory("graft-jobs-chain")
+    val chain = jobsOf {
+      assert(Main.run(Array("chain", "--input", base,
+        "--outdir", chainOut.toString)) === 0)
+    }
+    // 11 each: a stray action (a `.count()`, a schemaless parquet read,
+    // a second stats aggregation) adds at least one job
+    assert((resume, chain) === ((11, 11)))
+  }
+
   test("readRawAuto sniffs containers through the Hadoop FS (file:// URI)") {
     import graft.parse.ChatGptParser
     // single-object multiline fixture via an explicit scheme — the

@@ -225,6 +225,85 @@ class PipelineSpec extends AnyFunSuite {
     assert(gone.getMessage.contains("retained: 2, 3"))
   }
 
+  test("snapshot table: a staged snapshot stays invisible until published") {
+    import spark.implicits._
+    val root = s"${java.nio.file.Files.createTempDirectory("graft-stage")}/idx"
+    val table = new graft.table.SnapshotParquetTable(root)
+    def entries(n: Int) = (1 to n).map(i =>
+      Lineage.ThreadEntry(s"c$i", i.toLong, 0L, 1L)).toDF()
+    // staged, never published (a crash before the pointer swap)
+    val orphan = table.stage(entries(1))
+    assert(java.nio.file.Files.isDirectory(
+      java.nio.file.Paths.get(orphan.dataPath)))
+    assert(!Lineage.threadIndexExists(spark, root))
+    intercept[java.util.NoSuchElementException](table.read(spark))
+    intercept[java.util.NoSuchElementException](
+      Lineage.readThreadIndex(spark, root))
+    // the next commit takes a fresh id, not the orphan's
+    val s1 = table.commit(entries(2))
+    assert(s1.id === orphan.id + 1)
+    assert(Lineage.readThreadIndex(spark, root).count() === 2L)
+    // a staged successor is invisible next to a published snapshot too
+    val s2 = table.stage(entries(3))
+    assert(Lineage.threadIndexExists(spark, root))
+    assert(table.currentSnapshot(spark) === Some(s1))
+    assert(Lineage.readThreadIndex(spark, root).count() === 2L)
+    assert(table.read(spark).count() === 2L)
+    // publish swaps the pointer; expiry (retain 2) reaps the orphan
+    assert(table.publish(spark, s2) === s2)
+    assert(Lineage.readThreadIndex(spark, root).count() === 3L)
+    assert(!java.nio.file.Files.exists(
+      java.nio.file.Paths.get(orphan.dataPath)))
+    assert(table.snapshots(spark).map(_.id) === Seq(s1.id, s2.id))
+  }
+
+  test("parse --resume after an unpublished index stage: same skips, same rewrites") {
+    import scala.jdk.CollectionConverters._
+    val work = java.nio.file.Files.createTempDirectory("graft-crash")
+    def raw(n: Int): String = {
+      val f = work.resolve(s"raw-$n.jsonl")
+      java.nio.file.Files.write(f, (TranscriptGen.renderRawJsonl(
+        TranscriptGen.synthesize(spark, n)).collect().mkString("\n") + "\n")
+        .getBytes("UTF-8"))
+      f.toString
+    }
+    val (base, grown) = (raw(20), raw(22))
+    /** parse `base`, optionally stage (never publish) `grown`'s index
+      * as a run that crashed before its pointer swap would, delete the
+      * JSONL tree, resume on `grown`: (stdout report, rewritten threads) */
+    def resume(out: String, crash: Boolean): (String, Set[String]) = {
+      assert(graft.app.Main.run(Array("parse", "--input", base,
+        "--outdir", out)) === 0)
+      if (crash) {
+        val ahead = s"$out-ahead"
+        assert(graft.app.Main.run(Array("parse", "--input", grown,
+          "--outdir", ahead)) === 0)
+        new graft.table.SnapshotParquetTable(s"$out/openai/thread_index")
+          .stage(Lineage.readThreadIndex(spark, s"$ahead/openai/thread_index"))
+      }
+      def jsonlThreads = java.nio.file.Files.list(java.nio.file.Paths.get(
+        s"$out/openai")).iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("thread-")).toSet
+      jsonlThreads.foreach { t =>
+        val d = java.nio.file.Paths.get(s"$out/openai/$t")
+        java.nio.file.Files.delete(d.resolve("parsed.jsonl"))
+        java.nio.file.Files.delete(d)
+      }
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+        assert(graft.app.Main.run(Array("parse", "--input", grown,
+          "--outdir", out, "--resume")) === 0)
+      }
+      (buf.toString("UTF-8"), jsonlThreads)
+    }
+    val (clean, cleanThreads) = resume(s"$work/clean", crash = false)
+    val (crashed, crashedThreads) = resume(s"$work/crashed", crash = true)
+    assert(clean.contains(""""skipped_threads":20,"""), clean)
+    assert(crashed.contains(""""skipped_threads":20,"""), crashed)
+    assert(cleanThreads.size === 2)
+    assert(crashedThreads === cleanThreads)
+  }
+
   test("exactly one turn_idx == 0 per surviving conversation (bench invariant)") {
     // Bench derives its pipeline thread count as Σ count(turn_idx == 0)
     // riding the routed grouped agg — this pins the invariant that
