@@ -8,7 +8,7 @@ import graft.agg.Aggregates
 import graft.export.Exporter
 import graft.lineage.Lineage
 import graft.model.Schemas
-import graft.parse.ChatGptParser
+import graft.parse.{ChatGptParser, FastTranscriptParser}
 import graft.route.Router
 
 /** spark-submit entry point: `parse | export | chain` job modes
@@ -63,25 +63,39 @@ object Main {
   private def flag(args: Array[String], name: String): Boolean =
     args.contains(s"--$name")
 
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors().toString)
+
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val b = SparkSession.builder()
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // observed metrics are read from the FINAL adaptive plan, and this
-      // rule swaps a stage that produced no rows for an EmptyRelation,
-      // dropping the CollectMetrics it executed (an all-corrupt input
-      // then reported 0 corrupt lines)
-      .config("spark.sql.adaptive.optimizer.excludedRules",
-        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
-      .config("spark.sql.session.timeZone", "UTC")
+    val b = SparkSession.builder().appName("graft")
     // under spark-submit the master comes from the launcher; standalone
     // (sbt runMain / tests) falls back to local
     val withMaster =
       if (sys.props.contains("spark.master")) b else b.master(s"local[$cpus]")
     withMaster.getOrCreate()
+  }
+
+  /** The SQL confs a run needs. `getOrCreate` may return a session an
+    * embedding application already runs (a benchmark, a test suite), so
+    * they are set for the run only and restored after it. */
+  private def runConfs: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.adaptive.enabled" -> "true",
+    // observed metrics are read from the FINAL adaptive plan, and this
+    // rule swaps a stage that produced no rows for an EmptyRelation,
+    // dropping the CollectMetrics it executed (an all-corrupt input
+    // then reported 0 corrupt lines)
+    "spark.sql.adaptive.optimizer.excludedRules" ->
+      "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
+    "spark.sql.session.timeZone" -> "UTC")
+
+  private def withRunConfs[T](spark: SparkSession)(body: => T): T = {
+    val before = spark.conf.getAll
+    runConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally runConfs.foreach { case (k, _) =>
+      before.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
   }
 
   def run(args: Array[String]): Int = {
@@ -94,7 +108,7 @@ object Main {
     }
     val spark = session()
     spark.sparkContext.setLogLevel("WARN")
-    args.head match {
+    withRunConfs(spark)(args.head match {
       case "parse" => parseMode(spark, args).fold(identity, _ => 0)
       case "export" => exportMode(spark, args)
       case "chain" =>
@@ -108,7 +122,7 @@ object Main {
       case other =>
         System.err.println(I18n.msg("cli.unknown_mode", "mode" -> other))
         2
-    }
+    })
   }
 
   /** Path existence through the Hadoop FS of the path's scheme (local
@@ -136,6 +150,9 @@ object Main {
       return Left(2)
     }
 
+    val hotThreshold = opt(args, "hot-threshold").map(_.toLong)
+      .getOrElse(10000L) // ~ the reference's own max-thread-size model
+
     // parse-failure counter rides the SAME scan via observe (an extra
     // counting pass would re-parse all the raw input); the metric
     // materializes with the routed write action below
@@ -143,10 +160,20 @@ object Main {
     // must not collide on the listener registration
     val obs = new org.apache.spark.sql.Observation(
       "parse_metrics_" + java.util.UUID.randomUUID())
-    val msgs = opt(args, "input-format").getOrElse("json") match {
+    // the message rows, and the name of their hot-conversation flag
+    // column when the parse yields one
+    val (msgs, hotColumn) = opt(args, "input-format").getOrElse("json") match {
+      case "json" if !ChatGptParser.sniffMultiline(spark, input) =>
+        // JSONL: the codegen scanner turns each line into one
+        // conversation row; its kept-turn count is on that row, so the
+        // hot flag is set before the explode
+        val conv = FastTranscriptParser.conversations(
+          FastTranscriptParser.readLines(spark, input), provider, Some(obs))
+          .withColumn("hot", size(col("messages")) >= hotThreshold)
+        (FastTranscriptParser.turns(conv).drop("turn_idx"), Some("hot"))
       case "json" =>
-        ChatGptParser.normalize(ChatGptParser.readRawAuto(spark, input)
-          .observe(obs, ChatGptParser.corruptLines), provider)
+        (ChatGptParser.normalize(ChatGptParser.readRawMultiline(spark, input)
+          .observe(obs, ChatGptParser.corruptLines), provider), None)
       case "text" =>
         // plain-text transcript logs (grok wire format): one document
         // per FILE, conv id = file stem; turns with malformed headers
@@ -160,7 +187,7 @@ object Main {
         val parsed = graft.parse.GrokParser.parse(docs).observe(obs,
           count(when(col("role").isNull || col("ts_ms").isNull, 1))
             .as("corrupt_lines"))
-        graft.parse.GrokParser.toMessages(parsed, provider)
+        (graft.parse.GrokParser.toMessages(parsed, provider), None)
       case other => throw new UsageError(
         I18n.msg("cli.parse.bad_format", "format" -> other))
     }
@@ -169,15 +196,24 @@ object Main {
     val manifestPath = s"$providerDir/manifest.json"
     val indexRoot = s"$providerDir/thread_index"
 
-    // ONE pass over the raw JSON for the parse → routed snapshot write
+    // ONE pass over the raw input for the parse → routed snapshot write
     // itself. Every downstream stage reads the COLUMNAR routed table
     // back, with its known schema (no inference job), instead of
-    // re-parsing raw JSON or caching the whole corpus in executor
+    // re-parsing raw input or caching the whole corpus in executor
     // memory (a full-corpus .cache() at the 10^12-turn target is most
     // of the cluster's RAM; parquet re-reads are pruned and cheap). The
     // snapshot commit also means a crashed run leaves the previous
     // routed tree readable and a --resume can never truncate unchanged
     // threads (round-1 bug).
+    //
+    // Adaptive salting of hot conversations rides the same pass on
+    // JSONL: the flag comes with the rows (see above), so no detection
+    // scan or join runs, first run or resume. Arrays, single objects
+    // and text have no conversation row: a resumed run takes their hot
+    // set from the previous thread index (a broadcast join), and a first
+    // run pays one counting scan of the input, column-pruned to
+    // conversation_id (set --hot-threshold 0 to trade that scan for
+    // hot-conversation write skew).
     //
     // Thread stats are aggregated ONCE, and that one pass is the
     // thread-index write: on resume each row carries the previous
@@ -188,29 +224,21 @@ object Main {
     // STAGED (data written, pointer not swapped) and published only
     // after the JSONL write, so a crash in between leaves the previous
     // index current and the next --resume rewrites the same threads.
-    //
-    // Adaptive-salting hot detection is the one exception to the single
-    // scan, and only on FIRST runs: a resumed run derives the hot set
-    // for free from the previous thread index (per-conversation counts
-    // already on disk), while a first run pays one extra counting scan
-    // of the input, column-pruned to conversation_id (turn counts don't
-    // exist anywhere before the first parse; set --hot-threshold 0 to
-    // trade that scan for hot-conversation write skew).
-    val hotThreshold = opt(args, "hot-threshold").map(_.toLong)
-      .getOrElse(10000L) // ~ the reference's own max-thread-size model
     val prevIndex =
       if (flag(args, "resume") && Lineage.threadIndexExists(spark, indexRoot))
         Some(Lineage.readThreadIndex(spark, indexRoot))
       else None
-    val hotSet = prevIndex.map(_.filter(col("count") >= hotThreshold)
-      .select("conversation_id"))
+    val hotSet = if (hotColumn.isDefined) None
+      else prevIndex.map(_.filter(col("count") >= hotThreshold)
+        .select("conversation_id"))
     val routedData = Router.writeRoutedSinks(msgs, providerDir,
-      hotThreshold = hotThreshold, hotSet = hotSet)
+      hotThreshold = hotThreshold, hotSet = hotSet, hotColumn = hotColumn)
     // `tool` itself is a regular column in the routed files; only
     // (role, tool_sink) are partition directories. A run that kept no
     // rows wrote no files, and reads back as an empty frame.
     val routed = spark.read
-      .schema(msgs.schema.add("tool_sink", StringType))
+      .schema(msgs.select(Schemas.messageColumns.map(col): _*).schema
+        .add("tool_sink", StringType))
       .parquet(routedData)
 
     val stats = Aggregates.threadStats(routed)

@@ -28,8 +28,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Known micro-divergences from CPython (documented, unreachable for
   * well-formed exports): numeric `role` / numeric message `id` are
-  * treated as absent rather than stringified; duplicate JSON keys take
-  * the first occurrence (CPython dict takes the last).
+  * treated as absent rather than stringified; a duplicate JSON key
+  * whose later value is null (or not of the kept type) leaves the
+  * earlier value in place, where CPython's dict and Spark's JSON reader
+  * take the last; a JSON array on a line is rejected (counted corrupt),
+  * where Spark's JSON reader reads its elements as records.
   */
 case class ExtractConversation(child: Expression)
     extends UnaryExpression {

@@ -31,6 +31,14 @@ import graft.model.Schemas
   * The BFS linearization (adapter.py:100-141) is deliberately NOT on
   * this path: the adapter's final sort by (ts, message_id) makes BFS
   * order unobservable in normalized output (see SURVEY.md §2 A5).
+  *
+  * Which container takes which path: `Main` parses JSONL (a file or a
+  * directory of them) through [[FastTranscriptParser]]; array (`[`) and
+  * pretty-printed single-object containers come here, through the
+  * multiLine reader, which streams an array's elements (a whole-file
+  * string for the scanner would put a multi-GB export in one row).
+  * `normalize` over [[readRawJsonl]] stays the reference implementation
+  * the fast path is checked against (FastPathSpec, MainAppSpec).
   */
 object ChatGptParser {
 
@@ -59,15 +67,18 @@ object ChatGptParser {
       .option("multiLine", value = true)
       .json(path)
 
-  /** Container sniffing by first non-whitespace char (reference:
-    * parser.py:56-76): '[' or a single '{' spanning lines → multiLine;
-    * otherwise JSONL. Reads a few bytes on the driver only, through the
-    * Hadoop FileSystem of the path's scheme — java.nio only ever worked
-    * for local files and silently broke hdfs:/s3a: inputs. A directory
-    * input (the scale shape: a dir of JSONL part files) sniffs its
-    * first contained data file.
+  /** Container sniffing (reference: parser.py:56-76): true for a JSON
+    * array (`[` first) or a pretty-printed single object (the first
+    * non-blank line, trimmed, is exactly `{`, as `json.dump(indent=…)`
+    * writes it), read by the multiLine reader; false for JSONL, one
+    * document per line, a one-line object file included. Reads a few
+    * bytes on the driver only, through the Hadoop FileSystem of the
+    * path's scheme — java.nio only ever worked for local files and
+    * silently broke hdfs:/s3a: inputs. A directory input (the scale
+    * shape: a dir of JSONL part files) sniffs its first contained data
+    * file.
     */
-  def readRawAuto(spark: SparkSession, path: String): DataFrame = {
+  def sniffMultiline(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val target =
@@ -94,12 +105,15 @@ object ChatGptParser {
         new String(buf, 0, n, java.nio.charset.StandardCharsets.UTF_8)
       } finally in.close()
     }
-    val trimmed = head.replace("﻿", "").dropWhile(_.isWhitespace)
-    val multi = trimmed.headOption.contains('[') ||
-      (trimmed.headOption.contains('{') && head.linesIterator.size > 1 &&
-        !head.linesIterator.drop(1).exists(_.trim.startsWith("{")))
-    if (multi) readRawMultiline(spark, path) else readRawJsonl(spark, path)
+    head.replace("\uFEFF", "").linesIterator.map(_.trim).find(_.nonEmpty)
+      .exists(first => first.startsWith("[") || first == "{")
   }
+
+  /** The raw conversations of `path`, read by the container's reader
+    * (see [[sniffMultiline]]). */
+  def readRawAuto(spark: SparkSession, path: String): DataFrame =
+    if (sniffMultiline(spark, path)) readRawMultiline(spark, path)
+    else readRawJsonl(spark, path)
 
   private def nonEmpty(c: Column): Column = when(c.isNotNull && c =!= "", c)
 

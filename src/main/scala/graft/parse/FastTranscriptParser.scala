@@ -1,6 +1,6 @@
 package graft.parse
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Fast-path parse stage: raw export JSONL → ordered normalized turns
@@ -9,49 +9,89 @@ import org.apache.spark.sql.functions._
   * inside the expression (a conversation is one input row), so
   * `turn_idx` falls out of posexplode instead of a window exchange.
   *
+  * This is the product's parse path for line-delimited JSON: `Main`
+  * (a JSONL file or a directory of them, as sniffed by
+  * [[ChatGptParser.sniffMultiline]]), `SparkEntry` and the streaming
+  * pipeline. Array (`[`) and pretty-printed single-object containers
+  * stay on [[ChatGptParser.normalize]] over the multiLine reader.
+  *
   * Semantics are identical to ChatGptParser.normalize +
-  * TurnOrdering.withTurnIdx for JSONL containers (asserted by
-  * FastPathSpec on fixtures and the synthesized corpus); the generic
-  * Catalyst path stays for multiLine/array containers and as the
-  * reference implementation.
+  * TurnOrdering.withTurnIdx on JSONL (asserted by FastPathSpec on
+  * fixtures and the synthesized corpus, and through `Main` by
+  * MainAppSpec's hostile-input test, which also pins the documented
+  * divergences).
   */
 object FastTranscriptParser {
+
+  /** The lines of a JSONL file or directory, with `_file` for the
+    * conversation-id filename-stem fallback. */
+  def readLines(spark: SparkSession, path: String): DataFrame =
+    spark.read.text(path)
+      .select(col("value").as("line"), input_file_name().as("_file"))
 
   /** Columns: Schemas.messageColumns + turn_idx. */
   def parse(
       spark: SparkSession,
       path: String,
       provider: String = "openai"): DataFrame =
-    parseLines(
-      spark.read.textFile(path).toDF("line")
-        .withColumn("_file", input_file_name()),
-      provider)
+    parseLines(readLines(spark, path), provider)
 
   /** Same over an in-memory line column (no file source); `_file` is
     * optional (conversation-id filename-stem fallback). */
-  def parseLines(lines: DataFrame, provider: String = "openai"): DataFrame = {
+  def parseLines(lines: DataFrame, provider: String = "openai"): DataFrame =
+    turns(conversations(lines, provider))
+
+  /** One row per parseable line: `(provider_id, conversation_id,
+    * messages)`, the messages already in (ts, message_id) order, so a
+    * conversation's kept-turn count is `size(messages)`.
+    *
+    * With `obs`, the same scan observes `corrupt_lines`: the lines the
+    * scanner rejects, blank and whitespace-only lines excluded (Spark's
+    * JSON reader skips those too, and the reference's JSONL reader never
+    * sees them as records). */
+  def conversations(
+      lines: DataFrame,
+      provider: String = "openai",
+      obs: Option[Observation] = None): DataFrame = {
     val withFile =
       if (lines.columns.contains("_file")) lines
       else lines.withColumn("_file", lit(null).cast("string"))
-    val conv = withFile
-      .select(col("_file"),
-        graft.functions.extract_conversation(col("line")).as("c"))
-      .filter(col("c").isNotNull)
+    val scanned = withFile.select(col("line"), col("_file"),
+      graft.functions.extract_conversation(col("line")).as("c"))
+    // the observation sits between the scan and the null filter, so the
+    // filter cannot be pushed below it and re-run the scanner
+    val counted = obs.fold(scanned)(scanned.observe(_, corruptLines))
     val stem = {
       val base = regexp_extract(col("_file"), "([^/]+)/?$", 1)
       val s = regexp_replace(base, "\\.[^.]*$", "")
       when(s =!= "", s)
     }
-    conv
+    counted
+      .filter(col("c").isNotNull)
       .select(
         lit(provider).as("provider_id"),
         coalesce(col("c.conversation_id"), stem, lit("unknown"))
           .as("conversation_id"),
-        posexplode(col("c.messages")).as(Seq("turn_idx", "m")))
-      .select(
-        col("provider_id"), col("conversation_id"),
-        col("m.message_id"), col("m.parent_id"), col("m.role"),
-        col("m.tool"), col("m.ts"), col("m.content_type"),
-        col("m.parts"), col("m.text"), col("turn_idx"))
+        col("c.messages").as("messages"))
+  }
+
+  private def corruptLines: Column =
+    count(when(col("c").isNull && !col("line").rlike("^\\s*$"), 1))
+      .as("corrupt_lines")
+
+  /** One row per turn of `conv` (rows shaped like [[conversations]]):
+    * Schemas.messageColumns + turn_idx, then any other columns of `conv`
+    * carried onto each of its turns. */
+  def turns(conv: DataFrame): DataFrame = {
+    val carried = conv.columns.toSeq
+      .filterNot(Set("provider_id", "conversation_id", "messages"))
+      .map(col)
+    val fields = graft.functions.ExtractConversation.messageType.fieldNames
+      .toSeq.map(f => col(s"m.$f"))
+    conv
+      .select(Seq(col("provider_id"), col("conversation_id")) ++ carried :+
+        posexplode(col("messages")).as(Seq("turn_idx", "m")): _*)
+      .select(Seq(col("provider_id"), col("conversation_id")) ++ fields ++
+        (col("turn_idx") +: carried): _*)
   }
 }

@@ -38,40 +38,55 @@ object Router {
     * broadcast — by definition it is small (count ≥ threshold caps its
     * size at totalRows / threshold).
     *
-    * Where the hot set comes from matters for scan count: pass
-    * `hotSet` (a conversation_id DataFrame from cheap prior knowledge —
-    * the previous run's thread index on resume) and detection costs
-    * nothing; without it, detection is a `groupBy(conv).count` OVER THE
-    * INPUT, i.e. one extra counting scan of the un-materialized parse
-    * plan (first runs only, column-pruned to conversation_id — see the
-    * parseMode comment).
+    * Where the hot flag comes from matters for scan count, in order of
+    * preference:
+    *  - `hotColumn`: a boolean column of `msgs` already flagging the
+    *    rows of hot conversations. `Main` computes it on the
+    *    conversation row before the explode (`size(messages) >=
+    *    threshold`), so it costs no scan and no join; the threshold then
+    *    plays no part here. The column is dropped from the result.
+    *  - `hotSet`: a conversation_id DataFrame from cheap prior knowledge
+    *    (a previous run's thread index), broadcast-joined.
+    *  - neither: detection is a `groupBy(conv).count` OVER THE INPUT,
+    *    i.e. one extra counting scan of the un-materialized parse plan.
+    *    `Main` still takes this branch for array, single-object and text
+    *    inputs on a first run.
     */
   def saltedForRouting(
       msgs: DataFrame,
       saltBuckets: Int,
       hotThreshold: Long = 0L,
-      hotSet: Option[DataFrame] = None): DataFrame = {
+      hotSet: Option[DataFrame] = None,
+      hotColumn: Option[String] = None): DataFrame = {
     val withSink =
       msgs.withColumn("tool_sink", coalesce(col("tool"), lit("none")))
-    if (saltBuckets <= 0) withSink
-    else if (hotThreshold <= 0L)
-      withSink.withColumn("__salt",
-        pmod(xxhash64(col("message_id")), lit(saltBuckets)))
-    else {
-      val hot = hotSet
-        .map(_.select(col("conversation_id"), lit(true).as("__hot")))
-        .getOrElse(msgs.groupBy(col("conversation_id"))
-          .agg(count(lit(1)).as("__cnt"))
-          .filter(col("__cnt") >= hotThreshold)
-          .select(col("conversation_id"), lit(true).as("__hot")))
-      withSink.join(broadcast(hot), Seq("conversation_id"), "left")
-        .withColumn("__salt",
-          when(col("__hot"),
-            pmod(xxhash64(col("message_id")), lit(saltBuckets)))
-            .otherwise(pmod(xxhash64(col("conversation_id")),
-              lit(saltBuckets))))
-        .drop("__hot")
-    }
+    val salted =
+      if (saltBuckets <= 0) withSink
+      else if (hotColumn.isEmpty && hotThreshold <= 0L)
+        withSink.withColumn("__salt",
+          pmod(xxhash64(col("message_id")), lit(saltBuckets)))
+      else {
+        val (flagged, isHot) = hotColumn match {
+          case Some(c) => (withSink, col(c))
+          case None =>
+            val hot = hotSet
+              .map(_.select(col("conversation_id"), lit(true).as("__hot")))
+              .getOrElse(msgs.groupBy(col("conversation_id"))
+                .agg(count(lit(1)).as("__cnt"))
+                .filter(col("__cnt") >= hotThreshold)
+                .select(col("conversation_id"), lit(true).as("__hot")))
+            (withSink.join(broadcast(hot), Seq("conversation_id"), "left"),
+              col("__hot"))
+        }
+        flagged
+          .withColumn("__salt",
+            when(isHot,
+              pmod(xxhash64(col("message_id")), lit(saltBuckets)))
+              .otherwise(pmod(xxhash64(col("conversation_id")),
+                lit(saltBuckets))))
+          .drop("__hot")
+      }
+    hotColumn.fold(salted)(salted.drop)
   }
 
   /** Single partitioned parquet write fanning out all (role, tool)
@@ -86,8 +101,10 @@ object Router {
       outDir: String,
       saltBuckets: Int = 8,
       hotThreshold: Long = 0L,
-      hotSet: Option[DataFrame] = None): String = {
-    val salted = saltedForRouting(msgs, saltBuckets, hotThreshold, hotSet)
+      hotSet: Option[DataFrame] = None,
+      hotColumn: Option[String] = None): String = {
+    val salted =
+      saltedForRouting(msgs, saltBuckets, hotThreshold, hotSet, hotColumn)
     val distributed =
       if (salted.columns.contains("__salt"))
         salted.repartition(col("role"), col("tool_sink"), col("__salt"))

@@ -301,9 +301,203 @@ class MainAppSpec extends AnyFunSuite {
       assert(Main.run(Array("chain", "--input", base,
         "--outdir", chainOut.toString)) === 0)
     }
-    // 11 each: a stray action (a `.count()`, a schemaless parquet read,
-    // a second stats aggregation) adds at least one job
-    assert((resume, chain) === ((11, 11)))
+    // resume 10, chain 9: a stray action (a `.count()`, a schemaless
+    // parquet read, a second stats aggregation, a hot-set detection scan
+    // or broadcast) adds at least one job
+    assert((resume, chain) === ((10, 9)))
+  }
+
+  test("container sniff: only an array or a lone `{` first line is multiLine") {
+    import graft.parse.ChatGptParser
+    val dir = java.nio.file.Files.createTempDirectory("graft-sniff-cases")
+    val compact = java.nio.file.Files.readString(java.nio.file.Paths.get(
+      TestSpark.resource("/fixtures/openai_sample.json"))).replace("\n", " ")
+    // both fixtures are pretty single objects (`json.dump(indent=…)`);
+    // the multi fixture's goldens are pinned by the chain test above
+    Seq("/fixtures/openai_sample.json", "/fixtures/openai_sample_multi.json")
+      .foreach(f => assert(ChatGptParser.sniffMultiline(spark,
+        TestSpark.resource(f)), f))
+    // name -> (content, multiLine, threads, corrupt lines)
+    Seq(
+      "junk.jsonl" -> ("{broken json!!\nnot json at all\n", false, 0, 2),
+      "good-then-junk.jsonl" ->
+        (compact + "\nnot json at all\n", false, 1, 1),
+      "array.json" -> ("[\n" + compact + "\n]\n", true, 1, 0),
+      "one-line.json" -> (compact + "\n", false, 1, 0))
+      .foreach { case (name, (content, multi, threads, corrupt)) =>
+        val in = dir.resolve(name)
+        java.nio.file.Files.writeString(in, content)
+        assert(ChatGptParser.sniffMultiline(spark, in.toString) === multi,
+          name)
+        val report = stdoutOf {
+          assert(Main.run(Array("parse", "--input", in.toString,
+            "--outdir", s"$dir/out-$name")) === 0, name)
+        }
+        assert(report.contains(s""""threads":$threads,"""), s"$name $report")
+        assert(report.contains(s""""corrupt_lines":$corrupt}"""),
+          s"$name $report")
+      }
+  }
+
+  test("JSONL parse equals normalize(readRawJsonl) on hostile lines") {
+    import org.apache.spark.sql.functions._
+    import graft.model.Schemas
+    import graft.parse.ChatGptParser
+    def node(id: String, role: String, ct: String, parts: String,
+        nodeCt: String = "null") =
+      s""""$id": {"id": "$id", "parent": null, "create_time": $nodeCt, """ +
+        s""""message": {"id": "$id", "author": {"role": $role}, """ +
+        s""""create_time": $ct, "content": {"content_type": "text", """ +
+        s""""parts": $parts}}}"""
+    def conv(cid: Option[String], nodes: String*) =
+      cid.fold("{")(c => s"""{"conversation_id": "$c", """) +
+        s""""mapping": {${nodes.mkString(", ")}}}"""
+    val lines = Seq(
+      // a BOM before the first line's object
+      "\uFEFF" + conv(Some("bom"), node("b1", "\"user\"", "1.5", "[\"hi\"]")),
+      "", "   \t ", // blank lines are skipped, not corrupt
+      // create_time 0.0 is falsy: node create_time, else the turn drops
+      conv(Some("zero"), node("z1", "\"user\"", "0.0", "[\"x\"]", "7.25"),
+        node("z2", "\"assistant\"", "0.0", "[\"y\"]")),
+      // pre-1970: ms truncate toward zero, like Python int()
+      conv(Some("pre1970"), node("p1", "\"user\"", "-1.5", "[\"old\"]"),
+        node("p2", "\"user\"", "-0.0005", "[\"o2\"]")),
+      conv(Some("nonstr"), node("n1", "\"user\"", "3.0",
+        """["a", 1, {"x": 1}, null, true, ["l"], "b"]""")),
+      // two id-less conversations: both take the file stem
+      conv(None, node("s1", "\"user\"", "4.0", "[\"stem a\"]")),
+      conv(None, node("s2", "\"assistant\"", "5.0", "[\"stem b\"]")),
+      "{broken json!!",
+      "not json at all",
+      "123",
+      conv(Some("trunc"), node("t1", "\"user\"", "9.0", "[\"t\"]"))
+        .dropRight(1),
+      // documented divergences, asserted below as their values
+      conv(Some("dupkey"), node("d1", "\"user\"", "1.0", "[\"d\"]"),
+        """"d2": {"message": {"id": "d2", "author": {"role": "user"}, """ +
+          """"create_time": 2.0, "create_time": null, """ +
+          """"content": {"parts": ["e"]}}}"""),
+      conv(Some("numrole"), """"r1": {"message": {"id": "r1", "role": """ +
+        """"user", "author": {"role": 123}, "create_time": 1.0, """ +
+        """"content": {"parts": ["r"]}}}"""),
+      "[" + conv(Some("arr"), node("a1", "\"user\"", "1.0", "[\"a\"]")) + "]")
+    val dir = java.nio.file.Files.createTempDirectory("graft-hostile")
+    val in = dir.resolve("hostile.jsonl")
+    java.nio.file.Files.writeString(in, lines.mkString("\n") + "\n")
+    val out = dir.resolve("out")
+    val report = stdoutOf {
+      assert(Main.run(Array("chain", "--input", in.toString,
+        "--outdir", out.toString)) === 0)
+    }
+    // the 4 unparseable lines and the array line; not the blank ones
+    assert(report.contains(""""corrupt_lines":5}"""), report)
+
+    val cols = Schemas.messageColumns.map(col)
+    val viaMain = new graft.table.SnapshotParquetTable(
+      out.resolve("openai/routed").toString).read(spark).select(cols: _*)
+    val raw = ChatGptParser.readRawJsonl(spark, in.toString)
+    // Spark's reader reads the array line's element as a record
+    assert(raw.select(ChatGptParser.corruptLines).head().getLong(0) === 4L)
+    val generic = ChatGptParser.normalize(raw).select(cols: _*)
+    val divergent = Seq("dupkey", "numrole", "arr")
+    val (m, g) = (viaMain.filter(!col("conversation_id").isin(divergent: _*)),
+      generic.filter(!col("conversation_id").isin(divergent: _*)))
+    assert(m.count() === 7L)
+    assert(m.exceptAll(g).count() === 0L, "rows only in Main's parse")
+    assert(g.exceptAll(m).count() === 0L, "rows only in normalize")
+
+    def tsOf(df: org.apache.spark.sql.DataFrame, cid: String) =
+      df.filter(col("conversation_id") === cid).orderBy("message_id")
+        .select("message_id", "ts").collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toSeq
+    assert(tsOf(viaMain, "zero") === Seq("z1" -> 7250L))
+    assert(tsOf(viaMain, "pre1970") === Seq("p1" -> -1500L, "p2" -> 0L))
+    assert(viaMain.filter(col("conversation_id") === "nonstr")
+      .select("text").head().getString(0) === "a\nb")
+    assert(tsOf(viaMain, "bom") === Seq("b1" -> 1500L))
+    // duplicate key with a later null: the scanner keeps the earlier
+    // value, Spark's reader (like CPython) the later one
+    assert(tsOf(viaMain, "dupkey") === Seq("d1" -> 1000L, "d2" -> 2000L))
+    assert(tsOf(generic, "dupkey") === Seq("d1" -> 1000L))
+    // numeric author.role: the scanner falls through to message.role,
+    // Spark's reader stringifies it
+    def roleOf(df: org.apache.spark.sql.DataFrame) =
+      df.filter(col("conversation_id") === "numrole").select("role")
+        .head().getString(0)
+    assert(roleOf(viaMain) === "user")
+    assert(roleOf(generic) === "123")
+    assert(viaMain.filter(col("conversation_id") === "arr").count() === 0L)
+    assert(generic.filter(col("conversation_id") === "arr").count() === 1L)
+
+    // the two id-less conversations share the stem id, and so one thread
+    // in parsed.jsonl and in the Markdown
+    val jsonl = java.nio.file.Files.readString(
+      out.resolve("openai/thread-hostile/parsed.jsonl"))
+    assert(jsonl.linesIterator.next().contains("\"message_count\": 2"), jsonl)
+    assert(jsonl.contains("stem a") && jsonl.contains("stem b"), jsonl)
+    val md = mdFiles(out)
+    assert(md.keySet.count(_.startsWith("thread-hostile")) === 1, md.keySet)
+    val hostileMd = new String(md("thread-hostile.md").toArray, "UTF-8")
+    assert(hostileMd.contains("stem a") && hostileMd.contains("stem b"))
+  }
+
+  test("hot conversation: salted from its row, no detection job") {
+    import org.apache.spark.sql.functions._
+    val in = rawCorpus(40) // conv 0 has 400 turns, the others far fewer
+    val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    // without coalescing, each non-empty shuffle partition of the
+    // routed write's (role, tool_sink, salt) exchange is one file per
+    // sink directory
+    spark.conf.set(coalesce, "false")
+    try {
+      def chainJobs(threshold: String) = {
+        val out = java.nio.file.Files.createTempDirectory("graft-hot")
+        val jobs = jobsOf {
+          assert(Main.run(Array("chain", "--input", in, "--outdir",
+            out.toString, "--hot-threshold", threshold)) === 0)
+        }
+        (jobs, out)
+      }
+      val (hotJobs, out) = chainJobs("100")
+      val files = new graft.table.SnapshotParquetTable(
+        out.resolve("openai/routed").toString).read(spark)
+        .select(col("conversation_id"), input_file_name().as("f"))
+        .groupBy("conversation_id")
+        .agg(countDistinct("f").as("files"), count(lit(1)).as("rows"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val sinks = new graft.table.SnapshotParquetTable(
+        out.resolve("openai/routed").toString).read(spark)
+        .groupBy("conversation_id")
+        .agg(countDistinct("role", "tool_sink").as("n"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val mega = "conv-000000000"
+      assert(files(mega) >= 4L, s"hot conversation in ${files(mega)} files")
+      // every other conversation: one file per sink it has rows in
+      files.filterNot(_._1 == mega).foreach { case (c, n) =>
+        assert(n === sinks(c), s"$c spread over $n files")
+      }
+      // the flag comes with the parsed rows: a run with no hot
+      // conversation, and one that salts every conversation (threshold
+      // 0 never ran detection), start the same number of jobs
+      assert(chainJobs("1000000")._1 === hotJobs)
+      assert(chainJobs("0")._1 === hotJobs)
+    } finally spark.conf.unset(coalesce)
+  }
+
+  test("Main.run leaves the embedding session's SQL confs as it found them") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.optimizer.excludedRules")
+    val shuffle = spark.conf.get(keys.head)
+    spark.conf.set(keys.head, "3") // not what Main sets
+    try {
+      val before = keys.map(spark.conf.getAll.get)
+      val out = java.nio.file.Files.createTempDirectory("graft-confs")
+      assert(Main.run(Array("parse", "--input",
+        TestSpark.resource("/fixtures/openai_sample_multi.json"),
+        "--outdir", out.toString)) === 0)
+      assert(keys.map(spark.conf.getAll.get) === before)
+      assert(before === Seq(Some("3"), None))
+    } finally spark.conf.set(keys.head, shuffle)
   }
 
   test("readRawAuto sniffs containers through the Hadoop FS (file:// URI)") {
