@@ -35,7 +35,10 @@ object Aggregates {
         min(col(ts)).as("ts_min"),
         max(col(ts)).as("ts_max"))
 
-  /** Run summary (reference: parser.py:360-363: threads, messages). */
+  /** Run summary (reference: parser.py:360-363: threads, messages).
+    * No product entry point calls this: perfbench's `TracedPipeline`
+    * compiles against it; remove it in the benchmark PR that realigns
+    * `TracedPipeline`. */
   def runSummary(msgs: DataFrame, conv: String = "conversation_id"): DataFrame =
     msgs.agg(
       countDistinct(col(conv)).as("threads"),

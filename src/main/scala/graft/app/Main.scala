@@ -180,9 +180,7 @@ object Main {
         // (null role/ts) are the text path's corrupt lines — counted on
         // the pre-filter frame, warn-skipped like the JSON path
         val docs = spark.read.option("wholetext", "true").text(input)
-          .select(
-            regexp_extract(input_file_name(),
-              "([^/]+?)(\\.[^./]*)?$", 1).as("conv_id"),
+          .select(ChatGptParser.fileStem(input_file_name()).as("conv_id"),
             col("value").as("raw"))
         val parsed = graft.parse.GrokParser.parse(docs).observe(obs,
           count(when(col("role").isNull || col("ts_ms").isNull, 1))

@@ -81,7 +81,10 @@ object Lineage {
     * The round-1 shape collected every ThreadEntry onto the driver to
     * inline them into manifest.json — a guaranteed driver OOM at the
     * 10^8-conversation target; the driver now touches only the
-    * constant-size pointer. Returns the committed snapshot. */
+    * constant-size pointer. Returns the committed snapshot.
+    * No product entry point calls this (`Main` stages and publishes the
+    * index itself): perfbench's `TracedPipeline` compiles against it;
+    * remove it in the benchmark PR that realigns `TracedPipeline`. */
   def writeThreadIndex(threadStats: DataFrame,
       tableRoot: String): graft.table.Snapshot =
     new graft.table.SnapshotParquetTable(tableRoot)

@@ -1171,38 +1171,16 @@ object CorpusStats {
     * guarantee) runs of ≥ w+k-1 tokens, flagging copied passages that
     * whole-document hashes miss. The q31 df-filter discipline applies:
     * fingerprints appearing in more than maxDf documents are
-    * boilerplate (shared headers, templates) whose pair explosion is
-    * quadratic — they are removed by anti-joining the BOUNDED hot set
-    * (AQE broadcasts it) before the self-join, capping per-fingerprint
-    * join fan-out at maxDf². The filtered fingerprint table is
-    * persisted because both self-join sides read it.
+    * boilerplate (shared headers, templates), and their posting lists
+    * are dropped before any pair is emitted
+    * ([[Dedup.postingListPairs]]), so no fingerprint yields more than
+    * C(maxDf, 2) pairs.
     */
   def winnowOverlapPairs(docs: DataFrame, k: Int = 4, w: Int = 5,
       maxDf: Long = 100, minShared: Long = 2): DataFrame = {
-    // ONE groupBy(fp) posting-list agg replaces the former
-    // hot-set anti-join + fp-keyed self equi-join (guide §2.4): the
-    // collect_list is bounded at maxDf ids by the SAME df cap that
-    // always bounded the self-join fan-out, pairs explode row-locally
-    // (≤ C(maxDf, 2) structs per fingerprint), and the fingerprint
-    // expression runs over the corpus once instead of twice. A
-    // boilerplate fingerprint's posting row is dropped by the size
-    // filter before any pair exists — the skew risk is structural,
-    // not AQE-mitigated.
-    val fps = winnowFingerprints(docs, k, w)
-    val posts = fps.groupBy("fp")
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .filter(size(col("ds")) <= maxDf)
-      .select(col("ds"))
-    posts
-      .select(array_sort(col("ds")).as("ds"))
-      .select(explode(expr(
-        """IF(size(ds) >= 2,
-          |  flatten(transform(sequence(1, size(ds) - 1),
-          |    i -> transform(slice(ds, i + 1, size(ds) - i),
-          |      y -> struct(element_at(ds, i) AS a, y AS b)))),
-          |  array())""".stripMargin)).as("p"))
-      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_shared"))
+    val (_, pairs) =
+      Dedup.postingListPairs(winnowFingerprints(docs, k, w), "fp", maxDf)
+    pairs.groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }
 

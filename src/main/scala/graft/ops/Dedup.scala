@@ -196,15 +196,35 @@ object Dedup {
     // (lifetime note: the cache backs the RETURNED lazy DataFrame, so
     // it cannot be released here; MEMORY_AND_DISK spills under
     // pressure)
-    val posts = persistOnce(
-      sh.groupBy("h").agg(collect_list(col("doc_id")).as("ds"))
-        .filter(size(col("ds")) <= maxDocFreq)
-        .select(col("ds")))
+    val (posts, pairs) = postingListPairs(sh, "h", maxDocFreq, persistOnce)
     val sizes = posts.select(explode(col("ds")).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
+    val inter = pairs.groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("n_inter"))
+    inter
+      .join(sizes.withColumnRenamed("doc_id", "doc_a")
+        .withColumnRenamed("n_sh", "n_a"), "doc_a")
+      .join(sizes.withColumnRenamed("doc_id", "doc_b")
+        .withColumnRenamed("n_sh", "n_b"), "doc_b")
+  }
+
+  /** Inverted-index pairs over `rows` (doc_id, `key`): ONE groupBy(key)
+    * collects each key's posting list of doc_ids, lists longer than
+    * maxDf are dropped (the df cap: a key in d docs yields C(d, 2)
+    * pairs), and each kept list explodes row-locally into its
+    * (doc_a < doc_b) pairs, one row per pair per shared key. Returns
+    * (the capped posting lists, column `ds`, after `keep`; the pairs).
+    * Pass `persistOnce` as `keep` when the lists are read twice. */
+  private[ops] def postingListPairs(rows: DataFrame, key: String,
+      maxDf: Long, keep: DataFrame => DataFrame = identity)
+      : (DataFrame, DataFrame) = {
+    val posts = keep(rows.groupBy(key)
+      .agg(collect_list(col("doc_id")).as("ds"))
+      .filter(size(col("ds")) <= maxDf)
+      .select(col("ds")))
     // sorted posting list → i<j pairs via slice: C(n,2) structs
     // allocated (the naive nested transform built n² then filtered)
-    val inter = posts
+    val pairs = posts
       .select(array_sort(col("ds")).as("ds"))
       .select(explode(expr(
         """IF(size(ds) >= 2,
@@ -213,13 +233,7 @@ object Dedup {
           |      y -> struct(element_at(ds, i) AS a, y AS b)))),
           |  array())""".stripMargin)).as("p"))
       .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.withColumnRenamed("doc_id", "doc_a")
-        .withColumnRenamed("n_sh", "n_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b")
-        .withColumnRenamed("n_sh", "n_b"), "doc_b")
+    (posts, pairs)
   }
 
   /** Wide MinHash signatures: one row per doc with numHashes minhash

@@ -116,9 +116,7 @@ object Temporal {
 
   /** Batch gap-based sessionization: group each key's events into
     * sessions separated by idle gaps > gapMs (a gap of EXACTLY gapMs
-    * continues the session — the same contract as the streaming
-    * [[graft.streaming.StreamingPipeline.sessionizeEventTime]], whose
-    * OpsSpec equality assertion runs against this).
+    * continues the session; pinned by OpsSpec "gap sessions").
     *
     * Shape: the classic lag → session-start flag → running sum →
     * aggregate, ONE shuffle on the key and two window passes over it

@@ -110,17 +110,31 @@ object ChatGptParser {
   }
 
   /** The raw conversations of `path`, read by the container's reader
-    * (see [[sniffMultiline]]). */
+    * (see [[sniffMultiline]]). No product entry point calls this
+    * (`Main` sniffs, then picks a reader itself): perfbench's
+    * `TracedPipeline` compiles against it; remove it in the benchmark PR
+    * that realigns `TracedPipeline`. */
   def readRawAuto(spark: SparkSession, path: String): DataFrame =
     if (sniffMultiline(spark, path)) readRawMultiline(spark, path)
     else readRawJsonl(spark, path)
 
   private def nonEmpty(c: Column): Column = when(c.isNotNull && c =!= "", c)
 
-  /** `Path(source).stem` equivalent over input_file_name(). */
-  private def fileStem: Column = {
-    val base = regexp_extract(input_file_name(), "([^/]+)/?$", 1)
-    nonEmpty(regexp_replace(base, "\\.[^.]*$", ""))
+  /** The reference's `Path(source).stem` (adapter.py:148-163) of a file
+    * URI as `input_file_name()` gives it; null for a null or empty one.
+    * That URI is URL-encoded (`my conv.jsonl` reads as
+    * `my%20conv.jsonl`), so the name is decoded, with `+` escaped first
+    * because `url_decode` reads it as a space. The suffix is the last
+    * `.`-part after a non-empty root, as pathlib splits it (`.bashrc`
+    * and `foo.` keep their whole names), so a non-empty name has a
+    * non-empty stem: only the cheap base-name split sits under the
+    * empty check, and the decode and the regex run once per row (a
+    * `nullif` over the stem is inlined inside `coalesce`, which ran
+    * both twice). */
+  def fileStem(file: Column): Column = {
+    val name = nullif(substring_index(file, "/", -1), lit(""))
+    regexp_replace(url_decode(replace(name, lit("+"), lit("%2B"))),
+      "(?<=.)\\.[^.]+$", "")
   }
 
   /** conversation_id derivation (adapter.py:148-163). The sha1 branch
@@ -133,7 +147,7 @@ object ChatGptParser {
     nonEmpty(col("conversation_id")),
     nonEmpty(col("id")),
     nonEmpty(col("uuid")),
-    fileStem,
+    fileStem(input_file_name()),
     substring(
       sha1(concat_ws("|",
         coalesce(col("title"), lit("")),

@@ -11,9 +11,9 @@ import org.apache.spark.sql.functions._
   *
   * This is the product's parse path for line-delimited JSON: `Main`
   * (a JSONL file or a directory of them, as sniffed by
-  * [[ChatGptParser.sniffMultiline]]), `SparkEntry` and the streaming
-  * pipeline. Array (`[`) and pretty-printed single-object containers
-  * stay on [[ChatGptParser.normalize]] over the multiLine reader.
+  * [[ChatGptParser.sniffMultiline]]) and `SparkEntry`. Array (`[`) and
+  * pretty-printed single-object containers stay on
+  * [[ChatGptParser.normalize]] over the multiLine reader.
   *
   * Semantics are identical to ChatGptParser.normalize +
   * TurnOrdering.withTurnIdx on JSONL (asserted by FastPathSpec on
@@ -61,16 +61,12 @@ object FastTranscriptParser {
     // the observation sits between the scan and the null filter, so the
     // filter cannot be pushed below it and re-run the scanner
     val counted = obs.fold(scanned)(scanned.observe(_, corruptLines))
-    val stem = {
-      val base = regexp_extract(col("_file"), "([^/]+)/?$", 1)
-      val s = regexp_replace(base, "\\.[^.]*$", "")
-      when(s =!= "", s)
-    }
     counted
       .filter(col("c").isNotNull)
       .select(
         lit(provider).as("provider_id"),
-        coalesce(col("c.conversation_id"), stem, lit("unknown"))
+        coalesce(col("c.conversation_id"),
+          ChatGptParser.fileStem(col("_file")), lit("unknown"))
           .as("conversation_id"),
         col("c.messages").as("messages"))
   }

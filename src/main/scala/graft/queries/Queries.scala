@@ -80,8 +80,7 @@ object PipelineQueries {
         countDistinct(col("conv_id")).as("n_convs"))
       .orderBy(col("category"))
 
-  /** Tumbling 1-hour window aggregation over the raw event stream
-    * (batch form of the streaming query). */
+  /** Tumbling 1-hour window aggregation over the raw event stream. */
   def eventWindows(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/events.parquet")
       .withColumn("ts", col("ts").cast("timestamp"))
@@ -153,8 +152,7 @@ object PipelineQueries {
   }
 
   /** Gap-based per-user sessionization over the event stream (30-min
-    * idle gap) — the batch twin of the streaming event-time
-    * sessionizer; ONE shuffle on user_id (graft.ops.Temporal
+    * idle gap); ONE shuffle on user_id (graft.ops.Temporal
     * .gapSessions). session_seq ordering note: equal-ts ties within a
     * user are order-ambiguous under lag(), but tie rows always land in
     * the SAME session (gap 0 ≤ gapMs), so session boundaries and all

@@ -46,7 +46,8 @@ object Router {
     *    threshold`), so it costs no scan and no join; the threshold then
     *    plays no part here. The column is dropped from the result.
     *  - `hotSet`: a conversation_id DataFrame from cheap prior knowledge
-    *    (a previous run's thread index), broadcast-joined.
+    *    (a previous run's thread index), broadcast-joined. `Main` takes
+    *    this branch for array, single-object and text inputs on resume.
     *  - neither: detection is a `groupBy(conv).count` OVER THE INPUT,
     *    i.e. one extra counting scan of the un-materialized parse plan.
     *    `Main` still takes this branch for array, single-object and text

@@ -441,6 +441,98 @@ class MainAppSpec extends AnyFunSuite {
     assert(hostileMd.contains("stem a") && hostileMd.contains("stem b"))
   }
 
+  test("id-less conversations take the decoded file stem: JSONL, single object, text") {
+    import org.apache.spark.sql.functions._
+    // input_file_name() URL-encodes these names: a space, glob brackets,
+    // `%` (a second decode would turn `%41` into `A`), `+` (url_decode
+    // alone reads it as a space) and non-ASCII letters
+    val nonAscii = Seq("ü[1]", "naïve")
+    // a JVM whose file-name charset is ASCII (a POSIX locale) can neither
+    // create nor list a non-ASCII file name; the UTF-8 decode of its
+    // escapes is then checked on the URI alone
+    val jnu = java.nio.charset.Charset.forName(
+      System.getProperty("sun.jnu.encoding", "UTF-8"))
+    val stems = Seq("my conv", "50%41", "a+b", "x[1]") ++
+      nonAscii.filter(jnu.newEncoder().canEncode(_))
+    val decoded = spark.range(1).select(graft.parse.ChatGptParser.fileStem(
+      lit("file:///in/%C3%BC%5B1%5D.jsonl"))).head().getString(0)
+    assert(decoded === "ü[1]")
+    val mapping = """"mapping": {"m1": {"message": {"id": "m1", """ +
+      """"author": {"role": "user"}, "create_time": 1.0, """ +
+      """"content": {"parts": ["hello"]}}}}"""
+    val inputs = Seq(
+      // one conversation per line, no conversation_id
+      ("jsonl", ".jsonl", Seq.empty[String], (_: String) => s"{$mapping}\n"),
+      // pretty-printed single object: a first line of exactly `{`
+      ("single", ".json", Seq.empty[String], (_: String) => s"{\n  $mapping\n}\n"),
+      ("text", ".txt", Seq("--input-format", "text"),
+        (s: String) => s"### user 1000\nhello $s\n"))
+    inputs.foreach { case (kind, ext, extra, content) =>
+      val work = java.nio.file.Files.createTempDirectory(s"graft-stem-$kind")
+      val in = java.nio.file.Files.createDirectory(work.resolve("in"))
+      stems.foreach(s => java.nio.file.Files.writeString(
+        in.resolve(s + ext), content(s)))
+      val out = work.resolve("out")
+      assert(Main.run(Array("chain", "--input", in.toString,
+        "--outdir", out.toString) ++ extra) === 0, kind)
+      val ids = new graft.table.SnapshotParquetTable(
+        out.resolve("openai/routed").toString).read(spark)
+        .select("conversation_id").distinct().collect().map(_.getString(0))
+      assert(ids.toSet === stems.toSet, kind)
+      stems.foreach { s =>
+        val jsonl = out.resolve(s"openai/thread-$s/parsed.jsonl")
+        assert(java.nio.file.Files.exists(jsonl), s"$kind: $jsonl")
+      }
+      val md = mdFiles(out)
+      assert(md.keySet === stems.map(s => s"thread-$s.md").toSet, kind)
+      stems.foreach { s =>
+        assert(new String(md(s"thread-$s.md").toArray, "UTF-8")
+          .contains(s"\nthread: $s\n"), s"$kind: $s")
+      }
+      // a standalone export finds the same tree and renders the same
+      val exported = work.resolve("export")
+      assert(Main.run(Array("export", "--parsed-root", out.toString,
+        "--outdir", exported.toString)) === 0, kind)
+      assert(mdFiles(exported) === md, kind)
+    }
+  }
+
+  test("pre-1970 fractional create_time through chain --validate-schema") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pre1970")
+    val in = dir.resolve("old.jsonl")
+    java.nio.file.Files.writeString(in,
+      """{"conversation_id": "old", "mapping": {"m1": {"message": """ +
+        """{"id": "m1", "author": {"role": "user"}, """ +
+        """"create_time": -12345.6789, "content": {"parts": ["x"]}}}}}""" +
+        "\n")
+    val out = dir.resolve("out")
+    val report = stdoutOf {
+      assert(Main.run(Array("chain", "--input", in.toString,
+        "--outdir", out.toString, "--validate-schema")) === 0)
+    }
+    // int(-12345678.9) truncates toward zero, like Python int()
+    val ts = new graft.table.SnapshotParquetTable(
+      out.resolve("openai/routed").toString).read(spark)
+      .select("ts").collect().map(_.getLong(0)).toSeq
+    assert(ts === Seq(-12345678L))
+    val jsonl = java.nio.file.Files.readString(
+      out.resolve("openai/thread-old/parsed.jsonl"))
+    assert(jsonl.contains("\"ts\": -12345678,"), jsonl)
+    // the reference's _ts_to_seconds reads any value below 1e11 as
+    // seconds, negative epoch-ms included; expected strings computed
+    // with python3 from that formula:
+    //   sec = ts / 1000.0 if ts >= 1e11 else ts
+    //   d = datetime.fromtimestamp(sec, timezone.utc)
+    //   d.strftime("%Y-%m-%d %H:%M"), d.isoformat()
+    val md = new String(mdFiles(out)("thread-old.md").toArray, "UTF-8")
+    assert(md.contains("\n## [user] 1969-08-11 02:38\n"), md)
+    assert(md.contains("range: 1969-08-11T02:38:42+00:00 〜 " +
+      "1969-08-11T02:38:42+00:00\n"), md)
+    // the message schema's "ts": {"minimum": 0} rejects the record
+    assert(report.contains(""""schema_records":1,"schema_invalid":1}"""),
+      report)
+  }
+
   test("hot conversation: salted from its row, no detection job") {
     import org.apache.spark.sql.functions._
     val in = rawCorpus(40) // conv 0 has 400 turns, the others far fewer

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{CorpusStats, Dedup, Hyperplanes, Similarity, TextAnalysis}
-import graft.streaming.StreamingPipeline
 
 /** Semantics tests for the training-data operators (cross-engine
   * value parity is covered by the driver's DuckDB oracle; these pin
@@ -602,138 +601,6 @@ class OpsSpec extends AnyFunSuite {
     assert(res.forall(r => r.getInt(2) >= 1 && r.getInt(2) <= 5))
   }
 
-  test("streaming: windowed counts equal the batch aggregation") {
-    // file streaming source needs a directory: stage the events file
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sf/events.parquet"),
-      dir.resolve("events.parquet"))
-    val streamed = StreamingPipeline.runWindowedCountsOnce(
-      spark, dir.toString, "stream_smoke")
-      .select(unix_millis(col("window.start")).as("window_start"),
-        col("event_type"), col("n_events"), col("total_value"))
-    val batch = graft.queries.PipelineQueries.eventWindows(spark, sf)
-    val s2 = streamed.orderBy("window_start", "event_type")
-    assert(batch.exceptAll(s2).count() === 0L)
-    assert(s2.exceptAll(batch).count() === 0L)
-  }
-
-  test("streaming dedup: duplicate fingerprints dropped across micro-batches") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val src = MemoryStream[(Long, String, Long)]
-    val stream = StreamingPipeline.streamingDedup(
-      src.toDF().toDF("doc_id", "text", "ts_ms")
-        .withColumn("ts", timestamp_millis(col("ts_ms"))))
-    val q = stream.writeStream.format("memory")
-      .queryName("dedup_stream").outputMode("append").start()
-    val t0 = 1700000000000L
-    // batch 1: two distinct docs + an in-batch duplicate (case/space
-    // variant — the canonical fingerprint must catch it)
-    src.addData((1L, "hello world", t0), (2L, "HELLO   world", t0 + 1000),
-      (3L, "something else", t0 + 2000))
-    q.processAllAvailable()
-    // batch 2: cross-batch duplicate within the watermark + a new doc
-    src.addData((4L, "hello world", t0 + 3000), (5L, "fresh text", t0 + 4000))
-    q.processAllAvailable()
-    q.stop()
-    val kept = spark.table("dedup_stream").select("doc_id").collect()
-      .map(_.getLong(0)).toSet
-    assert(kept.contains(3L) && kept.contains(5L))
-    // exactly one of the "hello world" family survives
-    assert(Set(1L, 2L, 4L).intersect(kept).size === 1)
-    assert(kept.size === 3)
-  }
-
-  test("streaming interval join: streamed equals batch range join") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val t0 = 1700000000000L
-    val hour = 3600L * 1000
-    // clicks (left) and purchases (right) per user; purchases attribute
-    // to clicks within the preceding hour
-    val clicks = Seq(
-      (1L, 10L, t0), (1L, 11L, t0 + hour / 2), // both within p100's hour
-      (2L, 20L, t0),                           // too old for p200
-      (3L, 30L, t0 + hour))                    // after p300 → no match
-    val purchases = Seq(
-      (1L, 100L, t0 + hour),         // matches clicks 10 (edge) and 11
-      (2L, 200L, t0 + 2 * hour),     // click 20 is 2h old → no match
-      (3L, 300L, t0 + hour / 2))     // before click 30 → no match
-    def df(rows: Seq[(Long, Long, Long)]) =
-      rows.toDF("user_id", "id", "ts_ms")
-        .withColumn("ts", timestamp_millis(col("ts_ms"))).drop("ts_ms")
-    val expected = StreamingPipeline.intervalJoin(
-      df(clicks), df(purchases), "user_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    assert(expected === Set(
-      (1L, 10L, 100L, hour), (1L, 11L, 100L, hour / 2)))
-    val srcL = MemoryStream[(Long, Long, Long)]
-    val srcR = MemoryStream[(Long, Long, Long)]
-    def sdf(src: MemoryStream[(Long, Long, Long)]) =
-      src.toDF().toDF("user_id", "id", "ts_ms")
-        .withColumn("ts", timestamp_millis(col("ts_ms"))).drop("ts_ms")
-    val q = StreamingPipeline.intervalJoin(sdf(srcL), sdf(srcR), "user_id")
-      .writeStream.format("memory").queryName("interval_join")
-      .outputMode("append").start()
-    // deliver across separate micro-batches to exercise join state
-    srcL.addData(clicks.take(2): _*)
-    q.processAllAvailable()
-    srcR.addData(purchases.head)
-    srcL.addData(clicks.drop(2): _*)
-    q.processAllAvailable()
-    srcR.addData(purchases.tail: _*)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("interval_join").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
-    assert(streamed === expected)
-  }
-
-  test("streaming parse→route: equals batch, restart resumes from checkpoint") {
-    val work = java.nio.file.Files.createTempDirectory("graft-spr")
-    val rawDir = s"$work/raw"
-    val sinkDir = s"$work/routed_stream"
-    val ckpt = s"$work/ckpt"
-    val corpus = graft.gen.TranscriptGen.synthesize(spark, 30)
-    graft.gen.TranscriptGen.renderRawJsonl(corpus.filter(
-      col("conv_id") < "conv-000000020"))
-      .write.mode("overwrite").text(rawDir)
-    val q1 = StreamingPipeline.parseAndRouteStream(
-      spark, rawDir, sinkDir, ckpt)
-    q1.processAllAvailable(); q1.stop()
-    val batch = graft.parse.FastTranscriptParser.parse(spark, rawDir)
-    val firstCount = spark.read.parquet(sinkDir).count()
-    assert(firstCount === batch.count())
-    // drop MORE raw files, restart with the same checkpoint: only the
-    // new files are processed (exactly-once via the sink's own log)
-    graft.gen.TranscriptGen.renderRawJsonl(corpus.filter(
-      col("conv_id") >= "conv-000000020"))
-      .write.mode("append").text(rawDir)
-    val q2 = StreamingPipeline.parseAndRouteStream(
-      spark, rawDir, sinkDir, ckpt)
-    q2.processAllAvailable(); q2.stop()
-    val total = spark.read.parquet(sinkDir).count()
-    val batchAll = graft.parse.FastTranscriptParser.parse(spark, rawDir)
-    assert(total === batchAll.count(),
-      "restart must append exactly the new files' turns")
-    // routed per-sink counts match the batch aggregation
-    val s = spark.read.parquet(sinkDir)
-      .groupBy("role", "tool_sink").count()
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-      .toMap
-    val b = batchAll
-      .withColumn("tool_sink", coalesce(col("tool"), lit("none")))
-      .groupBy("role", "tool_sink").count()
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
-      .toMap
-    assert(s === b)
-  }
-
   test("approx profile (q44): HLL distinct estimates within tolerance, exact otherwise") {
     // distinct_ok is the in-query |approx - exact| ≤ tol·exact assert
     // (q14 pattern); the non-sketch columns must match exact q43
@@ -782,6 +649,27 @@ class OpsSpec extends AnyFunSuite {
     assert(plan.contains("hashpartitioning(user_id"), plan)
   }
 
+  test("gap sessions: a gap of exactly gapMs continues, a longer gap splits") {
+    import spark.implicits._
+    val gap = 60000L
+    val t0 = 1700000000000L
+    // user 1: a 30 s gap, then a 4.5-min gap (> gapMs: new session);
+    // user 2: a gap of EXACTLY gapMs, which must not split
+    val evts = Seq(
+      (1L, t0), (1L, t0 + 30000L), (1L, t0 + 300000L),
+      (2L, t0 + 10000L), (2L, t0 + 70000L))
+    val got = graft.ops.Temporal.gapSessions(
+        evts.toDF("user_id", "ts_ms"), "user_id", "ts_ms", gap)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4)))
+      .toSet
+    assert(got === Set(
+      (1L, 1L, 2L, t0, t0 + 30000L),
+      (1L, 2L, 1L, t0 + 300000L, t0 + 300000L),
+      (2L, 1L, 2L, t0 + 10000L, t0 + 70000L)))
+  }
+
   test("cache hygiene: connectedComponents, ivfTrainedTopK and pageRank leave no cached tables") {
     import spark.implicits._
     spark.catalog.clearCache()
@@ -811,69 +699,6 @@ class OpsSpec extends AnyFunSuite {
     // be gone
     assert(leaked.size <= 3,
       s"internal caches leaked: ${leaked.size} persistent RDDs remain")
-  }
-
-  test("streaming event-time sessionization: streamed == batch under any batch split") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val gap = 60000L
-    val t0 = 1700000000000L
-    // user 1: two sessions (4.5-min gap); user 2: ONE session — its gap
-    // is EXACTLY gapMs, which must continue the session in both the
-    // streaming merge and the batch lag() definition
-    val evts = Seq(
-      (1L, t0), (1L, t0 + 30000L), (1L, t0 + 300000L),
-      (2L, t0 + 10000L), (2L, t0 + 70000L))
-    val flushA = (99L, t0 + 100000000L)
-    val flushB = (99L, t0 + 200000000L)
-    def run(batches: Seq[Seq[(Long, Long)]]): Set[(Long, Long, Long, Long)] = {
-      val src = MemoryStream[(Long, Long)]
-      val stream = StreamingPipeline.sessionizeEventTime(
-        src.toDF().toDF("user_id", "ts_ms")
-          .withColumn("ts", timestamp_millis(col("ts_ms"))),
-        gapMs = gap, watermark = "10 minutes")
-      val qn = "sess_et_" + math.abs(scala.util.Random.nextLong())
-      val q = stream.writeStream.format("memory").queryName(qn)
-        .outputMode("append").start()
-      batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
-      // two flush batches: the first advances the watermark, the second
-      // gives the engine a batch in which the event-time timeouts fire
-      Seq(flushA, flushB).foreach { f =>
-        src.addData(f); q.processAllAvailable()
-      }
-      q.stop()
-      spark.table(qn).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .filter(_._1 != 99L).toSet
-    }
-    val expected = graft.ops.Temporal.gapSessions(
-        evts.toDF("user_id", "ts_ms"), "user_id", "ts_ms", gap)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toSet
-    assert(expected.count(_._1 == 2L) === 1, "exact-gap event must not split")
-    // one batch; three batches; OUT-OF-ORDER split (later session's
-    // event arrives before the first session finishes) — all equal
-    val oneShot = run(Seq(evts))
-    val split = run(Seq(evts.take(2), evts.slice(2, 4), evts.drop(4)))
-    val ooo = run(Seq(
-      Seq(evts(2), evts(3)), Seq(evts(0), evts(4)), Seq(evts(1))))
-    assert(oneShot === expected)
-    assert(split === expected)
-    assert(ooo === expected)
-  }
-
-  test("streaming: mapGroupsWithState sessionization") {
-    import spark.implicits._
-    val updates = StreamingPipeline.sessionize(
-      Seq((1L, 100L), (1L, 200L), (2L, 50L)).toDS())
-    // batch Dataset drive of the stateful function (mapGroupsWithState
-    // on a static Dataset runs the same state logic once per group)
-    val got = updates.collect().map(u => u.user_id -> u).toMap
-    assert(got(1L).n_events === 2 && got(1L).first_ts_ms === 100L &&
-      got(1L).last_ts_ms === 200L)
-    assert(got(2L).n_events === 1)
   }
 
   test("dup spans: cross-doc and within-doc window repeats; clean docs absent") {
