@@ -8,7 +8,7 @@ import graft.agg.Aggregates
 import graft.export.Exporter
 import graft.lineage.Lineage
 import graft.model.Schemas
-import graft.parse.{ChatGptParser, FastTranscriptParser}
+import graft.parse.{ChatGptParser, FastTranscriptParser, GrokParser}
 import graft.route.Router
 
 /** spark-submit entry point: `parse | export | chain` job modes
@@ -160,35 +160,33 @@ object Main {
     // must not collide on the listener registration
     val obs = new org.apache.spark.sql.Observation(
       "parse_metrics_" + java.util.UUID.randomUUID())
-    // the message rows, and the name of their hot-conversation flag
-    // column when the parse yields one
-    val (msgs, hotColumn) = opt(args, "input-format").getOrElse("json") match {
+    // every container parses to the conversation row (provider_id,
+    // conversation_id, messages), so its kept-turn count is on the row
+    // and the hot flag is set before the explode
+    val conv = opt(args, "input-format").getOrElse("json") match {
       case "json" if !ChatGptParser.sniffMultiline(spark, input) =>
-        // JSONL: the codegen scanner turns each line into one
-        // conversation row; its kept-turn count is on that row, so the
-        // hot flag is set before the explode
-        val conv = FastTranscriptParser.conversations(
+        // JSONL: the codegen scanner, one conversation per line
+        FastTranscriptParser.conversations(
           FastTranscriptParser.readLines(spark, input), provider, Some(obs))
-          .withColumn("hot", size(col("messages")) >= hotThreshold)
-        (FastTranscriptParser.turns(conv).drop("turn_idx"), Some("hot"))
       case "json" =>
-        (ChatGptParser.normalize(ChatGptParser.readRawMultiline(spark, input)
-          .observe(obs, ChatGptParser.corruptLines), provider), None)
+        ChatGptParser.conversations(ChatGptParser.readRawMultiline(spark, input)
+          .observe(obs, ChatGptParser.corruptLines), provider)
       case "text" =>
         // plain-text transcript logs (grok wire format): one document
         // per FILE, conv id = file stem; turns with malformed headers
-        // (null role/ts) are the text path's corrupt lines — counted on
-        // the pre-filter frame, warn-skipped like the JSON path
-        val docs = spark.read.option("wholetext", "true").text(input)
-          .select(ChatGptParser.fileStem(input_file_name()).as("conv_id"),
-            col("value").as("raw"))
-        val parsed = graft.parse.GrokParser.parse(docs).observe(obs,
-          count(when(col("role").isNull || col("ts_ms").isNull, 1))
-            .as("corrupt_lines"))
-        (graft.parse.GrokParser.toMessages(parsed, provider), None)
+        // (null role/ts) are the text path's corrupt lines, warn-skipped
+        // like the JSON path
+        GrokParser.conversations(
+          spark.read.option("wholetext", "true").text(input)
+            .select(ChatGptParser.fileStem(input_file_name()).as("conv_id"),
+              col("value").as("raw")),
+          provider, obs)
       case other => throw new UsageError(
         I18n.msg("cli.parse.bad_format", "format" -> other))
     }
+    val msgs = FastTranscriptParser.turns(
+      conv.withColumn("hot", size(col("messages")) >= hotThreshold))
+      .drop("turn_idx")
 
     val providerDir = s"$outdir/$provider"
     val manifestPath = s"$providerDir/manifest.json"
@@ -204,14 +202,9 @@ object Main {
     // routed tree readable and a --resume can never truncate unchanged
     // threads (round-1 bug).
     //
-    // Adaptive salting of hot conversations rides the same pass on
-    // JSONL: the flag comes with the rows (see above), so no detection
-    // scan or join runs, first run or resume. Arrays, single objects
-    // and text have no conversation row: a resumed run takes their hot
-    // set from the previous thread index (a broadcast join), and a first
-    // run pays one counting scan of the input, column-pruned to
-    // conversation_id (set --hot-threshold 0 to trade that scan for
-    // hot-conversation write skew).
+    // Adaptive salting of hot conversations rides the same pass: the
+    // flag comes with the rows (see above), so no detection scan or
+    // join runs, first run or resume, whatever the container.
     //
     // Thread stats are aggregated ONCE, and that one pass is the
     // thread-index write: on resume each row carries the previous
@@ -226,11 +219,8 @@ object Main {
       if (flag(args, "resume") && Lineage.threadIndexExists(spark, indexRoot))
         Some(Lineage.readThreadIndex(spark, indexRoot))
       else None
-    val hotSet = if (hotColumn.isDefined) None
-      else prevIndex.map(_.filter(col("count") >= hotThreshold)
-        .select("conversation_id"))
-    val routedData = Router.writeRoutedSinks(msgs, providerDir,
-      hotThreshold = hotThreshold, hotSet = hotSet, hotColumn = hotColumn)
+    val routedData =
+      Router.writeRoutedSinks(msgs, providerDir, hotColumn = Some("hot"))
     // `tool` itself is a regular column in the routed files; only
     // (role, tool_sink) are partition directories. A run that kept no
     // rows wrote no files, and reads back as an empty frame.

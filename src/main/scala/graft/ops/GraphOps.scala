@@ -86,6 +86,7 @@ object GraphOps {
       .select(col("vec_id"), col("outdeg"))
       .repartition(nParts, col("vec_id")).persist(lvl)
     val nN = nd.count() // one setup action; materializes nd AND e
+    eRaw.unpersist() // e holds the edges from here on
     // rank parked on nodes with no out-edges; the ONE driver action
     // per round (materializes df as a side effect of scanning it)
     def danglingMass(df: DataFrame): Long =
@@ -117,7 +118,7 @@ object GraphOps {
     val out = r.select(col("vec_id"), col("pr").as("pagerank_pico"),
       (col("pr") / lit(1.0e12)).as("pagerank"))
       .localCheckpoint(true)
-    Dedup.freeRound(r); nd.unpersist(); e.unpersist(); eRaw.unpersist()
+    Dedup.freeRound(r); nd.unpersist(); e.unpersist()
     out
   }
 }

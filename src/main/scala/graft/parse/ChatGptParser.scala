@@ -10,9 +10,9 @@ import graft.model.Schemas
   *
   * Re-realizes the reference's provider adapter
   * (reference: src/llm_logparser/core/providers/openai/adapter.py:175-240)
-  * as a single declarative Catalyst plan — scan → explode(mapping) →
-  * project/filter — so predicate pushdown, nested-schema pruning and
-  * whole-stage codegen all apply. No RDDs, no UDFs.
+  * as a single declarative Catalyst plan — scan → one expression per
+  * conversation that filters, maps and sorts its mapping's nodes — so
+  * nested-schema pruning applies and no step shuffles. No RDDs, no UDFs.
   *
   * Semantics matched exactly (all verified against the reference's golden
   * outputs in src/test/resources/golden/):
@@ -32,13 +32,11 @@ import graft.model.Schemas
   * this path: the adapter's final sort by (ts, message_id) makes BFS
   * order unobservable in normalized output (see SURVEY.md §2 A5).
   *
-  * Which container takes which path: `Main` parses JSONL (a file or a
-  * directory of them) through [[FastTranscriptParser]]; array (`[`) and
-  * pretty-printed single-object containers come here, through the
-  * multiLine reader, which streams an array's elements (a whole-file
-  * string for the scanner would put a multi-GB export in one row).
-  * `normalize` over [[readRawJsonl]] stays the reference implementation
-  * the fast path is checked against (FastPathSpec, MainAppSpec).
+  * Array (`[`) and pretty single-object containers come here through
+  * the multiLine reader, which streams an array's elements (the scanner
+  * would need a multi-GB export as one string), to the conversation row
+  * [[FastTranscriptParser]] yields for JSONL. `normalize` over
+  * [[readRawJsonl]] is the reference the scanner is checked against.
   */
 object ChatGptParser {
 
@@ -155,72 +153,65 @@ object ChatGptParser {
           col("update_time").cast(StringType), lit("")))), 1, 12),
     lit("unknown"))
 
-  /** Normalize raw conversations into the message contract.
+  /** One row per raw conversation, as
+    * [[FastTranscriptParser.conversations]] yields for JSONL:
+    * `(provider_id, conversation_id, messages)`, the nodes filtered,
+    * mapped and (ts, message_id)-sorted inside the row. */
+  def conversations(raw: DataFrame, provider: String = "openai")
+      : DataFrame = {
+    // Python `msg.create_time or node.create_time`: 0.0 is falsy.
+    def tsSec(node: Column): Column = {
+      val ct = node("message")("create_time")
+      when(ct.isNotNull && ct =!= 0.0d, ct).otherwise(node("create_time"))
+    }
+    // structural nodes (no message) and null-ts messages (A10,
+    // count-critical) are dropped
+    val kept = filter(map_entries(col("mapping")), e =>
+      e("value")("message").isNotNull && tsSec(e("value")).isNotNull)
+    val keyed = transform(kept, { e =>
+      val msg = e("value")("message")
+      // Micro-divergence (documented, unreachable on well-formed
+      // exports): a NUMERIC author.role is stringified by Spark's JSON
+      // reader (role="123"); the reference's isinstance check yields
+      // "unknown" and the scanner falls through to msg.role. All three
+      // agree on every string-or-absent role.
+      val role = coalesce(
+        nonEmpty(msg("author")("role")), nonEmpty(msg("role")), lit("unknown"))
+      // Keep only string-typed parts (Variant-typed elements carry the
+      // original JSON type); non-list / missing parts → empty array.
+      val stringParts = coalesce(
+        transform(
+          filter(msg("content")("parts"),
+            p => schema_of_variant(p) === lit("STRING")),
+          p => try_variant_get(p, "$", "string")),
+        array().cast(ArrayType(StringType)))
+      struct(
+        (tsSec(e("value")) * 1000d).cast(LongType).as("ts"),
+        coalesce(nonEmpty(msg("id")), e("key")).as("message_id"),
+        e("value")("parent").as("parent_id"),
+        role.as("role"),
+        when(role === "tool", nonEmpty(msg("author")("name"))).as("tool"),
+        coalesce(msg("content")("content_type"), lit("text"))
+          .as("content_type"),
+        stringParts.as("parts"))
+    })
+    raw
+      .filter(col("mapping").isNotNull)
+      .select(
+        lit(provider).as("provider_id"),
+        conversationId.as("conversation_id"),
+        FastTranscriptParser.orderedMessages(keyed).as("messages"))
+  }
+
+  /** Normalize raw conversations into the message contract: the turns
+    * of [[conversations]], without `turn_idx`.
     *
     * Output columns (Schemas.messageColumns): provider_id,
     * conversation_id, message_id, parent_id, role, tool, ts (epoch-ms
     * long), content_type, parts (array<string>), text.
     */
-  def normalize(raw: DataFrame, provider: String = "openai"): DataFrame = {
-    // conversation_id is projected BELOW the explode: co-projected
-    // with the Generate it would re-run the id coalesce chain
-    // (regexp/sha1 branches included) once per MESSAGE instead of
-    // once per conversation
-    val exploded = raw
-      .filter(col("mapping").isNotNull)
-      .select(
-        lit(provider).as("provider_id"),
-        conversationId.as("conversation_id"),
-        col("mapping"))
-      .select(
-        col("provider_id"), col("conversation_id"),
-        explode(map_entries(col("mapping"))).as("entry"))
-      .select(
-        col("provider_id"), col("conversation_id"),
-        col("entry.key").as("node_id"),
-        col("entry.value").as("node"))
-      .filter(col("node.message").isNotNull)
-
-    val msg = col("node.message")
-
-    // Python `msg.create_time or node.create_time`: 0.0 is falsy.
-    val tsSec = when(msg("create_time").isNotNull && msg("create_time") =!= 0.0d,
-      msg("create_time")).otherwise(col("node.create_time"))
-
-    // Keep only string-typed parts (Variant-typed elements carry the
-    // original JSON type); non-list / missing parts → empty array.
-    val stringParts = coalesce(
-      transform(
-        filter(msg("content")("parts"),
-          p => schema_of_variant(p) === lit("STRING")),
-        p => try_variant_get(p, "$", "string")),
-      array().cast(ArrayType(StringType)))
-
-    // Micro-divergence (documented, unreachable on well-formed exports):
-    // a NUMERIC author.role is stringified by Spark's JSON reader
-    // (role="123"); the reference's isinstance check yields "unknown"
-    // and the fast-path scanner falls through to msg.role. All three
-    // agree on every string-or-absent role.
-    val role = coalesce(
-      nonEmpty(msg("author")("role")), nonEmpty(msg("role")), lit("unknown"))
-
-    exploded
-      .withColumn("ts_sec", tsSec)
-      .filter(col("ts_sec").isNotNull) // A10: null-ts drop, count-critical
-      .select(
-        col("provider_id"),
-        col("conversation_id"),
-        coalesce(nonEmpty(msg("id")), col("node_id")).as("message_id"),
-        col("node.parent").as("parent_id"),
-        role.as("role"),
-        when(role === "tool", nonEmpty(msg("author")("name"))).as("tool"),
-        (col("ts_sec") * 1000d).cast(LongType).as("ts"),
-        when(msg("content")("content_type").isNotNull,
-          msg("content")("content_type")).otherwise(lit("text"))
-          .as("content_type"),
-        stringParts.as("parts"))
-      .withColumn("text", array_join(col("parts"), "\n"))
-  }
+  def normalize(raw: DataFrame, provider: String = "openai"): DataFrame =
+    FastTranscriptParser.turns(conversations(raw, provider)).drop("turn_idx")
 
   /** Corrupt-line count over a raw read (reference warn-skips broken
     * lines and reports them in the run summary, parser.py:82-84,338-345):

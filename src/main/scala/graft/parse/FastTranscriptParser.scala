@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
   * inside the expression (a conversation is one input row), so
   * `turn_idx` falls out of posexplode instead of a window exchange.
   *
-  * This is the product's parse path for line-delimited JSON: `Main`
-  * (a JSONL file or a directory of them, as sniffed by
-  * [[ChatGptParser.sniffMultiline]]) and `SparkEntry`. Array (`[`) and
-  * pretty-printed single-object containers stay on
-  * [[ChatGptParser.normalize]] over the multiLine reader.
+  * The conversation row it yields, `(provider_id, conversation_id,
+  * messages)`, is the one row shape every container parses to: JSONL
+  * here (`Main` and `SparkEntry`), arrays and single objects through
+  * [[ChatGptParser.conversations]], text through
+  * [[GrokParser.conversations]]. [[turns]] explodes any of them.
   *
   * Semantics are identical to ChatGptParser.normalize +
   * TurnOrdering.withTurnIdx on JSONL (asserted by FastPathSpec on
@@ -56,12 +56,12 @@ object FastTranscriptParser {
     val withFile =
       if (lines.columns.contains("_file")) lines
       else lines.withColumn("_file", lit(null).cast("string"))
+    // `c` comes out of a one-element explode: the null filter below,
+    // pushed through a projection of the scanner, would re-run it
     val scanned = withFile.select(col("line"), col("_file"),
-      graft.functions.extract_conversation(col("line")).as("c"))
-    // the observation sits between the scan and the null filter, so the
-    // filter cannot be pushed below it and re-run the scanner
-    val counted = obs.fold(scanned)(scanned.observe(_, corruptLines))
-    counted
+      explode(array(graft.functions.extract_conversation(col("line"))))
+        .as("c"))
+    obs.fold(scanned)(scanned.observe(_, corruptLines))
       .filter(col("c").isNotNull)
       .select(
         lit(provider).as("provider_id"),
@@ -75,6 +75,19 @@ object FastTranscriptParser {
     count(when(col("c").isNull && !col("line").rlike("^\\s*$"), 1))
       .as("corrupt_lines")
 
+  /** A conversation row's `messages` from `keyed`, structs `(ts,
+    * message_id, parent_id, role, tool, content_type, parts)` sorted by
+    * their leading (ts, message_id), as ExtractConversation.messageType:
+    * `text` is the parts joined by newlines. */
+  private[parse] def orderedMessages(keyed: Column): Column =
+    transform(sort_array(keyed), k => struct(messageFields.map {
+      case "text" => array_join(k("parts"), "\n").as("text")
+      case f => k(f).as(f)
+    }: _*))
+
+  private val messageFields =
+    graft.functions.ExtractConversation.messageType.fieldNames.toSeq
+
   /** One row per turn of `conv` (rows shaped like [[conversations]]):
     * Schemas.messageColumns + turn_idx, then any other columns of `conv`
     * carried onto each of its turns. */
@@ -82,11 +95,15 @@ object FastTranscriptParser {
     val carried = conv.columns.toSeq
       .filterNot(Set("provider_id", "conversation_id", "messages"))
       .map(col)
-    val fields = graft.functions.ExtractConversation.messageType.fieldNames
-      .toSeq.map(f => col(s"m.$f"))
+    val fields = messageFields.map(f => col(s"m.$f"))
+    // the outer generator's row for an empty array is filtered out
+    // after it: for a plain posexplode Spark infers a `size(messages) >
+    // 0` filter, and pushed through the projection that builds
+    // `messages` it would re-run that expression
     conv
       .select(Seq(col("provider_id"), col("conversation_id")) ++ carried :+
-        posexplode(col("messages")).as(Seq("turn_idx", "m")): _*)
+        posexplode_outer(col("messages")).as(Seq("turn_idx", "m")): _*)
+      .filter(col("turn_idx").isNotNull)
       .select(Seq(col("provider_id"), col("conversation_id")) ++ fields ++
         (col("turn_idx") +: carried): _*)
   }

@@ -1,6 +1,6 @@
 package graft.parse
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,10 +31,10 @@ import org.apache.spark.sql.types._
   * because render quotes every line in the collision class and parse
   * strips exactly one ">" from it.
   *
-  * Spark-first: the parser is split + posexplode + regexp_extract —
-  * every operator codegen'd, no UDF, no RDD, and parsing is a NARROW
-  * map over conversations (the graph of a transcript never crosses
-  * rows), so at 10^12 turns it scales with input splits alone.
+  * Spark-first: the parser is split + transform + regexp_extract — no
+  * UDF, no RDD, and parsing is a NARROW map over conversations (the
+  * graph of a transcript never crosses rows), so at 10^12 turns it
+  * scales with input splits alone.
   * [[render]] is the inverse (used to exercise the parser against the
   * oracle's independently-derived expected rows: parse ∘ render must
   * be the identity on the transcript table).
@@ -74,62 +74,62 @@ object GrokParser {
 
   private val headerRe = "^(\\w+)(?: \\[tool: ([^\\]]+)\\])? (\\d+)$"
 
-  /** Parse raw documents (conv_id, raw) → one row per turn:
-    * (conv_id, turn_idx, role, tool, ts_ms, text). Narrow + codegen'd
-    * end to end; malformed headers yield null role/ts rather than
-    * failing the scan (warn-skip downstream, like the JSON path). */
-  def parse(raw: DataFrame): DataFrame = {
+  /** A document's turns from its `raw` text, in document order:
+    * array<struct<role, tool, ts, text>>, ts in epoch-ms. Malformed
+    * headers yield null role/ts rather than failing the scan. */
+  private def documentTurns: Column = {
     // CRLF logs are the common case for text exports: normalize line
-    // endings first (one codegen'd pass) or the trailing \r defeats
-    // both the boundary split and the header's (\d+)$ anchor.
-    // Leading "\n" then makes every boundary — including the first —
-    // the uniform "\n### " separator; element 0 is the (empty)
+    // endings first or the trailing \r defeats both the boundary split
+    // and the header's (\d+)$ anchor. Leading "\n" then makes every
+    // boundary the uniform "\n### " separator; element 0 is the (empty)
     // preamble.
     val normalized = regexp_replace(col("raw"), "\r\n", "\n")
     val segs = split(concat(lit("\n"), normalized), "\n### ")
-    val seg = col("seg")
-    val headerLine = substring_index(seg, "\n", 1)
-    val body = seg.substr(length(headerLine) + lit(2), length(seg))
-    raw
-      .select(col("conv_id"),
-        posexplode(slice(segs, lit(2), greatest(size(segs) - 1, lit(0)))))
-      .withColumnRenamed("col", "seg")
-      .select(
-        col("conv_id"),
-        col("pos").cast(IntegerType).as("turn_idx"),
-        nullif(regexp_extract(headerLine, headerRe, 1), lit(""))
-          .as("role"),
-        nullif(regexp_extract(headerLine, headerRe, 2), lit(""))
-          .as("tool"),
+    transform(slice(segs, lit(2), greatest(size(segs) - 1, lit(0))), { seg =>
+      val headerLine = substring_index(seg, "\n", 1)
+      val body = seg.substr(length(headerLine) + lit(2), length(seg))
+      struct(
+        nullif(regexp_extract(headerLine, headerRe, 1), lit("")).as("role"),
+        nullif(regexp_extract(headerLine, headerRe, 2), lit("")).as("tool"),
         nullif(regexp_extract(headerLine, headerRe, 3), lit(""))
-          .cast(LongType).as("ts_ms"),
+          .cast(LongType).as("ts"),
         unescapeBody(body).as("text"))
+    })
   }
 
-  /** Lift parsed text turns into the normalized [[graft.model.Schemas.Message]]
-    * contract so the text input mode feeds the SAME route/index/export
-    * stages as the JSON providers. Warn-skip semantics match the JSON
-    * path: malformed headers (null role/ts — the reference's
-    * count-critical A10 null-ts drop) are filtered here, counted by the
-    * caller's observe on the pre-filter frame. Message ids are
-    * positional (`conv-idx`), so parent_id is the PREVIOUS index —
-    * computable with pure narrow arithmetic, no window, no shuffle:
-    * text transcripts are already linear, there is no DAG to walk.
-    */
-  def toMessages(parsed: DataFrame, provider: String): DataFrame =
-    parsed
-      .filter(col("role").isNotNull && col("ts_ms").isNotNull)
-      .select(
-        lit(provider).as("provider_id"),
-        col("conv_id").as("conversation_id"),
-        concat(col("conv_id"), lit("-"), col("turn_idx"))
-          .as("message_id"),
-        when(col("turn_idx") > 0,
-          concat(col("conv_id"), lit("-"), col("turn_idx") - 1))
-          .as("parent_id"),
-        col("role"), col("tool"),
-        col("ts_ms").as("ts"),
-        lit("text").as("content_type"),
-        array(col("text")).as("parts"),
-        col("text"))
+  /** Parse raw documents (conv_id, raw) → one row per turn:
+    * (conv_id, turn_idx, role, tool, ts_ms, text), narrow end to end. */
+  def parse(raw: DataFrame): DataFrame =
+    raw
+      .select(col("conv_id"),
+        posexplode(documentTurns).as(Seq("turn_idx", "t")))
+      .select(col("conv_id"), col("turn_idx"), col("t.role").as("role"),
+        col("t.tool").as("tool"), col("t.ts").as("ts_ms"),
+        col("t.text").as("text"))
+
+  /** The conversation row of each document (conv_id, raw), as
+    * [[FastTranscriptParser.conversations]] yields for JSONL, so text
+    * feeds the SAME route/index/export stages. Turns with a malformed
+    * header (null role/ts: the A10 null-ts drop) are dropped, and
+    * counted on `obs` as `corrupt_lines`. Message ids are positional
+    * (`conv-idx`, dropped turns counted), parent_id the PREVIOUS index:
+    * text transcripts are already linear, there is no DAG to walk. */
+  def conversations(raw: DataFrame, provider: String,
+      obs: Observation): DataFrame = {
+    val malformed = (t: Column) => t("role").isNull || t("ts").isNull
+    val counted = raw.select(col("conv_id"), documentTurns.as("turns"))
+      .observe(obs,
+        sum(size(filter(col("turns"), malformed))).as("corrupt_lines"))
+    val id = (i: Column) => concat(col("conv_id"), lit("-"), i)
+    val keyed = filter(transform(col("turns"), (t, i) => struct(
+        t("ts").as("ts"), id(i).as("message_id"),
+        when(i > 0, id(i - 1)).as("parent_id"), t("role").as("role"),
+        t("tool").as("tool"), lit("text").as("content_type"),
+        array(t("text")).as("parts"))),
+      k => !malformed(k))
+    counted.select(
+      lit(provider).as("provider_id"),
+      col("conv_id").as("conversation_id"),
+      FastTranscriptParser.orderedMessages(keyed).as("messages"))
+  }
 }

@@ -42,16 +42,15 @@ object Router {
     * preference:
     *  - `hotColumn`: a boolean column of `msgs` already flagging the
     *    rows of hot conversations. `Main` computes it on the
-    *    conversation row before the explode (`size(messages) >=
+    *    conversation row of every container (`size(messages) >=
     *    threshold`), so it costs no scan and no join; the threshold then
     *    plays no part here. The column is dropped from the result.
     *  - `hotSet`: a conversation_id DataFrame from cheap prior knowledge
-    *    (a previous run's thread index), broadcast-joined. `Main` takes
-    *    this branch for array, single-object and text inputs on resume.
-    *  - neither: detection is a `groupBy(conv).count` OVER THE INPUT,
-    *    i.e. one extra counting scan of the un-materialized parse plan.
-    *    `Main` still takes this branch for array, single-object and text
-    *    inputs on a first run.
+    *    (a previous run's thread index), broadcast-joined.
+    *  - neither: detection is a `groupBy(conv).count` OVER THE INPUT.
+    * These two have no product caller: perfbench's `TracedPipeline` and
+    * PipelineSpec "adaptive salting" use them; remove them in the
+    * benchmark PR that realigns `TracedPipeline`.
     */
   def saltedForRouting(
       msgs: DataFrame,

@@ -1,10 +1,11 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.TranscriptGen
-import graft.parse.{ChatGptParser, FastTranscriptParser}
+import graft.parse.{ChatGptParser, FastTranscriptParser, GrokParser}
 import graft.pipeline.TurnOrdering
 
 /** The fast-path scanner must be observationally identical to the
@@ -70,6 +71,52 @@ class FastPathSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"),
       s"parse+order must not shuffle — turn_idx comes from the " +
         s"in-expression sort, not a window:\n$plan")
+  }
+
+  test("every container runs its conversation expression once per row") {
+    // file inputs: a `toDF` input would be constant-folded, and its
+    // plan would hide a filter that re-runs the expression
+    val tmp = java.nio.file.Files.createTempDirectory("graft-once")
+    val raw = TranscriptGen.renderRawJsonl(TranscriptGen.synthesize(spark, 3))
+      .collect()
+    java.nio.file.Files.writeString(tmp.resolve("raw.jsonl"),
+      raw.mkString("", "\n", "\n"))
+    java.nio.file.Files.writeString(tmp.resolve("raw.json"),
+      raw.mkString("[\n", ",\n", "\n]\n"))
+    java.nio.file.Files.createDirectory(tmp.resolve("text"))
+    java.nio.file.Files.writeString(tmp.resolve("text/a.txt"),
+      "### user 1000\nhi\n\n### assistant 2000\nhello\n")
+    def observed(df: DataFrame, metric: Column) =
+      df.observe(new Observation(), metric)
+    def occurrences(df: DataFrame, s: String) =
+      df.queryExecution.executedPlan.toString.sliding(s.length).count(_ == s)
+    // `Main`'s shape: conversation row → hot flag → turns
+    def mainTurns(conv: DataFrame) = FastTranscriptParser.turns(
+      conv.withColumn("hot", size(col("messages")) >= 1))
+    val jsonl = s"$tmp/raw.jsonl"
+    val docs = spark.read.option("wholetext", "true").text(s"$tmp/text")
+      .select(ChatGptParser.fileStem(input_file_name()).as("conv_id"),
+        col("value").as("raw"))
+    val plans = Seq(
+      ("jsonl, no observation", "extract_conversation(",
+        FastTranscriptParser.parse(spark, jsonl)),
+      ("jsonl, Main", "extract_conversation(",
+        mainTurns(FastTranscriptParser.conversations(
+          FastTranscriptParser.readLines(spark, jsonl), "openai",
+          Some(new Observation())))),
+      ("array, Main", "sort_array(",
+        mainTurns(ChatGptParser.conversations(observed(
+          ChatGptParser.readRawMultiline(spark, s"$tmp/raw.json"),
+          ChatGptParser.corruptLines)))),
+      ("array, normalize", "sort_array(", ChatGptParser.normalize(
+        ChatGptParser.readRawMultiline(spark, s"$tmp/raw.json"))),
+      ("text, Main", "sort_array(", mainTurns(
+        GrokParser.conversations(docs, "grok", new Observation()))),
+      ("text, parse", "(?m)^>(>*### )", GrokParser.parse(docs)))
+    plans.foreach { case (name, expr, df) =>
+      assert(occurrences(df, expr) === 1, s"$name:\n" +
+        df.queryExecution.executedPlan)
+    }
   }
 
   test("fast path: corrupt lines and junk are skipped, not fatal") {

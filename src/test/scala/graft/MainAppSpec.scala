@@ -8,14 +8,31 @@ import graft.app.Main
 class MainAppSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  /** `n` synthesized conversations as raw export JSONL (conv 0 is a
-    * 400-turn mega thread); returns the file's path. */
-  private def rawCorpus(n: Int): String = {
-    val f = java.nio.file.Files.createTempFile("graft-raw", ".jsonl")
-    java.nio.file.Files.write(f, (graft.gen.TranscriptGen.renderRawJsonl(
+  /** `n` synthesized conversations as raw export JSONL, or with
+    * `array` as one JSON array (conv 0 is a 400-turn mega thread);
+    * returns the file's path. */
+  private def rawCorpus(n: Int, array: Boolean = false): String = {
+    val f = java.nio.file.Files.createTempFile("graft-raw",
+      if (array) ".json" else ".jsonl")
+    val convs = graft.gen.TranscriptGen.renderRawJsonl(
       graft.gen.TranscriptGen.synthesize(spark, n)).collect()
-      .mkString("\n") + "\n").getBytes("UTF-8"))
+    java.nio.file.Files.write(f, (
+      if (array) convs.mkString("[\n", ",\n", "\n]\n")
+      else convs.mkString("\n") + "\n").getBytes("UTF-8"))
     f.toString
+  }
+
+  /** The files under `root` whose names satisfy `keep`: path relative to
+    * `root` → bytes. */
+  private def filesUnder(root: java.nio.file.Path,
+      keep: String => Boolean): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => java.nio.file.Files.isRegularFile(p) &&
+        keep(p.getFileName.toString))
+      .map(p => root.relativize(p).toString ->
+        java.nio.file.Files.readAllBytes(p).toSeq)
+      .toMap
   }
 
   /** The Markdown files under `out/md`: file name → bytes. */
@@ -285,26 +302,31 @@ class MainAppSpec extends AnyFunSuite {
   }
 
   test("job counts: parse --resume and chain keep their folded passes") {
-    val (base, grown) = (rawCorpus(40), rawCorpus(42))
-    val out = java.nio.file.Files.createTempDirectory("graft-jobs")
-    assert(Main.run(Array("parse", "--input", base,
-      "--outdir", out.toString)) === 0)
-    val resume = jobsOf {
-      val report = stdoutOf {
-        assert(Main.run(Array("parse", "--input", grown,
-          "--outdir", out.toString, "--resume")) === 0)
+    // JSONL and a JSON array parse to the same conversation rows, so
+    // they start the same jobs
+    Seq(false, true).foreach { array =>
+      val (base, grown) = (rawCorpus(40, array), rawCorpus(42, array))
+      val out = java.nio.file.Files.createTempDirectory("graft-jobs")
+      assert(Main.run(Array("parse", "--input", base,
+        "--outdir", out.toString)) === 0)
+      val resume = jobsOf {
+        val report = stdoutOf {
+          assert(Main.run(Array("parse", "--input", grown,
+            "--outdir", out.toString, "--resume")) === 0)
+        }
+        assert(report.contains(""""skipped_threads":40,"""), report)
       }
-      assert(report.contains(""""skipped_threads":40,"""), report)
+      val chainOut =
+        java.nio.file.Files.createTempDirectory("graft-jobs-chain")
+      val chain = jobsOf {
+        assert(Main.run(Array("chain", "--input", base,
+          "--outdir", chainOut.toString)) === 0)
+      }
+      // resume 10, chain 9: a stray action (a `.count()`, a schemaless
+      // parquet read, a second stats aggregation, a hot-set detection
+      // scan or broadcast) adds at least one job
+      assert((resume, chain) === ((10, 9)), s"array=$array")
     }
-    val chainOut = java.nio.file.Files.createTempDirectory("graft-jobs-chain")
-    val chain = jobsOf {
-      assert(Main.run(Array("chain", "--input", base,
-        "--outdir", chainOut.toString)) === 0)
-    }
-    // resume 10, chain 9: a stray action (a `.count()`, a schemaless
-    // parquet read, a second stats aggregation, a hot-set detection scan
-    // or broadcast) adds at least one job
-    assert((resume, chain) === ((10, 9)))
   }
 
   test("container sniff: only an array or a lone `{` first line is multiLine") {
@@ -535,18 +557,20 @@ class MainAppSpec extends AnyFunSuite {
 
   test("hot conversation: salted from its row, no detection job") {
     import org.apache.spark.sql.functions._
-    val in = rawCorpus(40) // conv 0 has 400 turns, the others far fewer
+    // conv 0 has 400 turns, the others far fewer; JSONL and a JSON array
+    // both carry the flag on the conversation row
+    val inputs = Seq("jsonl" -> rawCorpus(40), "array" -> rawCorpus(40, true))
     val coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
     // without coalescing, each non-empty shuffle partition of the
     // routed write's (role, tool_sink, salt) exchange is one file per
     // sink directory
     spark.conf.set(coalesce, "false")
-    try {
+    try inputs.foreach { case (kind, in) =>
       def chainJobs(threshold: String) = {
         val out = java.nio.file.Files.createTempDirectory("graft-hot")
         val jobs = jobsOf {
           assert(Main.run(Array("chain", "--input", in, "--outdir",
-            out.toString, "--hot-threshold", threshold)) === 0)
+            out.toString, "--hot-threshold", threshold)) === 0, kind)
         }
         (jobs, out)
       }
@@ -563,17 +587,77 @@ class MainAppSpec extends AnyFunSuite {
         .agg(countDistinct("role", "tool_sink").as("n"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val mega = "conv-000000000"
-      assert(files(mega) >= 4L, s"hot conversation in ${files(mega)} files")
+      assert(files(mega) >= 4L,
+        s"$kind: hot conversation in ${files(mega)} files")
       // every other conversation: one file per sink it has rows in
       files.filterNot(_._1 == mega).foreach { case (c, n) =>
-        assert(n === sinks(c), s"$c spread over $n files")
+        assert(n === sinks(c), s"$kind: $c spread over $n files")
       }
       // the flag comes with the parsed rows: a run with no hot
       // conversation, and one that salts every conversation (threshold
       // 0 never ran detection), start the same number of jobs
-      assert(chainJobs("1000000")._1 === hotJobs)
-      assert(chainJobs("0")._1 === hotJobs)
+      assert(chainJobs("1000000")._1 === hotJobs, kind)
+      assert(chainJobs("0")._1 === hotJobs, kind)
     } finally spark.conf.unset(coalesce)
+  }
+
+  test("chain over a JSON array equals chain over the same JSONL") {
+    import org.apache.spark.sql.functions._
+    // the same synthesized conversations in both containers; conv 0
+    // (400 turns) is hot at this threshold
+    val outs = Seq(false, true).map { array =>
+      val in = rawCorpus(40, array)
+      val out = java.nio.file.Files.createTempDirectory("graft-container")
+      val report = stdoutOf {
+        assert(Main.run(Array("chain", "--input", in, "--outdir",
+          out.toString, "--hot-threshold", "100")) === 0, s"array=$array")
+      }
+      (out, report)
+    }
+    val Seq((jsonl, jsonlReport), (array, arrayReport)) = outs
+    assert(arrayReport === jsonlReport)
+    assert(jsonlReport.contains(""""threads":40,"""), jsonlReport)
+    def routed(out: java.nio.file.Path) =
+      new graft.table.SnapshotParquetTable(
+        out.resolve("openai/routed").toString).read(spark)
+        .select((graft.model.Schemas.messageColumns :+ "tool_sink")
+          .map(col): _*)
+    val (j, a) = (routed(jsonl), routed(array))
+    assert(j.count() > 400L)
+    assert(j.exceptAll(a).count() === 0L, "rows only in the JSONL run")
+    assert(a.exceptAll(j).count() === 0L, "rows only in the array run")
+    val parsed = (out: java.nio.file.Path) =>
+      filesUnder(out.resolve("openai"), _ == "parsed.jsonl")
+    assert(parsed(jsonl).size === 40)
+    assert(parsed(array) === parsed(jsonl))
+    assert(mdFiles(jsonl).size >= 40)
+    assert(mdFiles(array) === mdFiles(jsonl))
+  }
+
+  test("parse --input-format text: exact corrupt_lines, threads, messages") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-text-corrupt")
+    val in = java.nio.file.Files.createDirectory(dir.resolve("in"))
+    // a.txt: two good turns around two malformed headers (a ts that is
+    // not a number, a header with no role); b.txt: malformed only
+    java.nio.file.Files.writeString(in.resolve("a.txt"),
+      "### user 1000\nhello\n### user abc\nbad ts\n" +
+        "### 123\nno role\n### assistant 2000\nhi\n")
+    java.nio.file.Files.writeString(in.resolve("b.txt"), "### 123\nx\n")
+    val out = dir.resolve("out")
+    val report = stdoutOf {
+      assert(Main.run(Array("parse", "--input", in.toString,
+        "--input-format", "text", "--outdir", out.toString)) === 0)
+    }
+    assert(report.contains(""""threads":1,"messages":2,""" +
+      """"skipped_threads":0,"corrupt_lines":3}"""), report)
+    // message ids are positional over every turn, malformed ones too
+    val jsonl = java.nio.file.Files.readString(
+      out.resolve("openai/thread-a/parsed.jsonl"))
+    assert(jsonl.contains(""""message_id": "a-0", "parent_id": null,"""),
+      jsonl)
+    assert(jsonl.contains(""""message_id": "a-3", "parent_id": "a-2","""),
+      jsonl)
+    assert(!java.nio.file.Files.exists(out.resolve("openai/thread-b")))
   }
 
   test("Main.run leaves the embedding session's SQL confs as it found them") {
