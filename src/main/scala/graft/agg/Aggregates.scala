@@ -24,7 +24,12 @@ object Aggregates {
       .agg(count(lit(1)).as("n_rows"))
 
   /** Per-conversation thread stats = manifest index entries
-    * (reference: parser.py:276-278,329-337: count, ts_min, ts_max). */
+    * (reference: parser.py:276-278,329-337: count, ts_min, ts_max).
+    * No product entry point calls this (`Main`'s thread pass takes each
+    * entry from its conversation row, with no aggregation of message
+    * rows): perfbench's `TracedPipeline` compiles against it; remove it
+    * in the benchmark PR that realigns `TracedPipeline`. The registry's
+    * `q03_thread_stats` is `Queries.threadStats`, not this. */
   def threadStats(
       msgs: DataFrame,
       conv: String = "conversation_id",

@@ -27,6 +27,7 @@ object I18n {
       "cli.usage" -> "usage: graft.app.Main parse|export|chain ...",
       "cli.unknown_mode" -> "unknown mode: {mode}",
       "cli.opt.required" -> "--{name} required",
+      "cli.opt.invalid" -> "invalid --{name}: {value}",
       "cli.error.path" -> "[LP-IO-404] path not found: {detail}",
       "cli.error.permission" -> "[LP-IO-403] permission: {detail}",
       "cli.error.unexpected" -> "[LP-UNEXPECTED] {detail}",
@@ -42,6 +43,7 @@ object I18n {
       "cli.usage" -> "使い方: graft.app.Main parse|export|chain ...",
       "cli.unknown_mode" -> "不明なモード: {mode}",
       "cli.opt.required" -> "--{name} は必須です",
+      "cli.opt.invalid" -> "--{name} の値が不正です: {value}",
       "cli.error.path" -> "[LP-IO-404] パスが見つかりません: {detail}",
       "cli.error.permission" -> "[LP-IO-403] アクセス権限エラー: {detail}",
       "cli.error.unexpected" -> "[LP-UNEXPECTED] 予期しないエラー: {detail}",

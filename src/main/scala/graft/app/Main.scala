@@ -1,15 +1,17 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.time.ZoneId
+
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.agg.Aggregates
 import graft.export.Exporter
 import graft.lineage.Lineage
 import graft.model.Schemas
 import graft.parse.{ChatGptParser, FastTranscriptParser, GrokParser}
 import graft.route.Router
+import graft.util.AtomicFiles
 
 /** spark-submit entry point: `parse | export | chain` job modes
   * (reference CLI: cli.py:87-190; exit-code contract cli.py:431-439 —
@@ -29,26 +31,26 @@ object Main {
   private final class UsageError(msg: String) extends RuntimeException(msg)
 
   def main(args: Array[String]): Unit = {
-    val code =
-      try run(args)
-      catch {
-        case e: UsageError =>
-          System.err.println(e.getMessage)
-          2
-        case e: java.nio.file.NoSuchFileException =>
-          System.err.println(
-            I18n.msg("cli.error.path", "detail" -> e.getMessage))
-          2
-        case e: SecurityException =>
-          System.err.println(
-            I18n.msg("cli.error.permission", "detail" -> e.getMessage))
-          3
-        case e: Throwable =>
-          System.err.println(I18n.msg("cli.error.unexpected",
-            "detail" -> s"${e.getClass.getName}: ${e.getMessage}"))
-          99
-      }
+    val code = try run(args) catch { case e: Throwable => failure(e) }
     if (code != 0) sys.exit(code)
+  }
+
+  /** The exit code of a run that threw `e`; its message goes to stderr. */
+  private[graft] def failure(e: Throwable): Int = e match {
+    case e: UsageError =>
+      System.err.println(e.getMessage)
+      2
+    case e: java.nio.file.NoSuchFileException =>
+      System.err.println(I18n.msg("cli.error.path", "detail" -> e.getMessage))
+      2
+    case e: SecurityException =>
+      System.err.println(
+        I18n.msg("cli.error.permission", "detail" -> e.getMessage))
+      3
+    case e =>
+      System.err.println(I18n.msg("cli.error.unexpected",
+        "detail" -> s"${e.getClass.getName}: ${e.getMessage}"))
+      99
   }
 
   private def opt(args: Array[String], name: String): Option[String] =
@@ -109,20 +111,40 @@ object Main {
     val spark = session()
     spark.sparkContext.setLogLevel("WARN")
     withRunConfs(spark)(args.head match {
-      case "parse" => parseMode(spark, args).fold(identity, _ => 0)
-      case "export" => exportMode(spark, args)
+      case "parse" => parseMode(spark, args, None).fold(identity, _ => 0)
+      case "export" => exportMode(spark, args, exportConf(args))
       case "chain" =>
-        // one DAG: Markdown renders from the routed snapshot parse just
-        // committed, not from a re-listing and re-parse of the JSONL tree
-        // it also wrote (that tree is an output, and it is what
-        // --validate-schema checks)
-        parseMode(spark, args).fold(identity, routed =>
-          writeMarkdown(spark, args, exportOutdir(args), Some(routed),
+        // one DAG: the thread pass renders each thread's Markdown from
+        // the conversation row it writes the thread's JSONL from, not
+        // from a re-listing and re-parse of the JSONL tree (that tree is
+        // an output, and it is what --validate-schema checks)
+        val conf = exportConf(args)
+        parseMode(spark, args, Some(conf)).fold(identity, parts =>
+          exportReport(spark, args, parts,
             jsonlFiles(spark, req(args, "outdir"))))
       case other =>
         System.err.println(I18n.msg("cli.unknown_mode", "mode" -> other))
         2
     })
+  }
+
+  /** The export options, parsed on the driver before anything is
+    * written: a bad value exits 2, not after the parse has committed
+    * (or, for the zone, inside a render task). */
+  private final case class ExportConf(outdir: String, tz: ZoneId,
+      formatting: String, split: Exporter.SplitConf)
+
+  private def exportConf(args: Array[String]): ExportConf = {
+    def parsed[T](name: String, default: T)(parse: String => T): T =
+      opt(args, name).fold(default) { v =>
+        try parse(v) catch {
+          case scala.util.control.NonFatal(_) => throw new UsageError(
+            I18n.msg("cli.opt.invalid", "name" -> name, "value" -> v))
+        }
+      }
+    ExportConf(exportOutdir(args), parsed("tz", ZoneId.of("UTC"))(ZoneId.of),
+      opt(args, "formatting").getOrElse("light"),
+      parsed("split", Exporter.SplitConf.none)(Exporter.SplitConf.parse))
   }
 
   /** Path existence through the Hadoop FS of the path's scheme (local
@@ -132,14 +154,14 @@ object Main {
     path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)
   }
 
-  /** parse: raw export JSON → normalized messages → per-thread JSONL +
-    * routed (role, tool) snapshot sinks + distributed thread index +
-    * pointer manifest with per-partition lineage. Returns the committed
-    * routed snapshot (every thread of this run, resumed ones included),
-    * or the exit code when the input is missing.
+  /** parse: raw export JSON → conversation rows → routed (role, tool)
+    * snapshot sinks, then per-thread JSONL + distributed thread index
+    * (+ with `markdown`, chain's Markdown parts) + pointer manifest with
+    * per-partition lineage. Returns the number of Markdown parts
+    * written, or the exit code when the input is missing.
     */
-  def parseMode(spark: SparkSession, args: Array[String])
-      : Either[Int, DataFrame] = {
+  private def parseMode(spark: SparkSession, args: Array[String],
+      markdown: Option[ExportConf]): Either[Int, Long] = {
     import spark.implicits._
     val input = req(args, "input")
     val outdir = req(args, "outdir")
@@ -153,74 +175,105 @@ object Main {
     val hotThreshold = opt(args, "hot-threshold").map(_.toLong)
       .getOrElse(10000L) // ~ the reference's own max-thread-size model
 
-    // parse-failure counter rides the SAME scan via observe (an extra
-    // counting pass would re-parse all the raw input); the metric
-    // materializes with the routed write action below
-    // unique name: repeated parse runs in one session (chain, tests)
-    // must not collide on the listener registration
-    val obs = new org.apache.spark.sql.Observation(
-      "parse_metrics_" + java.util.UUID.randomUUID())
     // every container parses to the conversation row (provider_id,
     // conversation_id, messages), so its kept-turn count is on the row
-    // and the hot flag is set before the explode
-    val conv = opt(args, "input-format").getOrElse("json") match {
-      case "json" if !ChatGptParser.sniffMultiline(spark, input) =>
-        // JSONL: the codegen scanner, one conversation per line
-        FastTranscriptParser.conversations(
-          FastTranscriptParser.readLines(spark, input), provider, Some(obs))
-      case "json" =>
-        ChatGptParser.conversations(ChatGptParser.readRawMultiline(spark, input)
-          .observe(obs, ChatGptParser.corruptLines), provider)
-      case "text" =>
-        // plain-text transcript logs (grok wire format): one document
-        // per FILE, conv id = file stem; turns with malformed headers
-        // (null role/ts) are the text path's corrupt lines, warn-skipped
-        // like the JSON path
-        GrokParser.conversations(
-          spark.read.option("wholetext", "true").text(input)
-            .select(ChatGptParser.fileStem(input_file_name()).as("conv_id"),
-              col("value").as("raw")),
-          provider, obs)
-      case other => throw new UsageError(
-        I18n.msg("cli.parse.bad_format", "format" -> other))
-    }
-    val msgs = FastTranscriptParser.turns(
-      conv.withColumn("hot", size(col("messages")) >= hotThreshold))
+    // and the hot flag is set before the explode; with an observation,
+    // the same scan counts its corrupt lines
+    val conversations: Option[Observation] => DataFrame =
+      opt(args, "input-format").getOrElse("json") match {
+        case "json" if !ChatGptParser.sniffMultiline(spark, input) =>
+          // JSONL: the codegen scanner, one conversation per line
+          FastTranscriptParser.conversations(
+            FastTranscriptParser.readLines(spark, input), provider, _)
+        case "json" => obs =>
+          val raw = ChatGptParser.readRawMultiline(spark, input)
+          ChatGptParser.conversations(
+            obs.fold(raw)(raw.observe(_, ChatGptParser.corruptLines)),
+            provider)
+        case "text" =>
+          // plain-text transcript logs (grok wire format): one document
+          // per FILE, conv id = file stem; turns with malformed headers
+          // (null role/ts) are the text path's corrupt lines, warn-skipped
+          // like the JSON path
+          GrokParser.conversations(
+            spark.read.option("wholetext", "true").text(input)
+              .select(ChatGptParser.fileStem(input_file_name()).as("conv_id"),
+                col("value").as("raw")),
+            provider, _)
+        case other => throw new UsageError(
+          I18n.msg("cli.parse.bad_format", "format" -> other))
+      }
+    val msgs = FastTranscriptParser.turns(conversations(None)
+      .withColumn("hot", size(col("messages")) >= hotThreshold))
       .drop("turn_idx")
 
     val providerDir = s"$outdir/$provider"
     val manifestPath = s"$providerDir/manifest.json"
     val indexRoot = s"$providerDir/thread_index"
 
-    // ONE pass over the raw input for the parse → routed snapshot write
-    // itself. Every downstream stage reads the COLUMNAR routed table
-    // back, with its known schema (no inference job), instead of
-    // re-parsing raw input or caching the whole corpus in executor
-    // memory (a full-corpus .cache() at the 10^12-turn target is most
-    // of the cluster's RAM; parquet re-reads are pruned and cheap). The
-    // snapshot commit also means a crashed run leaves the previous
-    // routed tree readable and a --resume can never truncate unchanged
-    // threads (round-1 bug).
-    //
-    // Adaptive salting of hot conversations rides the same pass: the
-    // flag comes with the rows (see above), so no detection scan or
-    // join runs, first run or resume, whatever the container.
-    //
-    // Thread stats are aggregated ONCE, and that one pass is the
-    // thread-index write: on resume each row carries the previous
-    // index's count (left join), and `observe` on the write yields the
-    // run summary (threads, messages) and the resume skip count. The
-    // JSONL rewrite set is then derived from the small staged index,
-    // not from a second aggregation of the routed table. The index is
-    // STAGED (data written, pointer not swapped) and published only
-    // after the JSONL write, so a crash in between leaves the previous
-    // index current and the next --resume rewrites the same threads.
+    // Routed pass: ONE scan of the raw input for the parse → routed
+    // snapshot write. Adaptive salting of hot conversations rides it
+    // (the flag comes with the rows, see above), and no observation
+    // splits its codegen stage between the two explodes. The snapshot
+    // commit means a crashed run leaves the previous routed tree
+    // readable and a --resume can never truncate unchanged threads
+    // (round-1 bug).
+    val routedData =
+      Router.writeRoutedSinks(msgs, providerDir, hotColumn = Some("hot"))
+
+    // Thread pass: a second scan of the raw input (the conversation
+    // row is cheap to rebuild, a routed re-read would have to regroup
+    // message rows by conversation), ONE exchange of conversation rows
+    // keyed by conversation_id, sorted within each task so the rows of
+    // an id that several inputs share arrive adjacent and merge into one
+    // thread. The partition count is explicit: the stage's work is one
+    // file per thread, not bytes, and AQE would coalesce it into one
+    // serial task. On resume each row carries the previous index's count
+    // (left join, a conversation-sized join), and an unchanged thread's
+    // JSONL is skipped. Each task writes its threads' parsed.jsonl (and
+    // on chain every thread's Markdown parts) and yields the index rows
+    // that this same job writes, observing the run summary on the way.
+    // The index is STAGED (data written, pointer not swapped) and
+    // published only after that job, so a crash in between leaves the
+    // previous index current and the next --resume rewrites the same
+    // threads.
     val prevIndex =
       if (flag(args, "resume") && Lineage.threadIndexExists(spark, indexRoot))
         Some(Lineage.readThreadIndex(spark, indexRoot))
       else None
-    val routedData =
-      Router.writeRoutedSinks(msgs, providerDir, hotColumn = Some("hot"))
+    // unique names: repeated parse runs in one session (chain, tests)
+    // must not collide on the listener registration
+    val obs = new Observation("parse_metrics_" + java.util.UUID.randomUUID())
+    val keyed = conversations(Some(obs))
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("conversation_id"))
+    // sorted after the join: the optimizer drops a sort below a join,
+    // and a broadcast join keeps the partitioning but not an order
+    val withPrev = (prevIndex match {
+      case Some(prev) => keyed.join(prev.select(col("conversation_id"),
+        col("count").as("prev_count")), Seq("conversation_id"), "left")
+      case None => keyed.withColumn("prev_count", lit(null).cast(LongType))
+    }).sortWithinPartitions("conversation_id")
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val jsonlOut = AtomicFiles.writer(outdir, hadoopConf)
+    val mdOut = markdown.map(m => (m, AtomicFiles.writer(s"${m.outdir}/md",
+      hadoopConf)))
+    val threads = withPrev.as[ThreadRow]
+      .mapPartitions(rows => writeThreads(rows, jsonlOut, mdOut))
+    // thread index: distributed snapshot table — ALL threads (fixes the
+    // reference bug of not re-indexing skipped ones, parser.py:271-274);
+    // the driver holds only the bounded per-partition lineage + pointer
+    val indexObs = new Observation(
+      "index_metrics_" + java.util.UUID.randomUUID())
+    val index = new graft.table.SnapshotParquetTable(indexRoot)
+    val staged = index.stage(threads.observe(indexObs,
+      count(lit(1)).as("threads"),
+      sum(col("count")).as("messages"),
+      count(when(col("skipped"), 1)).as("skipped"),
+      sum(col("parts")).as("parts"))
+      .select(Lineage.threadEntrySchema.fieldNames.toIndexedSeq.map(col): _*))
+    index.publish(spark, staged)
+
     // `tool` itself is a regular column in the routed files; only
     // (role, tool_sink) are partition directories. A run that kept no
     // rows wrote no files, and reads back as an empty frame.
@@ -228,59 +281,82 @@ object Main {
       .schema(msgs.select(Schemas.messageColumns.map(col): _*).schema
         .add("tool_sink", StringType))
       .parquet(routedData)
-
-    val stats = Aggregates.threadStats(routed)
-    val withPrev = prevIndex match {
-      case Some(prev) => stats.join(prev.select(col("conversation_id"),
-        col("count").as("prev_count")), Seq("conversation_id"), "left")
-      case None => stats.withColumn("prev_count", lit(null).cast(LongType))
-    }
-    // thread index: distributed snapshot table — ALL threads (fixes the
-    // reference bug of not re-indexing skipped ones, parser.py:271-274);
-    // the driver holds only the bounded per-partition lineage + pointer
-    val indexObs = new org.apache.spark.sql.Observation(
-      "index_metrics_" + java.util.UUID.randomUUID())
-    val index = new graft.table.SnapshotParquetTable(indexRoot)
-    val staged = index.stage(Lineage.threadEntries(withPrev.observe(indexObs,
-      count(lit(1)).as("threads"),
-      sum(col("count")).as("messages"),
-      count(when(col("prev_count") === col("count"), 1)).as("skipped")))
-      .toDF())
-
-    // resume: conversations unchanged vs the previous thread index are
-    // skipped for the per-thread JSONL rewrite only. No broadcast
-    // hint — on a first resume after large drift `changed` is
-    // corpus-sized; AQE picks broadcast when it is actually small.
-    val toProcess = prevIndex match {
-      case Some(prev) =>
-        val current = spark.read.schema(Lineage.threadEntrySchema)
-          .parquet(staged.dataPath)
-        routed.join(Lineage.changedThreads(current, prev)
-          .select("conversation_id"), Seq("conversation_id"))
-      case None => routed
-    }
-    val typed = toProcess
-      .select(Schemas.messageColumns.map(col): _*)
-      .as[Schemas.Message]
-    Router.writeThreadJsonl(typed, outdir, provider)
-    index.publish(spark, staged)
-
     val partitions = Lineage.capturePartitions(routed).collect().toSeq
-    val threads = observed(indexObs, "threads")
+    val nThreads = observed(indexObs, "threads")
     val messages = observed(indexObs, "messages")
     val skipped = observed(indexObs, "skipped")
     val corrupt = observed(obs, "corrupt_lines")
-    Lineage.writeManifest(manifestPath, provider, threads,
+    Lineage.writeManifest(manifestPath, provider, nThreads,
       "thread_index", partitions, corruptLines = corrupt,
-      hadoopConf = spark.sessionState.newHadoopConf())
+      hadoopConf = hadoopConf)
 
-    println(s"""{"mode":"parse","threads":$threads,""" +
+    println(s"""{"mode":"parse","threads":$nThreads,""" +
       s""""messages":$messages,"skipped_threads":$skipped,""" +
       s""""corrupt_lines":$corrupt}""")
     // human summary on stderr, localized; stdout JSON stays stable
     System.err.println(I18n.msg("cli.parse.done",
-      "threads" -> threads, "messages" -> messages))
-    Right(routed)
+      "threads" -> nThreads, "messages" -> messages))
+    Right(observed(indexObs, "parts"))
+  }
+
+  /** A conversation row of the thread pass, with its previous index
+    * count on resume. */
+  final case class ThreadRow(
+      provider_id: String,
+      conversation_id: String,
+      messages: Seq[Schemas.ThreadMessage],
+      prev_count: Option[Long])
+
+  /** What the thread pass did with one thread: its index entry, whether
+    * its JSONL was skipped as unchanged, and its Markdown part count. */
+  final case class ThreadDone(
+      conversation_id: String,
+      count: Long,
+      ts_min: Long,
+      ts_max: Long,
+      skipped: Boolean,
+      parts: Int)
+
+  /** One thread pass task over rows sorted by conversation_id: merge
+    * the adjacent rows of each id into one thread, write its
+    * parsed.jsonl unless the previous index holds its count, render and
+    * write its Markdown parts when asked. A thread is one conversation
+    * row (or the few rows sharing its id), so a task holds one thread's
+    * messages at a time, not a group buffer. An id whose rows kept no
+    * message is no thread. */
+  private def writeThreads(rows: Iterator[ThreadRow],
+      jsonl: AtomicFiles.Writer,
+      markdown: Option[(ExportConf, AtomicFiles.Writer)])
+      : Iterator[ThreadDone] = {
+    val in = rows.buffered
+    def sameId(cid: String) = in.hasNext && in.head.conversation_id == cid
+    def nextThread(): ThreadRow = {
+      val first = in.next()
+      if (!sameId(first.conversation_id)) first
+      else {
+        val merged = first.messages.toBuffer
+        while (sameId(first.conversation_id)) merged ++= in.next().messages
+        first.copy(messages = merged.toSeq)
+      }
+    }
+    Iterator.continually(in).takeWhile(_.hasNext).map(_ => nextThread())
+      .filter(_.messages.nonEmpty).map { t =>
+        val thread = Schemas.Conversation(t.provider_id, t.conversation_id,
+          t.messages)
+        val count = t.messages.size.toLong
+        val skipped = t.prev_count.contains(count)
+        if (!skipped) jsonl.write(
+          s"${t.provider_id}/thread-${t.conversation_id}/parsed.jsonl",
+          Router.threadContent(thread))
+        val parts = markdown.fold(0) { case (conf, out) =>
+          val ps = Exporter.renderConversation(thread, conf.tz,
+            conf.formatting, conf.split)
+          ps.foreach(p => out.write(p.file_name, p.content))
+          ps.size
+        }
+        val ts = t.messages.map(_.ts)
+        ThreadDone(t.conversation_id, count, ts.min, ts.max, skipped, parts)
+      }
   }
 
   /** A Long metric of an observation whose action has run; 0 when it
@@ -292,9 +368,9 @@ object Main {
   }
 
   /** export: parsed JSONL tree → Markdown files (split-aware). */
-  def exportMode(spark: SparkSession, args: Array[String]): Int = {
+  private def exportMode(spark: SparkSession, args: Array[String],
+      conf: ExportConf): Int = {
     val root = req(args, "parsed-root")
-    val outdir = exportOutdir(args)
     if (!fsExists(spark, root)) {
       System.err.println(
         I18n.msg("cli.export.root_missing", "path" -> root))
@@ -304,14 +380,20 @@ object Main {
     // of zero paths throws path-not-found — that is a legitimate empty
     // export (parts:0, schema 0/0), not an exit-99 crash
     val files = jsonlFiles(spark, root)
-    val rows = if (files.isEmpty) None else Some(
-      spark.read.schema(jsonlSchema)
-        .option("encoding", "UTF-8")
-        .json(files: _*)
-        .filter(col("record_type") === "message")
-        .withColumn("model", col("meta.model"))
-        .drop("meta", "record_type"))
-    writeMarkdown(spark, args, outdir, rows, files)
+    // writeParts counts via an accumulator inside the single write pass
+    // (a separate parts.count() re-executed the whole render+pack
+    // pipeline — round-1 double render)
+    val nParts = if (files.isEmpty) 0L else Exporter.writeParts(
+      Exporter.exportThreads(
+        spark.read.schema(jsonlSchema)
+          .option("encoding", "UTF-8")
+          .json(files: _*)
+          .filter(col("record_type") === "message")
+          .withColumn("model", col("meta.model"))
+          .drop("meta", "record_type"),
+        conf.tz.getId, conf.formatting, conf.split),
+      s"${conf.outdir}/md")
+    exportReport(spark, args, nParts, files)
   }
 
   private def exportOutdir(args: Array[String]): String =
@@ -342,25 +424,10 @@ object Main {
       .map(_.getPath.toString.replaceAll("""([\\*?\[\]{}])""", """\\$1"""))
   }
 
-  /** The export tail shared by `export` and `chain`: render + pack the
-    * message rows (None = no threads), write the parts, optionally
-    * validate the JSONL files, report. Render only sorts and reads
-    * values, so rows with the same values give the same bytes whether
-    * they come from the JSONL tree or from the routed snapshot that
-    * tree was written from. */
-  private def writeMarkdown(spark: SparkSession, args: Array[String],
-      outdir: String, rows: Option[DataFrame], jsonl: => Seq[String]): Int = {
-    val tz = opt(args, "tz").getOrElse("UTC")
-    val formatting = opt(args, "formatting").getOrElse("light")
-    val split = opt(args, "split").map(Exporter.SplitConf.parse)
-      .getOrElse(Exporter.SplitConf.none)
-
-    // writeParts counts via an accumulator inside the single write pass
-    // (a separate parts.count() re-executed the whole render+pack
-    // pipeline — round-1 double render)
-    val nParts = rows.fold(0L)(r => Exporter.writeParts(
-      Exporter.exportThreads(r, tz, formatting, split), s"$outdir/md"))
-
+  /** The export report shared by `export` and `chain`: optionally
+    * validate the JSONL files, print the part count. */
+  private def exportReport(spark: SparkSession, args: Array[String],
+      nParts: Long, jsonl: => Seq[String]): Int = {
     // opt-in runtime JSON-Schema validation of the JSONL records as
     // written (reference: schema_validation.py is likewise opt-in); one
     // extra narrow text scan, only when requested

@@ -9,13 +9,16 @@ import org.apache.spark.sql.functions._
 /** Export stage: normalized messages → GFM Markdown with optional
   * splitting (reference: exporter.py:122-342).
   *
-  * Distribution model: one conversation = one group; rendering and the
-  * greedy split packer run per-group in `flatMapGroups` (the packer's
-  * decision depends on the running *rendered-byte* sum, so it cannot be
-  * a SQL window — SURVEY.md §2 E13). Threads are bounded (~10^4 turns
-  * by the reference's own model), so materializing one thread per task
-  * is safe; conversations themselves are unbounded in number and spread
-  * across the cluster.
+  * Distribution model: one conversation = one row; rendering and the
+  * greedy split packer run per conversation row (the packer's decision
+  * depends on the running *rendered-byte* sum, so it cannot be a SQL
+  * window — SURVEY.md §2 E13). `Main chain` renders the conversation
+  * rows its thread pass already holds ([[renderConversation]]);
+  * `export` regroups the JSONL tree's message rows into one row per
+  * conversation first ([[exportThreads]]). Threads are bounded (~10^4
+  * turns by the reference's own model), so one thread per row is safe;
+  * conversations themselves are unbounded in number and spread across
+  * the cluster.
   *
   * Determinism: the reference stamps `generated_at_utc: now()` into
   * split front matter (exporter.py:320-333) making output
@@ -269,30 +272,45 @@ object Exporter {
     }
   }
 
-  /** Distributed export: group by conversation, render + pack per
-    * group. Input needs columns: conversation_id, provider_id,
-    * message_id, parent_id, role, ts, text [, model]. */
+  /** The Markdown parts of one conversation row: the renderer `Main`'s
+    * thread pass calls (a routed message carries no model). */
+  def renderConversation(
+      c: graft.model.Schemas.Conversation,
+      tz: ZoneId,
+      formatting: String,
+      split: SplitConf): Seq[MdPart] =
+    renderThread(c.conversation_id, c.messages.map(m => ExportMsg(
+      c.conversation_id, c.provider_id, m.message_id, m.parent_id, m.role,
+      Some(m.ts), m.text, None)), tz, formatting, split, pinnedGeneratedAt)
+
+  private val pinnedGeneratedAt = "1970-01-01T00:00:00+00:00"
+
+  /** Distributed export of message rows: one conversation row per
+    * conversation_id (`groupBy` + `sort_array(collect_list)`), each
+    * rendered + packed by [[renderThread]]. Input needs columns:
+    * conversation_id, provider_id, message_id, parent_id, role, ts,
+    * text [, model]. */
   def exportThreads(
       msgs: DataFrame,
       tz: String = "UTC",
       formatting: String = "light",
       split: SplitConf = SplitConf.none,
-      generatedAtUtc: String = "1970-01-01T00:00:00+00:00")
+      generatedAtUtc: String = pinnedGeneratedAt)
       : Dataset[MdPart] = {
     val spark = msgs.sparkSession
     import spark.implicits._
     val withModel =
       if (msgs.columns.contains("model")) msgs
       else msgs.withColumn("model", lit(null).cast("string"))
-    val zoneId = tz
+    val fields = Seq("conversation_id", "provider_id", "message_id",
+      "parent_id", "role", "ts", "text", "model")
     withModel
-      .select("conversation_id", "provider_id", "message_id", "parent_id",
-        "role", "ts", "text", "model")
-      .as[ExportMsg]
-      .groupByKey(_.conversation_id)
-      .flatMapGroups { (cid, it) =>
-        renderThread(cid, it.toSeq, ZoneId.of(zoneId), formatting, split,
-          generatedAtUtc).iterator
+      .groupBy(col("conversation_id"))
+      .agg(sort_array(collect_list(struct(fields.map(col): _*))))
+      .as[(String, Seq[ExportMsg])]
+      .flatMap { case (cid, thread) =>
+        renderThread(cid, thread, ZoneId.of(tz), formatting, split,
+          generatedAtUtc)
       }
   }
 

@@ -62,20 +62,6 @@ object Lineage {
     }
   }
 
-  /** Thread index entries from the aggregate stage
-    * (Aggregates.threadStats output). */
-  def threadEntries(threadStats: DataFrame): Dataset[ThreadEntry] = {
-    val spark = threadStats.sparkSession
-    import spark.implicits._
-    threadStats
-      .select(
-        col("conversation_id"),
-        col("count").cast("long"),
-        col("ts_min").cast("long"),
-        col("ts_max").cast("long"))
-      .as[ThreadEntry]
-  }
-
   /** Write the thread index as a DISTRIBUTED snapshot table (one row
     * per conversation, parquet part files, atomic pointer commit).
     * The round-1 shape collected every ThreadEntry onto the driver to
@@ -84,11 +70,15 @@ object Lineage {
     * constant-size pointer. Returns the committed snapshot.
     * No product entry point calls this (`Main` stages and publishes the
     * index itself): perfbench's `TracedPipeline` compiles against it;
-    * remove it in the benchmark PR that realigns `TracedPipeline`. */
+    * remove it in the benchmark PR that realigns `TracedPipeline`.
+    * `threadStats` is Aggregates.threadStats output. */
   def writeThreadIndex(threadStats: DataFrame,
       tableRoot: String): graft.table.Snapshot =
-    new graft.table.SnapshotParquetTable(tableRoot)
-      .commit(threadEntries(threadStats).toDF())
+    new graft.table.SnapshotParquetTable(tableRoot).commit(threadStats.select(
+      col("conversation_id"),
+      col("count").cast("long"),
+      col("ts_min").cast("long"),
+      col("ts_max").cast("long")))
 
   /** The thread index's row schema: reads that pass it run no
     * schema-inference job. */
@@ -145,6 +135,10 @@ object Lineage {
     * 10^8 rows at the design target, far past broadcast limits — so the
     * join must be allowed to shuffle; AQE still broadcasts it when the
     * index is actually small.
+    * No product entry point calls this (`Main`'s thread pass left-joins
+    * the previous index onto its conversation rows and skips unchanged
+    * threads per row): perfbench's `TracedPipeline` compiles against
+    * it; remove it in the benchmark PR that realigns `TracedPipeline`.
     */
   def changedThreads(
       currentStats: DataFrame,

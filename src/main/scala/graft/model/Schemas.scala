@@ -36,6 +36,25 @@ object Schemas {
       parts: Seq[String],
       text: String)
 
+  /** One message of a conversation row (ExtractConversation.messageType):
+    * a [[Message]] without the ids its row already holds. */
+  final case class ThreadMessage(
+      message_id: String,
+      parent_id: Option[String],
+      role: String,
+      tool: Option[String],
+      ts: Long,
+      content_type: String,
+      parts: Seq[String],
+      text: String)
+
+  /** The conversation row every container parses to, messages in
+    * (ts, message_id) order (rows merged under one id are not). */
+  final case class Conversation(
+      provider_id: String,
+      conversation_id: String,
+      messages: Seq[ThreadMessage])
+
   // ---------------------------------------------------------------------
   // Raw ChatGPT-export read schema (fixed contract; reference:
   // providers/openai/adapter.py:15-23 expected_top_keys and the fixture

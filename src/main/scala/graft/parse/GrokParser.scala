@@ -111,15 +111,16 @@ object GrokParser {
     * [[FastTranscriptParser.conversations]] yields for JSONL, so text
     * feeds the SAME route/index/export stages. Turns with a malformed
     * header (null role/ts: the A10 null-ts drop) are dropped, and
-    * counted on `obs` as `corrupt_lines`. Message ids are positional
-    * (`conv-idx`, dropped turns counted), parent_id the PREVIOUS index:
-    * text transcripts are already linear, there is no DAG to walk. */
+    * counted on `obs`, when given, as `corrupt_lines`. Message ids are
+    * positional (`conv-idx`, dropped turns counted), parent_id the
+    * PREVIOUS index: text transcripts are already linear, there is no
+    * DAG to walk. */
   def conversations(raw: DataFrame, provider: String,
-      obs: Observation): DataFrame = {
+      obs: Option[Observation]): DataFrame = {
     val malformed = (t: Column) => t("role").isNull || t("ts").isNull
-    val counted = raw.select(col("conv_id"), documentTurns.as("turns"))
-      .observe(obs,
-        sum(size(filter(col("turns"), malformed))).as("corrupt_lines"))
+    val docs = raw.select(col("conv_id"), documentTurns.as("turns"))
+    val counted = obs.fold(docs)(docs.observe(_,
+      sum(size(filter(col("turns"), malformed))).as("corrupt_lines")))
     val id = (i: Column) => concat(col("conv_id"), lit("-"), i)
     val keyed = filter(transform(col("turns"), (t, i) => struct(
         t("ts").as("ts"), id(i).as("message_id"),

@@ -3,7 +3,7 @@ package graft.route
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-import graft.model.Schemas.Message
+import graft.model.Schemas.{Conversation, Message, ThreadMessage}
 import graft.util.PyJson
 
 /** Router stage: fan parsed turns out to per-role / per-tool sinks and
@@ -20,6 +20,11 @@ import graft.util.PyJson
   *    re-sort by the window key anyway).
   *  - Partition pruning: downstream per-sink queries
   *    (`WHERE role='tool' AND tool='python'`) scan only their directory.
+  *  - Per-thread JSONL is a function of one conversation row
+  *    ([[threadContent]]). `Main` renders it in its thread pass straight
+  *    from the parsed conversation rows, so the product path never
+  *    regroups message rows; [[threadJsonl]] regroups message rows into
+  *    that row shape for callers that hold messages (perfbench, tests).
   */
 object Router {
 
@@ -114,14 +119,15 @@ object Router {
       .commit(distributed, Seq("role", "tool_sink")).dataPath
   }
 
-  /** Render one message as the reference's exact JSONL byte format
-    * (Python json.dumps ensure_ascii=True, field order of
+  /** Render one message of thread `cid` as the reference's exact JSONL
+    * byte format (Python json.dumps ensure_ascii=True, field order of
     * parser.py:316-321 — note the reference line has NO tool field).
     */
-  def messageJsonLine(m: Message): String = PyJson.obj(
+  def messageJsonLine(provider: String, cid: String,
+      m: ThreadMessage): String = PyJson.obj(
     "record_type" -> PyJson.str("message"),
-    "provider_id" -> PyJson.str(m.provider_id),
-    "conversation_id" -> PyJson.str(m.conversation_id),
+    "provider_id" -> PyJson.str(provider),
+    "conversation_id" -> PyJson.str(cid),
     "message_id" -> PyJson.str(m.message_id),
     "parent_id" -> m.parent_id.map(PyJson.str).getOrElse("null"),
     "role" -> PyJson.str(m.role),
@@ -138,22 +144,49 @@ object Router {
       "conversation_id" -> PyJson.str(cid),
       "message_count" -> count.toString)
 
-  /** Per-thread JSONL content: header line + messages sorted by
+  /** One thread's parsed.jsonl content: header line + messages sorted by
     * (ts, message_id), LF endings — byte-equal to the reference's
-    * parsed.jsonl. Returned as (conversation_id, content) so callers
-    * pick the sink (files, table, test assert).
-    */
+    * parsed.jsonl. A conversation row is already in that order, so the
+    * stable sort runs only for rows merged under one id (or ordered by
+    * another string collation). */
+  def threadContent(c: Conversation): String = {
+    val ordered =
+      if (c.messages.lazyZip(c.messages.drop(1)).forall(inOrder)) c.messages
+      else c.messages.sortBy(m => (m.ts, m.message_id))
+    val sb = new StringBuilder
+    sb.append(threadHeaderLine(c.provider_id, c.conversation_id,
+      ordered.size)).append('\n')
+    ordered.foreach(m => sb.append(
+      messageJsonLine(c.provider_id, c.conversation_id, m)).append('\n'))
+    sb.toString
+  }
+
+  private def inOrder(a: ThreadMessage, b: ThreadMessage): Boolean =
+    a.ts < b.ts || (a.ts == b.ts && a.message_id.compareTo(b.message_id) <= 0)
+
+  /** Message rows → one conversation row per conversation_id, messages
+    * (ts, message_id)-sorted; the provider is its first message's. */
+  private def conversationRows(msgs: DataFrame): DataFrame = {
+    val fields = graft.functions.ExtractConversation.messageType.fieldNames
+    val keyed = sort_array(collect_list(struct(
+      (Seq("ts", "message_id", "provider_id") ++
+        fields.filterNot(Set("ts", "message_id"))).map(col): _*)))
+    msgs.groupBy(col("conversation_id")).agg(keyed.as("m")).select(
+      col("m")(0)("provider_id").as("provider_id"), col("conversation_id"),
+      transform(col("m"),
+        k => struct(fields.map(f => k(f).as(f)).toIndexedSeq: _*))
+        .as("messages"))
+  }
+
+  /** Per-thread JSONL content as (conversation_id, content), so callers
+    * pick the sink (files, table, test assert): message rows regrouped
+    * by [[conversationRows]], rendered by [[threadContent]], the
+    * renderer `Main`'s thread pass calls on its conversation rows. */
   def threadJsonl(msgs: Dataset[Message]): Dataset[(String, String)] = {
     val spark = msgs.sparkSession
     import spark.implicits._
-    msgs.groupByKey(_.conversation_id).mapGroups { (cid, it) =>
-      val sorted = it.toVector.sortBy(m => (m.ts, m.message_id))
-      val sb = new StringBuilder
-      val provider = sorted.headOption.map(_.provider_id).getOrElse("openai")
-      sb.append(threadHeaderLine(provider, cid, sorted.size)).append('\n')
-      sorted.foreach(m => sb.append(messageJsonLine(m)).append('\n'))
-      (cid, sb.toString)
-    }
+    conversationRows(msgs.toDF()).as[Conversation]
+      .map(c => (c.conversation_id, threadContent(c)))
   }
 
   /** Write per-thread parsed.jsonl files in the reference layout under
@@ -161,7 +194,10 @@ object Router {
     * (tmp → rename, like parser.py:286,324; [[graft.util.AtomicFiles]],
     * so file:/hdfs:/s3a: all work); one file per conversation, written
     * from whichever task owns the group — no driver collect.
-    */
+    * No product entry point calls this (`Main`'s thread pass writes
+    * these files from the conversation rows, with no message-row
+    * regroup): perfbench's `TracedPipeline` compiles against it; remove
+    * it in the benchmark PR that realigns `TracedPipeline`. */
   def writeThreadJsonl(
       msgs: Dataset[Message],
       outDir: String,

@@ -111,7 +111,7 @@ class FastPathSpec extends AnyFunSuite {
       ("array, normalize", "sort_array(", ChatGptParser.normalize(
         ChatGptParser.readRawMultiline(spark, s"$tmp/raw.json"))),
       ("text, Main", "sort_array(", mainTurns(
-        GrokParser.conversations(docs, "grok", new Observation()))),
+        GrokParser.conversations(docs, "grok", Some(new Observation())))),
       ("text, parse", "(?m)^>(>*### )", GrokParser.parse(docs)))
     plans.foreach { case (name, expr, df) =>
       assert(occurrences(df, expr) === 1, s"$name:\n" +

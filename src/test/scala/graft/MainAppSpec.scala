@@ -132,9 +132,10 @@ class MainAppSpec extends AnyFunSuite {
     java.nio.file.Files.createDirectories(staleDir)
     java.nio.file.Files.writeString(staleDir.resolve("parsed.jsonl"),
       graft.route.Router.threadHeaderLine("openai", staleCid, 1) + "\n" +
-        graft.route.Router.messageJsonLine(graft.model.Schemas.Message(
-          "openai", staleCid, "m-1", Some("m-0"), "user", None,
-          1700000000000L, "text", Seq("left over"), "left over")) + "\n")
+        graft.route.Router.messageJsonLine("openai", staleCid,
+          graft.model.Schemas.ThreadMessage("m-1", Some("m-0"), "user",
+            None, 1700000000000L, "text", Seq("left over"), "left over")) +
+        "\n")
     val staleMd = s"thread-$staleCid.md"
 
     assert(Main.run(Array("chain", "--input", rawCorpus(20),
@@ -322,11 +323,169 @@ class MainAppSpec extends AnyFunSuite {
         assert(Main.run(Array("chain", "--input", base,
           "--outdir", chainOut.toString)) === 0)
       }
-      // resume 10, chain 9: a stray action (a `.count()`, a schemaless
-      // parquet read, a second stats aggregation, a hot-set detection
+      // chain 5: the routed write (2: its exchange's map stage, the
+      // write), the thread pass (2: its exchange of conversation rows,
+      // the write of JSONL, Markdown and staged index), capturePartitions
+      // (1); resume 6 adds the previous index's side of the join. A stray
+      // action (a `.count()`, a schemaless parquet read, a stats
+      // aggregation or regroup of the routed rows, a hot-set detection
       // scan or broadcast) adds at least one job
-      assert((resume, chain) === ((10, 9)), s"array=$array")
+      assert((resume, chain) === ((6, 5)), s"array=$array")
     }
+  }
+
+  /** The executed plans of the queries `body` runs: (action, plan). */
+  private def plansOf(body: => Unit)
+      : Seq[(String, org.apache.spark.sql.execution.SparkPlan)] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, org.apache.spark.sql.execution.SparkPlan)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(action: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(action -> qe.executedPlan)
+      override def onFailure(action: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
+  }
+
+  test("routed pass observes nothing; thread pass: one conversation exchange") {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // AdaptiveSparkPlanHelper's traversal descends into adaptive plans
+    // and their query stages
+    object Nodes extends adaptive.AdaptiveSparkPlanHelper
+    def writesTo(dir: String)(p: (String, SparkPlan)) = Nodes.collect(p._2) {
+      case command.DataWritingCommandExec(
+          w: datasources.InsertIntoHadoopFsRelationCommand, _) => w
+    }.exists(_.outputPath.toString.contains(s"/openai/$dir/snap-"))
+    def scans(plan: SparkPlan, dir: String) = Nodes.collect(plan) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(_.toString.contains(dir)) => s
+    }
+    val (base, grown) = (rawCorpus(40), rawCorpus(42))
+    val out = java.nio.file.Files.createTempDirectory("graft-plans")
+    Seq(
+      "chain" -> Array("chain", "--input", base, "--outdir", out.toString),
+      "resume" -> Array("parse", "--input", grown, "--outdir", out.toString,
+        "--resume")).foreach { case (run, args) =>
+      val plans = plansOf(assert(Main.run(args) === 0, run))
+      val Seq(routedWrite) = plans.filter(writesTo("routed")).map(_._2)
+      val Seq(threadPass) = plans.filter(writesTo("thread_index")).map(_._2)
+      // no CollectMetrics between the scanner's explode and the explode
+      // into turns: the routed pass's codegen stage stays whole
+      assert(Nodes.collect(routedWrite) { case c: CollectMetricsExec => c }
+        .isEmpty, s"$run:\n$routedWrite")
+      // the corrupt-line count rides the thread pass's scan, once
+      val corrupt = plans.flatMap(p => Nodes.collect(p._2) {
+        case c: CollectMetricsExec if c.metricExpressions.exists(
+          _.name == "corrupt_lines") => c
+      })
+      assert(corrupt.size === 1, s"$run:\n$threadPass")
+      assert(Nodes.collect(threadPass) { case c: CollectMetricsExec
+        if c.metricExpressions.exists(_.name == "corrupt_lines") => c
+      }.size === 1, s"$run:\n$threadPass")
+      val conversationExchanges = Nodes.collect(threadPass) {
+        case e: ShuffleExchangeExec
+            if e.output.exists(_.name == "messages") => e
+      }
+      assert(conversationExchanges.size === 1, s"$run:\n$threadPass")
+      // the routed snapshot is read back by capturePartitions only
+      val routedReaders = plans.filter(p => scans(p._2, "/routed/").nonEmpty)
+      assert(routedReaders.map(_._1) === Seq("collect"), s"$run: " +
+        routedReaders.map(_._2).mkString("\n"))
+    }
+  }
+
+  test("a bad --split or --tz exits 2 before anything is written") {
+    val in = rawCorpus(3)
+    Seq(Seq("--split", "bogus"), Seq("--split", "count=x"),
+        Seq("--tz", "Bad/Zone")).foreach { opts =>
+      val out = java.nio.file.Files.createTempDirectory("graft-bad-opt")
+      val chain = intercept[RuntimeException](Main.run(
+        Array("chain", "--input", in, "--outdir", out.toString) ++ opts))
+      assert(Main.failure(chain) === 2, opts)
+      assert(chain.getMessage.contains(opts.head), opts)
+      Seq("openai/routed", "openai/thread_index", "md").foreach { d =>
+        assert(!java.nio.file.Files.exists(out.resolve(d)), s"$d $opts")
+      }
+      assert(filesUnder(out, _ == "parsed.jsonl").isEmpty, opts)
+      // export checks them before it renders, too
+      assert(Main.run(Array("parse", "--input", in, "--outdir",
+        out.toString)) === 0)
+      val export = intercept[RuntimeException](Main.run(Array("export",
+        "--parsed-root", out.toString, "--outdir", out.toString) ++ opts))
+      assert(Main.failure(export) === 2, opts)
+      assert(!java.nio.file.Files.exists(out.resolve("md")), opts)
+    }
+  }
+
+  test("one thread per conversation_id across input files and tasks") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    def node(id: String, ts: String) =
+      s""""$id": {"id": "$id", "message": {"id": "$id", "author": """ +
+        s"""{"role": "user"}, "create_time": $ts, "content": """ +
+        s"""{"parts": ["text $id"]}}}"""
+    def conv(cid: Option[String], nodes: String*) =
+      cid.fold("{")(c => s"""{"conversation_id": "$c", """) +
+        s""""mapping": {${nodes.mkString(", ")}}}\n"""
+    val dir = java.nio.file.Files.createTempDirectory("graft-dup-ids")
+    val in = java.nio.file.Files.createDirectory(dir.resolve("in"))
+    // `dup` in both files; `m2b` sorts before `m3` at the same ts. The
+    // two id-less conversations of a.jsonl both take the stem id `a`
+    java.nio.file.Files.writeString(in.resolve("a.jsonl"),
+      conv(Some("dup"), node("m3", "3.0"), node("m1", "1.0")) +
+        conv(None, node("s2", "5.0")) + conv(None, node("s1", "4.0")))
+    java.nio.file.Files.writeString(in.resolve("b.jsonl"),
+      conv(Some("dup"), node("m2b", "3.0"), node("m2", "2.0")))
+    assert(spark.read.text(in.toString).rdd.getNumPartitions === 2,
+      "each file must be its own input task")
+    val out = dir.resolve("out")
+    def chain(extra: String*) = stdoutOf {
+      assert(Main.run(Array("chain", "--input", in.toString,
+        "--outdir", out.toString) ++ extra) === 0)
+    }
+    val first = chain()
+    assert(first.contains(
+      """"threads":2,"messages":6,"skipped_threads":0,"""), first)
+    val want =
+      Map("dup" -> Seq("m1", "m2", "m2b", "m3"), "a" -> Seq("s1", "s2"))
+    val routed = new graft.table.SnapshotParquetTable(
+      out.resolve("openai/routed").toString).read(spark)
+      .select(graft.model.Schemas.messageColumns.map(col): _*)
+      .as[graft.model.Schemas.Message]
+    val regrouped = graft.route.Router.threadJsonl(routed).collect().toMap
+    want.foreach { case (cid, ids) =>
+      val jsonl = java.nio.file.Files.readString(
+        out.resolve(s"openai/thread-$cid/parsed.jsonl"))
+      val lines = jsonl.linesIterator.toSeq
+      assert(lines.head.contains(s""""message_count": ${ids.size}}"""), jsonl)
+      assert(lines.tail.map(_.split("\"message_id\": \"")(1)
+        .takeWhile(_ != '"')) === ids, jsonl)
+      // the same bytes as the message-row regroup of the routed rows
+      assert(jsonl === regrouped(cid), cid)
+    }
+    val idx = graft.lineage.Lineage.readThreadIndex(spark,
+      out.resolve("openai/thread_index").toString)
+      .select("conversation_id", "count").as[(String, Long)].collect()
+    assert(idx.toSeq.sorted === Seq("a" -> 2L, "dup" -> 4L))
+    val md = mdFiles(out)
+    assert(md.keySet === Set("thread-a.md", "thread-dup.md"))
+    assert(new String(md("thread-dup.md").toArray, "UTF-8")
+      .contains("\nmessages: 4\n"))
+    val resumed = chain("--resume")
+    assert(resumed.contains(
+      """"threads":2,"messages":6,"skipped_threads":2,"""), resumed)
+    assert(mdFiles(out) === md)
   }
 
   test("container sniff: only an array or a lone `{` first line is multiLine") {
