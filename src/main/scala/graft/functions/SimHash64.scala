@@ -82,10 +82,4 @@ object SimHash64 {
     }
     sig
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64",
-      (exprs: Seq[Expression]) => SimHash64(exprs.head),
-      "built-in")
 }

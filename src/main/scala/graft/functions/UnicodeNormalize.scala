@@ -48,21 +48,6 @@ case class UnicodeNormalize(child: Expression, form: String)
 
 object UnicodeNormalize {
 
-  /** SQL surface: `unicode_normalize(col, 'NFC')` (form optional,
-    * default NFC) — usable from spark.sql like the other custom
-    * expressions. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "unicode_normalize",
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(c) => UnicodeNormalize(c, "NFC")
-        case Seq(c, f) => UnicodeNormalize(c,
-          f.eval().asInstanceOf[UTF8String].toString)
-        case _ => throw new IllegalArgumentException(
-          "unicode_normalize(col[, form])")
-      },
-      "built-in")
-
   /** Java-callable entry for generated code. */
   def compute(s: UTF8String, form: String): UTF8String = {
     val f = java.text.Normalizer.Form.valueOf(form)

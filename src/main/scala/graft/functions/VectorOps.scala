@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -83,15 +82,4 @@ case class VecNorm2(child: Expression) extends UnaryExpression {
       newChild: Expression): VecNorm2 = copy(child = newChild)
 
   override def prettyName: String = "vec_norm2"
-}
-
-object VectorOps {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      (e: Seq[Expression]) => VecDot(e.head, e(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_norm2",
-      (e: Seq[Expression]) => VecNorm2(e.head), "built-in")
-  }
 }

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -97,10 +96,4 @@ object WordShingles {
     while (it.hasNext) { out(n) = UTF8String.fromString(it.next()); n += 1 }
     new GenericArrayData(out)
   }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles",
-      (e: Seq[Expression]) => WordShingles(e.head, 3),
-      "built-in")
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 
 /** Column-level entry points for the custom Catalyst expressions —
-  * usable directly in DataFrame code (no registry indirection); the
-  * per-expression `register` methods additionally expose them to SQL.
+  * usable directly in DataFrame code (no registry indirection). None is
+  * registered as a SQL function: no entry point runs SQL text over them.
   */
 package object functions {
 

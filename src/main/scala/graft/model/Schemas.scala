@@ -6,19 +6,9 @@ import org.apache.spark.sql.types._
   *
   * Mirrors the reference's normalized-message contract
   * (reference: src/llm_logparser/core/schemas/message.schema.json:5-40 and
-  * docs/output-contract.md:156-227) re-expressed as Spark types, plus the
-  * north-rule transcript row (conv_id, turn_idx, role, text, tool, ts).
+  * docs/output-contract.md:156-227) re-expressed as Spark types.
   */
 object Schemas {
-
-  /** North-rule canonical transcript row (BASELINE.json input_hint). */
-  final case class Turn(
-      conv_id: String,
-      turn_idx: Int,
-      role: String,
-      text: String,
-      tool: Option[String],
-      ts: java.sql.Timestamp)
 
   /** Normalized message — the parse-stage output contract.
     * `ts` is integer epoch-milliseconds (reference: adapter.py:166-172);

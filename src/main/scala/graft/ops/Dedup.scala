@@ -85,10 +85,9 @@ object Dedup {
     * history shuffle... but note Spark broadcasts only the LEFT side
     * of a left-anti when the left is small via a plan rewrite — in
     * practice the SMJ anti on a bucketed history table reads
-    * pre-partitioned and shuffles ONLY the batch. History maintenance
-    * is EXECUTED by [[incrementalIngest]]: each run's accepted
-    * fingerprints are committed back to an append-only
-    * [[graft.table.FingerprintStore]] (one bounded write per batch).
+    * pre-partitioned and shuffles ONLY the batch. Registry query
+    * q38_incremental_dedup runs it; the caller owns the history table
+    * and appends each batch's accepted fingerprints to it.
     */
   def incrementalNew(batch: DataFrame, historyFps: DataFrame): DataFrame = {
     val withFp = batch.select(col("doc_id"),
@@ -97,29 +96,6 @@ object Dedup {
       .groupBy("fp").agg(min(col("doc_id")).as("doc_id"))
       .join(historyFps.select("fp"), Seq("fp"), "left_anti")
       .select(col("doc_id"), col("fp"))
-  }
-
-  /** The steady-state incremental dedup LOOP, executed end to end:
-    * accept the batch's new docs against the persisted fingerprint
-    * history, then commit exactly those accepted fingerprints back to
-    * the store — so the next batch's anti-join sees them. This is the
-    * cross-run analogue of the parse stage's manifest skip-cache.
-    *
-    * The accepted set is eagerly materialized (localCheckpoint) BEFORE
-    * the append: it is derived from a lazy anti-join against
-    * store.read(), and materializing it after the append would make
-    * the join observe its own output and drop everything. Cost is
-    * bounded by the batch, and the checkpoint also hands the caller a
-    * frame whose lineage no longer references store state that the
-    * append just advanced past.
-    */
-  def incrementalIngest(batch: DataFrame,
-      store: graft.table.FingerprintStore): DataFrame = {
-    val spark = batch.sparkSession
-    val accepted =
-      incrementalNew(batch, store.read(spark)).localCheckpoint(true)
-    store.append(accepted.select("fp"))
-    accepted
   }
 
   /** All-pairs word-shingle Jaccard ≥ minJaccard. Exact (no sketch):

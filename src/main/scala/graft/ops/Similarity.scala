@@ -77,89 +77,6 @@ object Similarity {
     ranked(pairs, k).orderBy(col("query_id"), col("rank"))
   }
 
-  /** TRAINED IVF: the production form of [[ivfTopK]] — instead of
-    * assuming a pre-existing cell column, the coarse quantizer is a
-    * k-means model (Spark MLlib, deterministic seed): centroids train
-    * distributed, every vector assigns to its nearest centroid (that
-    * assignment is the partition-pruning key a real deployment writes
-    * with), and each query probes its nProbe nearest cells —
-    * recall/cost dial: nProbe = nCells degrades gracefully to exact
-    * search (asserted equal to [[bruteForceTopK]] in OpsSpec), small
-    * nProbe touches ~nProbe/nCells of the corpus.
-    *
-    * Scale: k-means (maxIter passes + k-means|| init) must NOT scan
-    * the full corpus — a coarse quantizer needs only cluster geometry,
-    * so training runs on a deterministic hash sample (trainFraction;
-    * md5-bucket, retry-stable) and its cost is bounded by the sample,
-    * not the corpus. The centroid table is nCells rows — broadcast
-    * everywhere; assignment (model.transform) IS a full-corpus narrow
-    * map, so the assigned table is persisted — both the query and the
-    * candidate side consume it, and without the persist the transform
-    * would re-run per action. Not a `queries()` entry — MLlib's
-    * k-means|| init is engine-private; the ORACLE-CHECKED trained-IVF
-    * lifecycle is [[ivfKmeansTopK]] (q74), whose deterministic Lloyd
-    * quantizer ([[kmeansLloyd]], q71) reproduces round-for-round in
-    * DuckDB. This MLlib variant stays as the sampled-training
-    * (k-means||) production alternative, covered by the
-    * nProbe=nCells == brute-force equality and measured-recall
-    * asserts.
-    */
-  def ivfTrainedTopK(
-      embeddings: DataFrame, k: Int = 5, nQueries: Int = 10,
-      nCells: Int = 8, nProbe: Int = 2, seed: Long = 42L,
-      trainFraction: Double = 1.0): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val vecs = embeddings
-      .withColumn("fv", array_to_vector(col("embedding")))
-    val trainSet =
-      if (trainFraction >= 1.0) vecs
-      else CorpusStats.hashSample(vecs, col("vec_id"), lit(trainFraction))
-    val model = new KMeans().setK(nCells).setSeed(seed)
-      .setFeaturesCol("fv").setPredictionCol("cell")
-      .fit(trainSet)
-    val assigned = model.transform(vecs).drop("fv")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // centroids as float arrays: the VecDot/VecNorm2 kernels read
-    // float slots (same physical type as the embedding column)
-    val centDf = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }
-      .toSeq.toDF("cell", "centroid")
-    // nProbe nearest cells per query by euclidean distance to centroid
-    // (k-means' own metric): |q|² is rank-constant, so argmin over
-    // |c|² - 2·q·c suffices
-    val q0 = withNorm(assigned.filter(col("vec_id") < nQueries),
-      "embedding", "nq")
-      .select(col("vec_id").as("query_id"),
-        col("embedding").as("qe"), col("nq"))
-    val wP = Window.partitionBy(col("query_id"))
-      .orderBy(col("dist2"), col("cell"))
-    val probes = q0.join(broadcast(centDf))
-      .withColumn("dist2",
-        graft.functions.vec_norm2(col("centroid")) -
-          lit(2.0) * graft.functions.vec_dot(col("qe"), col("centroid")))
-      .withColumn("probe_rank", row_number().over(wP))
-      .filter(col("probe_rank") <= nProbe)
-      .select(col("query_id"), col("qe"), col("nq"), col("cell"))
-    val c = withNorm(assigned, "embedding", "nc")
-      .select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("ce"), col("nc"), col("cell"))
-    val pairs = c.join(broadcast(probes), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosPrecomputed("qe", "ce", "nq", "nc"))
-    // the top-k result is nQueries × k rows — eagerly snapshot it
-    // (lineage-truncating, ContextCleaner-reclaimed) so `assigned` can
-    // be unpersisted HERE instead of leaking a full-corpus cached table
-    // into the session for every invocation
-    val out = ranked(pairs, k).orderBy(col("query_id"), col("rank"))
-      .localCheckpoint(true)
-    assigned.unpersist()
-    out
-  }
-
   /** Random-hyperplane LSH: nPlanes sign bits → bucket; candidates
     * share a bucket; exact cosine re-rank within buckets. May return
     * fewer than k neighbors for sparse buckets (standard ANN recall
@@ -310,10 +227,9 @@ object Similarity {
 
   /** Deterministic Lloyd's k-means over the embedding column — the
     * clustering primitive under SemDeDup buckets, cluster-balanced
-    * sampling, and a production IVF coarse quantizer. Unlike
-    * [[ivfTrainedTopK]]'s MLlib model (random k-means|| init, no
-    * cross-engine story), this variant pins every source of
-    * nondeterminism so a DuckDB oracle reproduces it bit-for-bit:
+    * sampling, and a production IVF coarse quantizer. It pins every
+    * source of nondeterminism (unlike a random k-means|| init) so a
+    * DuckDB oracle reproduces it bit-for-bit:
     * init = the k lowest vec_ids' vectors, components cast
     * float→double (exact), distance = strict left fold of squared
     * diffs in index order, argmin tie-breaks on the lowest centroid
@@ -576,8 +492,8 @@ object Similarity {
   }
 
   /** IVF ANN with the deterministic Lloyd coarse quantizer — the
-    * production IVF lifecycle ([[ivfTrainedTopK]]'s shape) made fully
-    * oracle-checkable: train (kmeansLloyd rounds), assign every
+    * production IVF lifecycle made fully oracle-checkable: train
+    * ([[kmeansLloyd]] rounds), assign every
     * corpus vector to its cell, probe each query's nProbe nearest
     * cells by centroid distance, exact cosine re-rank inside the
     * probed cells. nProbe = nCells degrades to exact search

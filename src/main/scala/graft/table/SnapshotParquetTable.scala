@@ -20,7 +20,7 @@ final case class Snapshot(id: Long, dataPath: String)
   * rewritten). Here every commit writes a fresh `snap-<id>` directory
   * and only then swaps `_current.json`; readers always see the last
   * complete snapshot, a crash leaves at worst an orphaned (ignored)
-  * data dir, and history enables time-travel debugging/GC exactly like
+  * data dir, and expiry garbage-collects old data dirs exactly like
   * an Iceberg metadata pointer.
   *
   * All IO goes through the Hadoop FileSystem of the root's scheme, so
@@ -141,29 +141,4 @@ class SnapshotParquetTable(val root: String, retainSnapshots: Int = 2) {
       case None => throw new java.util.NoSuchElementException(
         s"no committed snapshot under $root")
     }
-
-  /** All retained snapshots, oldest first (the expiry window bounds
-    * history — Iceberg's snapshot log, minus expired entries). */
-  def snapshots(spark: SparkSession): Seq[Snapshot] = {
-    val f = fs(spark)
-    val rootPath = new Path(root)
-    if (!f.exists(rootPath)) Nil
-    else f.listStatus(rootPath).toSeq
-      .flatMap(s => snapId(s.getPath.getName)
-        .map(id => Snapshot(id, s.getPath.toString)))
-      .sortBy(_.id)
-  }
-
-  /** Time-travel read of a retained snapshot: because snap dirs are
-    * immutable, reading an old id is just reading its directory —
-    * Iceberg's `VERSION AS OF`. Fails loud if the snapshot was expired
-    * (same contract as Iceberg after expire_snapshots). */
-  def readAt(spark: SparkSession, snapshotId: Long): DataFrame = {
-    val dataDir = new Path(root, snapDir(snapshotId))
-    if (!fs(spark).exists(dataDir))
-      throw new java.util.NoSuchElementException(
-        s"snapshot $snapshotId expired or never committed under $root " +
-          s"(retained: ${snapshots(spark).map(_.id).mkString(", ")})")
-    spark.read.parquet(dataDir.toString)
-  }
 }

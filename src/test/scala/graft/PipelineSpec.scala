@@ -214,15 +214,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(snaps.map(_.split('/').last).toSeq ===
       Seq("snap-00002", "snap-00003"))
     assert(table.read(spark).count() === 1L)
-    // time travel: retained snapshots readable by id (VERSION AS OF);
-    // expired ones fail loud with the retained list
-    assert(table.snapshots(spark).map(_.id) === Seq(2L, 3L))
-    assert(table.readAt(spark, 2L).count() === 3L)
-    assert(table.readAt(spark, 3L).count() === 1L)
-    val gone = intercept[java.util.NoSuchElementException] {
-      table.readAt(spark, 0L)
-    }
-    assert(gone.getMessage.contains("retained: 2, 3"))
   }
 
   test("snapshot table: a staged snapshot stays invisible until published") {
@@ -254,7 +245,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(Lineage.readThreadIndex(spark, root).count() === 3L)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(orphan.dataPath)))
-    assert(table.snapshots(spark).map(_.id) === Seq(s1.id, s2.id))
+    val snaps = java.nio.file.Files.list(java.nio.file.Paths.get(root))
+      .toArray.map(_.toString.split('/').last)
+      .filter(_.startsWith("snap-")).sorted
+    assert(snaps.toSeq === Seq(s1.id, s2.id).map(i => f"snap-$i%05d"))
   }
 
   test("parse --resume after an unpublished index stage: same skips, same rewrites") {
@@ -328,41 +322,5 @@ class PipelineSpec extends AnyFunSuite {
         s"$name path: first-turn count ${r.getLong(0)} != " +
           s"distinct conversations ${r.getLong(1)}")
     }
-  }
-
-  test("incremental dedup history loop: batch 2 drops batch 1's docs") {
-    import spark.implicits._
-    val store = new graft.table.FingerprintStore(
-      java.nio.file.Files.createTempDirectory("graft-fps").toString)
-    // batch 1: two distinct texts, one within-batch duplicate
-    val b1 = Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha"))
-      .toDF("doc_id", "text")
-    val r1 = graft.ops.Dedup.incrementalIngest(b1, store)
-      .collect().map(_.getLong(0)).sorted
-    assert(r1.toSeq === Seq(1L, 2L)) // first occurrence per fp
-    // batch 2: batch 1's texts reappear (must be dropped against the
-    // UPDATED history — this is the write-back being exercised) plus
-    // one genuinely new text
-    val b2 = Seq((10L, "alpha"), (11L, "beta"), (12L, "gamma"))
-      .toDF("doc_id", "text")
-    val r2 = graft.ops.Dedup.incrementalIngest(b2, store)
-      .collect().map(_.getLong(0)).toSeq
-    assert(r2 === Seq(12L), s"history failed to drop batch-1 dups: $r2")
-    // steady state: the store now holds exactly the 3 distinct fps,
-    // and a third run of already-seen texts accepts nothing
-    assert(store.read(spark).distinct().count() === 3L)
-    val r3 = graft.ops.Dedup.incrementalIngest(
-      Seq((20L, "gamma"), (21L, "alpha")).toDF("doc_id", "text"), store)
-    assert(r3.count() === 0L)
-    // each run appended one bounded batch dir, atomically committed
-    assert(store.committed(spark) === (0L, 3L))
-    // compaction merges the batch log into one deduped dir and keeps
-    // the dedup contract intact for subsequent runs
-    store.compact(spark)
-    assert(store.committed(spark) === (3L, 1L))
-    assert(store.read(spark).count() === 3L) // distinct after compact
-    val r4 = graft.ops.Dedup.incrementalIngest(
-      Seq((30L, "beta"), (31L, "delta")).toDF("doc_id", "text"), store)
-    assert(r4.collect().map(_.getLong(0)).toSeq === Seq(31L))
   }
 }

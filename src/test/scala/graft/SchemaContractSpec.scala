@@ -142,13 +142,11 @@ class SchemaContractSpec extends AnyFunSuite {
       !plan.toString.contains("ScalaUDF"))
   }
 
-  test("summarize: counts + bounded samples") {
+  test("summarize: record and invalid counts") {
     val df = SchemaContract.validateJsonl(
       Seq(valid, "{nope", mod(""""ts":5""" -> """"ts":-1""")).toDF("value"))
     val row = SchemaContract.summarize(df).head()
     assert(row.getLong(0) === 3L)
     assert(row.getLong(1) === 2L)
-    assert(row.getSeq[String](2).toSet
-      === Set("$: not valid JSON", "$.ts: below minimum 0"))
   }
 }
