@@ -19,7 +19,9 @@ is gone.
 
 A hit is printed as `pkg.Name` for a top-level declaration and as
 `Top.name` for a member of the top-level template `Top`. Exits 1 when a
-hit is not in ALLOWED below, else 0. Each ALLOWED entry carries the
+hit is not in ALLOWED below, or when an ALLOWED entry is stale (its
+name is now referenced, or no longer declared), else 0: the allowlist
+can only shrink along with the code. Each ALLOWED entry carries the
 reason the declaration stays although no code reaches it.
 """
 import collections
@@ -142,18 +144,26 @@ def main(argv):
     words = collections.Counter(
         w for code in code_by_file.values() for w in WORD.findall(code))
     n_decls = collections.Counter(name for _, _, name, _ in decls)
-    bad = 0
+    bad, unreferenced = 0, set()
     for path, shown, name, line in decls:
         if words[name] > n_decls[name]:
             continue
+        unreferenced.add(shown)
         where = f"{os.path.relpath(path, root)}:{line}"
         if shown in ALLOWED:
             print(f"allowed  {shown}  ({where}): {ALLOWED[shown]}")
         else:
             print(f"UNREFERENCED  {shown}  ({where})")
             bad += 1
-    print(f"{bad} unreferenced declaration(s) outside the allowlist")
-    return 1 if bad else 0
+    declared = {shown for _, shown, _, _ in decls}
+    stale = 0
+    for shown in sorted(set(ALLOWED) - unreferenced):
+        why = "now referenced" if shown in declared else "no longer declared"
+        print(f"STALE ALLOWED  {shown}: {why}; drop it from ALLOWED")
+        stale += 1
+    print(f"{bad} unreferenced declaration(s) outside the allowlist, "
+          f"{stale} stale allowlist entr{'y' if stale == 1 else 'ies'}")
+    return 1 if bad or stale else 0
 
 
 if __name__ == "__main__":

@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.gen.TranscriptGen
-import graft.parse.ChatGptParser
-import graft.pipeline.TurnOrdering
+import graft.parse.{ChatGptParser, FastTranscriptParser}
 import graft.route.Router
 
 /** Benchmark main. Prints ONE JSON line:
@@ -22,7 +21,7 @@ import graft.route.Router
   *    → routed (role, tool) snapshot write → routed counts + thread
   *    stats + text checksum. Reports turns/sec.
   *  - pipeline_generic: same job through the generic Catalyst JSON
-  *    parse + turn-order window (one repeat — it exists so a
+  *    parse into conversation rows (one repeat — it exists so a
   *    regression in EITHER parse path is visible round-over-round).
   *
   * Corpus size via SPARK_GRAFT_CONVS (default 480k convs ≈ 5.5M
@@ -147,10 +146,10 @@ object Bench {
       for (_ <- 1 to nRepeats) {
         def parsed =
           if (generic)
-            TurnOrdering.withTurnIdx(ChatGptParser.normalize(
+            FastTranscriptParser.turns(ChatGptParser.conversations(
               ChatGptParser.readRawJsonl(spark, rawPath)))
           else
-            graft.parse.FastTranscriptParser.parse(spark, rawPath)
+            FastTranscriptParser.parse(spark, rawPath)
         var repeatParseOnly = 0.0
         if (stageBreakdown) {
           val tp0 = System.nanoTime()

@@ -14,13 +14,10 @@ object Aggregates {
     * system 2; BASELINE.md). Keyed by (role, tool); tool null → "none"
     * so the sink key is total.
     */
-  def routedCounts(
-      msgs: DataFrame,
-      roleCol: String = "role",
-      toolCol: String = "tool"): DataFrame =
+  def routedCounts(msgs: DataFrame): DataFrame =
     msgs.groupBy(
-      col(roleCol).as("role"),
-      coalesce(col(toolCol), lit("none")).as("tool"))
+      col("role"),
+      coalesce(col("tool"), lit("none")).as("tool"))
       .agg(count(lit(1)).as("n_rows"))
 
   /** Per-conversation thread stats = manifest index entries

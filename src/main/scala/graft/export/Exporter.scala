@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   *
   * Determinism: the reference stamps `generated_at_utc: now()` into
   * split front matter (exporter.py:320-333) making output
-  * non-deterministic; callers here pass a pinned `generatedAtUtc`.
+  * non-deterministic; here it is the pinned epoch stamp
+  * `pinnedGeneratedAt`.
   * The reference also glues split front matter with "".join (a bug —
   * one long line, exporter.py:334); we reproduce the *no-split* format
   * and emit split front matter line-joined, documenting the divergence.
@@ -216,14 +217,15 @@ object Exporter {
     else parts.toIndexedSeq
   }
 
+  private val pinnedGeneratedAt = "1970-01-01T00:00:00+00:00"
+
   /** Render one whole thread to its Markdown parts. */
   def renderThread(
       cid: String,
       msgs: Seq[ExportMsg],
       tz: ZoneId,
       formatting: String,
-      split: SplitConf,
-      generatedAtUtc: String): Seq[MdPart] = {
+      split: SplitConf): Seq[MdPart] = {
     val sorted = msgs.sortBy(m => (m.ts.isEmpty, m.ts, m.message_id))
     val provider = sorted.headOption.map(_.provider_id).getOrElse("unknown")
     val models = sorted.flatMap(_.model).distinct.sorted
@@ -257,7 +259,7 @@ object Exporter {
         s"range: ${toIsoUtc(tsMin)} 〜 ${toIsoUtc(tsMax)}",
         s"part_index: $partIdx",
         s"part_total: $partTotal",
-        s"generated_at_utc: $generatedAtUtc",
+        s"generated_at_utc: $pinnedGeneratedAt",
         s"tz: ${tz.getId}",
         "---",
         "")
@@ -281,9 +283,7 @@ object Exporter {
       split: SplitConf): Seq[MdPart] =
     renderThread(c.conversation_id, c.messages.map(m => ExportMsg(
       c.conversation_id, c.provider_id, m.message_id, m.parent_id, m.role,
-      Some(m.ts), m.text, None)), tz, formatting, split, pinnedGeneratedAt)
-
-  private val pinnedGeneratedAt = "1970-01-01T00:00:00+00:00"
+      Some(m.ts), m.text, None)), tz, formatting, split)
 
   /** Distributed export of message rows: one conversation row per
     * conversation_id (`groupBy` + `sort_array(collect_list)`), each
@@ -294,9 +294,7 @@ object Exporter {
       msgs: DataFrame,
       tz: String = "UTC",
       formatting: String = "light",
-      split: SplitConf = SplitConf.none,
-      generatedAtUtc: String = pinnedGeneratedAt)
-      : Dataset[MdPart] = {
+      split: SplitConf = SplitConf.none): Dataset[MdPart] = {
     val spark = msgs.sparkSession
     import spark.implicits._
     val withModel =
@@ -309,8 +307,7 @@ object Exporter {
       .agg(sort_array(collect_list(struct(fields.map(col): _*))))
       .as[(String, Seq[ExportMsg])]
       .flatMap { case (cid, thread) =>
-        renderThread(cid, thread, ZoneId.of(tz), formatting, split,
-          generatedAtUtc)
+        renderThread(cid, thread, ZoneId.of(tz), formatting, split)
       }
   }
 

@@ -35,14 +35,13 @@ object Lineage {
       ts_min: Long,
       ts_max: Long)
 
-  /** Capture per-partition stats without an extra shuffle: one pass
-    * mapPartitions piggybacked on the already-partitioned data. */
-  def capturePartitions(
-      msgs: DataFrame,
-      tsCol: String = "ts"): Dataset[PartitionLineage] = {
+  /** Capture per-partition stats of the `ts` column without an extra
+    * shuffle: one pass mapPartitions piggybacked on the
+    * already-partitioned data. */
+  def capturePartitions(msgs: DataFrame): Dataset[PartitionLineage] = {
     val spark = msgs.sparkSession
     import spark.implicits._
-    msgs.select(col(tsCol).cast("long")).as[Option[Long]].mapPartitions {
+    msgs.select(col("ts").cast("long")).as[Option[Long]].mapPartitions {
       it =>
         val pid = TaskContext.getPartitionId()
         var n = 0L
@@ -104,14 +103,13 @@ object Lineage {
       threadCount: Long,
       indexPath: String,
       partitions: Seq[PartitionLineage] = Nil,
-      schemaVersion: String = "1.3",
       corruptLines: Long = 0L,
       hadoopConf: org.apache.hadoop.conf.Configuration = null): Unit = {
     // json_safe + dumps in one step (Options unwrap, None → null) —
     // ListMap pins the reference's key order
     import scala.collection.immutable.ListMap
     val json = PyJson.safe(ListMap(
-      "schema_version" -> schemaVersion,
+      "schema_version" -> "1.3",
       "provider" -> provider,
       "index" -> ListMap(
         "path" -> indexPath,

@@ -473,18 +473,13 @@ object CorpusStats {
     * (train doc, eval doc), all map-side until the final bounded
     * aggregation of matched pairs only. Training docs sharing no
     * shingle with any eval doc (the overwhelming majority) are dropped
-    * by the join before the shuffle.
-    *
-    * broadcastEval is a hard hint that bypasses
-    * autoBroadcastJoinThreshold — the CALLER asserts the eval side is
-    * executor-memory-small (a benchmark set, not a corpus slice). Pass
-    * false for a large eval side to fall back to a shuffled hash join
-    * with AQE sizing instead of a multi-GB broadcast.
+    * by the join before the shuffle. The broadcast is a hard hint that
+    * bypasses autoBroadcastJoinThreshold: the eval side must be
+    * executor-memory-small (a benchmark set, not a corpus slice).
     */
   def decontaminate(
       train: DataFrame, eval: DataFrame, k: Int = 3,
-      minOverlapFrac: Double = 0.05,
-      broadcastEval: Boolean = true): DataFrame = {
+      minOverlapFrac: Double = 0.05): DataFrame = {
     // per-doc shingle count rides along through the explode (it is a
     // function of doc_id), so no separate corpus-wide sizes aggregation
     // and no join-back are needed
@@ -496,8 +491,7 @@ object CorpusStats {
     val evalSh = Dedup.shingles(eval, k)
       .withColumnRenamed("doc_id", "eval_id")
     trainSh
-      .join(if (broadcastEval) broadcast(evalSh) else evalSh,
-        Seq("shingle"))
+      .join(broadcast(evalSh), Seq("shingle"))
       .groupBy("doc_id", "eval_id", "n_sh")
       .agg(count(lit(1)).as("n_shared"))
       .select(
@@ -1637,11 +1631,11 @@ object CorpusStats {
     * rollup and returned as a literal frame (the q102 eager pattern:
     * a window over days would be a partition-less sort at scale for
     * no reason — the rollup already fits on the driver). */
-  def dailyVolume(t: DataFrame, tsMsCol: String = "ts_ms"): DataFrame = {
+  def dailyVolume(t: DataFrame): DataFrame = {
     val spark = t.sparkSession
     import spark.implicits._
     val days = t
-      .groupBy(expr(s"div(CAST($tsMsCol AS BIGINT), 86400000)")
+      .groupBy(expr("div(CAST(ts_ms AS BIGINT), 86400000)")
         .as("day_idx"))
       .agg(count(lit(1)).as("n_turns"),
         countDistinct(col("conv_id")).as("n_convs"))

@@ -388,19 +388,9 @@ object Dedup {
     *
     * Scale: O(diameter) rounds of one equi-join + agg each, all
     * hash-partitioned on node id — dedup graphs are near-cliques of
-    * duplicates (tiny diameter), so 3-4 rounds in practice. For
-    * adversarial long-path graphs (drifting boilerplate chains) pass
-    * `diameterSafe = true` to run the alternating large-star/small-star
-    * algorithm instead (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond"): each round rewires nodes toward their
-    * neighborhood minimum, contracting path length geometrically, so a
-    * 1,000-node path converges in ~a dozen rounds where min-label
-    * propagation needs 1,000. Same output contract, same per-round
-    * shuffle shape (groupBy + equi-join on node id); the default stays
-    * min-label because on near-clique dedup graphs it converges in
-    * fewer, cheaper rounds. Each round's result is persisted and the
-    * previous unpersisted, so lineage stays O(1) deep (no exponential
-    * plan growth).
+    * duplicates (tiny diameter), so 3-4 rounds in practice. Each
+    * round's result is persisted and the previous unpersisted, so
+    * lineage stays O(1) deep (no exponential plan growth).
     *
     * Output: (doc_id, cluster_id = min doc_id reachable) for every doc
     * that appears in at least one pair; singletons are their own
@@ -412,7 +402,6 @@ object Dedup {
     * see the inline rationale.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
-      diameterSafe: Boolean = false,
       localMaxEdges: Long = 1L << 20): DataFrame = {
     // fail fast on non-numeric ids: cast("long") would silently null
     // string ids and collapse every node into one garbage cluster
@@ -425,8 +414,6 @@ object Dedup {
       s"connectedComponents needs integral doc ids, got " +
         s"${pairs.schema("doc_a").dataType}; map string ids to longs " +
         "(e.g. xxhash64 or a dictionary) first")
-    if (diameterSafe && localMaxEdges <= 0)
-      return alternatingStarCC(pairs, maxIter)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // Both edge directions from ONE scan of the pair plan: a
     // union(select(a,b), select(b,a)) embeds two copies of the upstream
@@ -451,22 +438,17 @@ object Dedup {
     // pure scheduling). Below localMaxEdges undirected edges (default
     // 2^20 ≈ 32 MB of directed id pairs on the driver, far under any
     // driver heap) the persisted edge table is collected once and
-    // solved with union-find — exact, O(E α(E)), diameter-free, so it
-    // subsumes the diameterSafe variant at this size. The sizing
-    // count materializes the SAME persisted edge table every
+    // solved with union-find — exact, O(E α(E)), diameter-free. The
+    // sizing count materializes the SAME persisted edge table every
     // distributed round would reuse, so the large-graph path pays
     // nothing extra; localMaxEdges = 0 disables the fast path (and is
-    // what the specs use to pin the distributed algorithms' own
-    // behavior). Production callers on 10^9+-pair graphs never hit
-    // the collect — the bound is checked first.
+    // what the specs use to pin the distributed loop's own behavior).
+    // Production callers on 10^9+-pair graphs never hit the collect —
+    // the bound is checked first.
     if (localMaxEdges > 0 && edges.count() <= 2 * localMaxEdges) {
       val rows = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
       edges.unpersist()
       return localUnionFind(pairs.sparkSession, rows)
-    }
-    if (diameterSafe) {
-      edges.unpersist()
-      return alternatingStarCC(pairs, maxIter)
     }
     var labels = edges.select(col("src").as("doc_id")).distinct()
       .withColumn("cluster_id", col("doc_id"))
@@ -509,9 +491,7 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
-          "(component diameter > maxIter); raise maxIter or pass " +
-          "diameterSafe = true for the large-star/small-star variant " +
-          "that handles long-chain graphs")
+          "(component diameter > maxIter); raise maxIter")
     // Hand back a result that leaves NOTHING in the session's cache
     // manager: the convergence loop already fully materialized `labels`,
     // so an eager localCheckpoint just snapshots those rows with
@@ -534,7 +514,7 @@ object Dedup {
     * list — the [[connectedComponents]] small-graph fast path. Union
     * always hangs the larger root under the smaller, so every root is
     * its component's minimum id and the output contract matches the
-    * distributed variants exactly: (doc_id, cluster_id = min reachable
+    * distributed loop exactly: (doc_id, cluster_id = min reachable
     * id) for every node touched by an edge. */
   private def localUnionFind(
       spark: org.apache.spark.sql.SparkSession,
@@ -563,110 +543,6 @@ object Dedup {
         org.apache.spark.sql.types.LongType, nullable = false)))
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1), schema)
-  }
-
-  /** Alternating large-star/small-star connected components — the
-    * diameter-safe path behind `connectedComponents(diameterSafe =
-    * true)`. Each round every node is rewired to the minimum of its
-    * closed neighborhood: large-star hangs every neighbor LARGER than
-    * a node directly off that neighborhood minimum, small-star does
-    * the same for the smaller neighbors, and alternating the two
-    * contracts any path geometrically until the edge set is a union of
-    * stars centered on each component's minimum id. Per round: one
-    * groupBy(node) min + one equi-join back on node id + distinct —
-    * the same hash-partitioned shuffle shape as a min-label round, but
-    * O(log^2 n) rounds worst-case instead of O(diameter). The edge set
-    * never grows past one directed edge per (node, target) pair
-    * (distinct each round), and rounds persist/unpersist pairwise so
-    * lineage stays O(1).
-    *
-    * Fixpoint witness: (edge count, sum of per-edge hashes) — star
-    * rewiring is not label-monotone, so the label-sum witness of the
-    * propagation variant does not apply; set equality (checked via the
-    * hash pair) is the paper's own termination condition.
-    */
-  private def alternatingStarCC(pairs: DataFrame,
-      maxIter: Int): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // canonical (big → small) directed form, self-loops dropped; the
-    // explode-of-2-structs trick is unnecessary here (no q31-style
-    // double-materialization: `orient` below symmetrizes per round)
-    var edges = pairs
-      .select(greatest(col("doc_a").cast("long"), col("doc_b").cast("long"))
-          .as("u"),
-        least(col("doc_a").cast("long"), col("doc_b").cast("long"))
-          .as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .persist(lvl)
-    // both directions of each edge, for neighborhood computation
-    def sym(e: DataFrame): DataFrame = e
-      .select(explode(array(
-        struct(col("u").as("a"), col("v").as("b")),
-        struct(col("v").as("a"), col("u").as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-    // large-star: per node a, m = min({a} ∪ N(a)); emit (b, m) for
-    // every neighbor b > a — output is already (big → small) oriented
-    def largeStar(e: DataFrame): DataFrame = {
-      val s = sym(e)
-      val m = s.groupBy("a").agg(min(col("b")).as("mb"))
-        .select(col("a"), least(col("a"), col("mb")).as("m"))
-      s.join(m, "a").filter(col("b") > col("a"))
-        .select(col("b").as("u"), col("m").as("v"))
-        .distinct()
-    }
-    // small-star on (big → small) edges: per node a with smaller
-    // neighbors Γ⁻(a), m = min(Γ⁻(a)); emit (a, m) and (b, m) for
-    // every b ∈ Γ⁻(a), b ≠ m
-    def smallStar(e: DataFrame): DataFrame = {
-      val m = e.groupBy("u").agg(min(col("v")).as("m"))
-      val rewired = e.join(m, "u").filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-      val centers = m.select(col("u"), col("m").as("v"))
-      rewired.union(centers).distinct()
-    }
-    def witness(e: DataFrame): (Long, Option[java.math.BigDecimal]) = {
-      val r = e.agg(count(lit(1)),
-        sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
-      (r.getLong(0), Option(r.getDecimal(1)))
-    }
-    var w = witness(edges)
-    var i = 0
-    var converged = w._1 == 0L
-    while (!converged && i < maxIter) {
-      // a fixpoint of BOTH phases is required: checking only the
-      // round composition could accept a 2-cycle that is not yet a
-      // star set. e1 is persisted (witness + small-star both read it);
-      // e2 is localCheckpoint'd so the round output's LOGICAL plan is
-      // O(1) — each phase embeds its input plan several times, so a
-      // persist-only loop would grow the plan 4× per round and OOM the
-      // driver rendering it long before maxIter.
-      val e1 = largeStar(edges).persist(lvl)
-      val w1 = witness(e1)
-      val e2 = smallStar(e1).localCheckpoint(true)
-      val w2 = witness(e2)
-      edges.unpersist(); e1.unpersist()
-      edges = e2
-      converged = w1 == w && w2 == w1
-      w = w2
-      i += 1
-    }
-    if (!converged)
-      throw new IllegalStateException(
-        s"alternatingStarCC did not converge in $maxIter rounds — " +
-          "this is O(log^2 n) rounds by construction, so hitting the " +
-          "bound means maxIter is set far too low for the graph size")
-    // at the fixpoint the edge set is exactly {(v, min) | v in
-    // component, v ≠ min}: read labels straight off it, adding the
-    // centers' self-labels
-    val labels = edges.select(col("u").as("doc_id"),
-        col("v").as("cluster_id"))
-      .union(edges.select(col("v").as("doc_id"),
-        col("v").as("cluster_id")))
-      .groupBy("doc_id").agg(min(col("cluster_id")).as("cluster_id"))
-    val out = labels.localCheckpoint(true)
-    edges.unpersist()
-    out
   }
 
   /** APPROXIMATE near-dup pairs via sign-LSH banding + exact cosine
@@ -804,7 +680,7 @@ object Dedup {
   /** [[incrementalNew]] with a Bloom-filter pre-filter — the shape
     * that survives a BILLION-fingerprint history: the history is far
     * too large to broadcast as a hash set, but its Bloom digest (at
-    * fpp 1%, ~1.2 GB per 10^9 fps; tune fpp/expectedItems to size) is
+    * fpp 1%, ~1.2 GB per 10^9 fps; tune fpp to size) is
     * a per-executor constant. Batch fingerprints that FAIL the probe
     * are definitively new and bypass the anti-join entirely; only the
     * probe's positives — true matches plus an fpp-fraction of false
@@ -816,15 +692,12 @@ object Dedup {
     * The digest is built DISTRIBUTED (`stat.bloomFilter` partial-aggs
     * per-partition filters and ORs them) and probed by the codegen'd
     * [[graft.functions.BloomMightContain]], deserialized once per
-    * executor. expectedItems defaults to an eager count of the
-    * history (one scalar agg — callers with table statistics pass it
-    * explicitly, the packSequences AUTO convention).
+    * executor. The filter is sized by an eager count of the history
+    * (one scalar agg).
     */
   def incrementalNewBloom(batch: DataFrame, historyFps: DataFrame,
-      fpp: Double = 0.01, expectedItems: Long = 0L): DataFrame = {
-    val nExpected =
-      if (expectedItems > 0) expectedItems
-      else math.max(historyFps.count(), 1L)
+      fpp: Double = 0.01): DataFrame = {
+    val nExpected = math.max(historyFps.count(), 1L)
     val bloom = historyFps.stat.bloomFilter("fp", nExpected, fpp)
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)

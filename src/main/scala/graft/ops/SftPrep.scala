@@ -897,7 +897,7 @@ object SftPrep {
   /** The opening-intent rule table shared by q131 and q154 — the
     * single definition, so the refusal attribution grades the same
     * router q131 reports on. */
-  val DefaultIntentRules: Seq[(String, String)] = Seq(
+  private val IntentRules: Seq[(String, String)] = Seq(
     "error" -> "troubleshooting",
     "purchase" -> "transactional",
     "signup" -> "transactional",
@@ -917,26 +917,23 @@ object SftPrep {
 
   /** Opening-intent resolution from the (turn_idx, text) struct of a
     * conversation's FIRST user turn — shared by q131 and q154. */
-  private def intentOf(firstUser: Column,
-      rules: Seq[(String, String)]): Column = {
+  private def intentOf(firstUser: Column): Column = {
     val ft = firstUser.getField("text")
-    rules
+    IntentRules
       .foldLeft(when(ft.isNull, lit("no_user"))) {
         case (acc, (p, i)) => acc.when(ft.startsWith(p), lit(i))
       }
       .otherwise(lit("other"))
   }
 
-  def intentMix(
-      t: DataFrame,
-      rules: Seq[(String, String)] = DefaultIntentRules): DataFrame = {
+  def intentMix(t: DataFrame): DataFrame = {
     val conv = t.groupBy(col("conv_id")).agg(
       count(lit(1)).as("n_turns"),
       sum(size(split(trim(col("text")), "\\s+")).cast("long"))
         .as("n_tok"),
       min(when(col("role") === "user",
         struct(col("turn_idx"), col("text")))).as("fu"))
-    val intent = intentOf(col("fu"), rules)
+    val intent = intentOf(col("fu"))
     conv.select(intent.as("intent"), col("n_turns"), col("n_tok"))
       .groupBy(col("intent"))
       .agg(
@@ -1046,7 +1043,7 @@ object SftPrep {
     * totals into an actionable signal (a refusal spike localized to
     * one intent is a policy/routing bug; spread evenly it's a model
     * change). Both component expressions are the SHARED single
-    * definitions ([[DefaultIntentRules]]/[[intentOf]],
+    * definitions ([[IntentRules]]/[[intentOf]],
     * [[isRefusalExpr]]) so this grades exactly what q131/q116 report.
     *
     * Scale: ONE conv-keyed agg (struct-min first-user turn + max
@@ -1080,9 +1077,7 @@ object SftPrep {
     * posture), then ONE conv-keyed semilattice agg feeding a bounded
     * per-intent rollup — no join, text never shuffles beyond the
     * conv-keyed exchange. */
-  def correctionByIntent(
-      t: DataFrame,
-      rules: Seq[(String, String)] = DefaultIntentRules): DataFrame = {
+  def correctionByIntent(t: DataFrame): DataFrame = {
     val marked = t
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"))
       .withColumn("prev_role", lag(col("role"), 1).over(convWindow))
@@ -1093,7 +1088,7 @@ object SftPrep {
         col("prev_role") === "assistant" &&
         isCorrectionExpr(col("text")), 1L).otherwise(0L))
         .as("corrected"))
-    conv.select(intentOf(col("fu"), rules).as("intent"),
+    conv.select(intentOf(col("fu")).as("intent"),
         col("corrected"))
       .groupBy(col("intent"))
       .agg(
@@ -1116,9 +1111,7 @@ object SftPrep {
     * BOTH window functions over the same conv_id window spec (one
     * exchange, billions of small partitions); the percentile agg keys
     * on the bounded intent set. No join anywhere. */
-  def latencyByIntent(
-      t: DataFrame,
-      rules: Seq[(String, String)] = DefaultIntentRules): DataFrame = {
+  def latencyByIntent(t: DataFrame): DataFrame = {
     val w = convWindow
     val whole = Window.partitionBy(col("conv_id"))
     val gaps = t
@@ -1130,7 +1123,7 @@ object SftPrep {
         struct(col("turn_idx"), col("text")))).over(whole))
       .filter(col("role") === "assistant" &&
         col("prev_role") === "user")
-      .select(intentOf(col("fu"), rules).as("intent"),
+      .select(intentOf(col("fu")).as("intent"),
         (col("ts_ms") - col("prev_ts")).as("gap_ms"))
     gaps.groupBy(col("intent"))
       .agg(
@@ -1229,18 +1222,17 @@ object SftPrep {
     * Scale: ONE agg onto the fixed ≤168-cell (dow, hour) key run
     * eagerly; shares are swept on the driver (the q184 posture) and
     * the returned bounded local table only sorts. */
-  /** q188/q199 (dow, hour) keys, engine-exact for ALL epoch-ms
-    * values: the oracles use DuckDB `//` (floor division) and `%`
-    * (dividend-sign), while Spark DIV truncates toward zero and pmod
-    * is non-negative — which diverges for pre-1970 timestamps. The
-    * explicit floor-division correction + Spark's own sign-following
-    * `%` mirror the oracle token-for-token; for ts_ms ≥ 0 (all
-    * current fixtures) every value is unchanged. */
-  private def floorDivTs(n: Long): Column =
-    expr(s"ts_ms DIV ${n}L - (CASE WHEN ts_ms % ${n}L < 0 " +
-      "THEN 1 ELSE 0 END)")
-  private def hourOfWeekDow: Column = (floorDivTs(86400000L) + lit(4L)) % 7L
-  private def hourOfWeekHour: Column = floorDivTs(3600000L) % 24L
+  /** q188/q199 (dow, hour) keys for ALL epoch-ms values: floor-mod
+    * arithmetic, so a pre-1970 timestamp still lands in dow 0–6 and
+    * hour 0–23. `msOfDay` (the oracles' `md`) is ts_ms floor-mod one
+    * day, so the day index is an exact division on which floor and
+    * truncating division agree. Spark's `pmod` is the floor-mod; the
+    * oracles spell it `((x % n) + n) % n`, since DuckDB's `%` follows
+    * the dividend's sign. */
+  private val msOfDay = "pmod(ts_ms, 86400000L)"
+  private def hourOfWeekDow: Column =
+    expr(s"pmod((ts_ms - $msOfDay) DIV 86400000L + 4L, 7L)")
+  private def hourOfWeekHour: Column = expr(s"$msOfDay DIV 3600000L")
 
   def hourOfWeekLoad(t: DataFrame): DataFrame = {
     val spark = t.sparkSession
@@ -1475,15 +1467,13 @@ object SftPrep {
       .orderBy("dow", "hour")
   }
 
-  def refusalByIntent(
-      t: DataFrame,
-      rules: Seq[(String, String)] = DefaultIntentRules): DataFrame = {
+  def refusalByIntent(t: DataFrame): DataFrame = {
     val conv = t.groupBy(col("conv_id")).agg(
       min(when(col("role") === "user",
         struct(col("turn_idx"), col("text")))).as("fu"),
       max(when(col("role") === "assistant" &&
         isRefusalExpr(col("text")), 1L).otherwise(0L)).as("refused"))
-    conv.select(intentOf(col("fu"), rules).as("intent"), col("refused"))
+    conv.select(intentOf(col("fu")).as("intent"), col("refused"))
       .groupBy(col("intent"))
       .agg(
         count(lit(1)).as("n_convs"),

@@ -180,8 +180,8 @@ object Similarity {
 
   /** Per-group embedding centroids + cosine-to-centroid outlier
     * detection — the domain-drift / mislabeled-sample curation stage:
-    * vectors far from their own group's mean direction are flagged
-    * (`cos_centroid < mean − 2σ` within the group).
+    * vectors far from their own `label` group's mean direction are
+    * flagged (`cos_centroid < mean − 2σ` within the group).
     *
     * Scale: the centroid "training" explodes the vector stream once
     * into (group, dim) partial sums — map-side combine bounds the
@@ -195,13 +195,12 @@ object Similarity {
     * stages are engine-reproducible (same rationale as the ANN
     * cosines); thresholds likewise.
     */
-  def centroidOutliers(embs: DataFrame, groupCol: String = "label")
-      : DataFrame = {
+  def centroidOutliers(embs: DataFrame): DataFrame = {
     val cent = embs
-      .select(col(groupCol), posexplode(col("embedding")).as(Seq("dim", "v")))
-      .groupBy(col(groupCol), col("dim"))
+      .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "v")))
+      .groupBy(col("label"), col("dim"))
       .agg(round(avg(col("v").cast("double")), 6).as("cv"))
-      .groupBy(col(groupCol))
+      .groupBy(col("label"))
       .agg(transform(
         array_sort(collect_list(struct(col("dim"), col("cv")))),
         s => s.getField("cv")).as("centroid"))
@@ -213,14 +212,14 @@ object Similarity {
       (acc, x) => acc + x * x))
     val normE = sqrt(graft.functions.vec_norm2(col("embedding")))
     val scored = Dedup.persistOnce(
-      embs.join(broadcast(cent), Seq(groupCol))
-        .select(col("vec_id"), col(groupCol),
+      embs.join(broadcast(cent), Seq("label"))
+        .select(col("vec_id"), col("label"),
           round(dot / (normE * normC), 6).as("cos_centroid")))
-    val thr = scored.groupBy(col(groupCol))
+    val thr = scored.groupBy(col("label"))
       .agg(round(avg(col("cos_centroid")) -
         lit(2.0) * stddev_samp(col("cos_centroid")), 6).as("thr"))
-    scored.join(broadcast(thr), Seq(groupCol))
-      .select(col("vec_id"), col(groupCol),
+    scored.join(broadcast(thr), Seq("label"))
+      .select(col("vec_id"), col("label"),
         col("cos_centroid"),
         (col("cos_centroid") < col("thr")).as("is_outlier"))
   }

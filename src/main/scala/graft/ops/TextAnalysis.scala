@@ -777,11 +777,10 @@ object TextAnalysis {
     * array_contains inside a filter HOF over the token array \u2014 one
     * narrow codegen'd pass. */
   def blocklistFilter(docs: DataFrame,
-      blocklist: Seq[String] = DefaultBlocklist,
       maxBadFrac: Double = 0.05): DataFrame = {
     val toks = tokens(col("text"))
     val bad = size(filter(toks,
-      t => array_contains(typedLit(blocklist), t))).cast("long")
+      t => array_contains(typedLit(DefaultBlocklist), t))).cast("long")
     docs.select(
         col("doc_id"),
         size(toks).cast("long").as("n_tokens"),

@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * [[ChatGptParser.conversations]], text through
   * [[GrokParser.conversations]]. [[turns]] explodes any of them.
   *
-  * Semantics are identical to ChatGptParser.normalize +
-  * TurnOrdering.withTurnIdx on JSONL (asserted by FastPathSpec on
+  * Semantics are identical to ChatGptParser.normalize plus a
+  * `(ts, message_id)` window for `turn_idx` on JSONL (asserted by
+  * FastPathSpec against the test-side `TurnOrdering` window on
   * fixtures and the synthesized corpus, and through `Main` by
   * MainAppSpec's hostile-input test, which also pins the documented
   * divergences).

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 /** Runtime JSON-Schema validation of emitted JSONL records — the
   * reference's P2 operator (reference:
   * src/llm_logparser/core/schema_validation.py:150-211 over
-  * schemas/message.schema.json and schemas/manifest.schema.json,
-  * Draft 2020-12 via the `jsonschema` package).
+  * schemas/message.schema.json, Draft 2020-12 via the `jsonschema`
+  * package).
   *
   * Spark-first: instead of interpreting the schema per row (a Python
   * `iter_errors` loop), [[JsonSchemaCompiler]] compiles the schema ONCE
@@ -18,13 +18,11 @@ import org.apache.spark.sql.functions._
   * higher-order functions for arrays — so validation of a trillion rows
   * is one codegen'd projection with zero shuffle and no UDF.
   *
-  * Keyword subset: everything the reference's two schemas use —
-  * `type` (object/string/integer/array), `required`, `properties`,
-  * `items` (scalar and object element schemas, violations carry the
-  * element index), `const`, `minLength`, `minimum`, `minItems`,
-  * `additionalProperties: false`. `format` is annotation-only, exactly
-  * like python-jsonschema's default (no FormatChecker). Unsupported
-  * keywords fail loud at compile time rather than silently passing.
+  * Keyword subset: everything the message contract uses — `type`
+  * (object/string/integer/array), `required`, `properties`, `items`
+  * (scalar and object element schemas, violations carry the element
+  * index), `const`, `minLength`, `minimum`. Any other keyword fails
+  * loud at compile time rather than silently passing.
   *
   * Semantics pinned by SchemaContractSpec against python-jsonschema
   * behavior: `required` accepts a present-but-null property; type
@@ -51,9 +49,8 @@ object JsonSchemaCompiler {
     * @param v    the VARIANT value being validated (SQL null = absent)
     * @param path dynamic JSON-pointer-ish path for messages
     */
-  private val known = Set("$schema", "$id", "type", "required",
-    "properties", "items", "const", "minLength", "minimum", "minItems",
-    "additionalProperties", "format")
+  private val known = Set("type", "required", "properties", "items",
+    "const", "minLength", "minimum")
 
   private def fieldNames(s: JsonNode): Seq[String] = {
     val it = s.fieldNames()
@@ -117,14 +114,8 @@ object JsonSchemaCompiler {
           try_variant_get(v, "$", "double") < n.asDouble(),
         concat(path, lit(s": below minimum ${n.asText()}")))
     }
-    Option(s.get("minItems")).foreach { n =>
-      when_(t.startsWith("ARRAY") &&
-          size(try_variant_get(v, "$", "array<variant>")) < n.asInt(),
-        concat(path, lit(s": fewer than minItems ${n.asInt()}")))
-    }
 
     // object keywords
-    val props = Option(s.get("properties"))
     val isObj = v.isNotNull && t.startsWith("OBJECT")
     Option(s.get("required")).foreach { req =>
       val names = (0 until req.size()).map(req.get(_).asText())
@@ -134,24 +125,12 @@ object JsonSchemaCompiler {
           array(concat(path, lit(s".$r: required")))).otherwise(emptyViol))
       }
     }
-    props.foreach { p =>
+    Option(s.get("properties")).foreach { p =>
       fieldNames(p).foreach { k =>
         val child = try_variant_get(v, s"$$.$k", "variant")
         val childV = violations(p.get(k), child, concat(path, lit(s".$k")))
         checks += (when(isObj, childV).otherwise(emptyViol))
       }
-    }
-    if (Option(s.get("additionalProperties")).exists(n =>
-        n.isBoolean && !n.asBoolean())) {
-      val allowed: Set[String] =
-        props.map(fieldNames(_).toSet).getOrElse(Set.empty)
-      val extra = filter(
-        json_object_keys(v.cast("string")),
-        k => !k.isInCollection(allowed))
-      checks += (when(isObj,
-        transform(extra, k =>
-          concat(path, lit(": additional property '"), k, lit("'"))))
-        .otherwise(emptyViol))
     }
 
     // array element schemas — violations carry the element index
@@ -210,11 +189,12 @@ object SchemaContract {
   private lazy val messageViolations: Column => Column =
     JsonSchemaCompiler.compile(messageSchemaJson)
 
-  /** Validate raw JSONL lines (e.g. a routed parsed.jsonl sink read
-    * back): adds `violations: array<string>`; an unparseable line is
-    * itself a violation. One narrow codegen'd pass. */
-  def validateJsonl(lines: DataFrame, lineCol: String = "value"): DataFrame = {
-    val v = try_parse_json(col(lineCol))
+  /** Validate raw JSONL lines in a `value` column (e.g. a routed
+    * parsed.jsonl sink read back): adds `violations: array<string>`;
+    * an unparseable line is itself a violation. One narrow codegen'd
+    * pass. */
+  def validateJsonl(lines: DataFrame): DataFrame = {
+    val v = try_parse_json(col("value"))
     lines.withColumn("violations",
       when(v.isNull, array(lit("$: not valid JSON")))
         .otherwise(messageViolations(v)))

@@ -1841,16 +1841,18 @@ object Oracles {
          |  round(avg(gap_ms), 4) AS mean_ms
          |FROM g GROUP BY tool ORDER BY tool""".stripMargin,
     // q188: epoch-ms integer dow/hour (epoch day 0 = Thursday → +4
-    // mod 7 = Sunday-based); conv start = rn 1 under the turn_idx
-    // window; share against the grand turn total
+    // mod 7 = Sunday-based), floor-mod so pre-1970 ts stay in range
+    // (md = ms of day); conv start = rn 1 under the turn_idx window;
+    // share against the grand turn total
     "q188_hour_of_week" ->
       s"""WITH t AS ($T),
          |o AS (SELECT conv_id, role, epoch_ms(ts) AS ts_ms,
+         |    ((epoch_ms(ts) % 86400000) + 86400000) % 86400000 AS md,
          |    row_number() OVER (PARTITION BY conv_id
          |      ORDER BY ts, event_id) AS rn
          |  FROM t),
-         |c AS (SELECT (ts_ms // 86400000 + 4) % 7 AS dow,
-         |    (ts_ms // 3600000) % 24 AS hour,
+         |c AS (SELECT (((ts_ms - md) // 86400000 + 4) % 7 + 7) % 7 AS dow,
+         |    md // 3600000 AS hour,
          |    CAST(count(*) AS BIGINT) AS n_turns,
          |    CAST(sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS BIGINT)
          |      AS n_conv_starts,
@@ -1989,12 +1991,13 @@ object Oracles {
     "q199_latency_by_hour" ->
       s"""WITH t AS ($T),
          |o AS (SELECT conv_id, role, epoch_ms(ts) AS ts_ms,
+         |    ((epoch_ms(ts) % 86400000) + 86400000) % 86400000 AS md,
          |    lag(role) OVER w AS prev_role,
          |    lag(epoch_ms(ts)) OVER w AS prev_ts
          |  FROM t
          |  WINDOW w AS (PARTITION BY conv_id ORDER BY ts, event_id)),
-         |g AS (SELECT (ts_ms // 86400000 + 4) % 7 AS dow,
-         |    (ts_ms // 3600000) % 24 AS hour,
+         |g AS (SELECT (((ts_ms - md) // 86400000 + 4) % 7 + 7) % 7 AS dow,
+         |    md // 3600000 AS hour,
          |    ts_ms - prev_ts AS gap_ms
          |  FROM o WHERE role = 'assistant' AND prev_role = 'user')
          |SELECT dow, hour, CAST(count(*) AS BIGINT) AS n_gaps,

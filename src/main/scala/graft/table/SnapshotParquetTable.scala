@@ -28,14 +28,16 @@ final case class Snapshot(id: Long, dataPath: String)
   * atomicity is per-FS: posix/HDFS atomic; object stores get
   * read-committed via the tiny pointer object).
   *
-  * @param retainSnapshots how many newest snapshot data dirs commit()
-  *   keeps (Iceberg's expire-snapshots contract: without expiry every
-  *   commit grows the table by a full data copy — on the bench's tmpfs
-  *   work dirs that is RAM). The pointer's current snapshot is never
-  *   deleted; readers holding an already-expired path break, exactly
-  *   as with Iceberg — retain enough history for in-flight readers.
+  * Each publish keeps the newest `retainSnapshots` (2) snapshot data
+  * dirs (Iceberg's expire-snapshots contract: without expiry every
+  * commit grows the table by a full data copy — on the bench's tmpfs
+  * work dirs that is RAM). The pointer's current snapshot is never
+  * deleted; readers holding an already-expired path break, exactly as
+  * with Iceberg.
   */
-class SnapshotParquetTable(val root: String, retainSnapshots: Int = 2) {
+class SnapshotParquetTable(val root: String) {
+
+  private val retainSnapshots = 2
 
   private def fs(spark: SparkSession): FileSystem =
     new Path(root).getFileSystem(
@@ -106,29 +108,26 @@ class SnapshotParquetTable(val root: String, retainSnapshots: Int = 2) {
       "snapshot_id" -> s.id.toString,
       "data_path" -> PyJson.str(snapDir(s.id))),
       spark.sessionState.newHadoopConf())
-    expireSnapshots(spark, retainSnapshots)
+    expireSnapshots(spark)
     s
   }
 
   private def snapDir(id: Long): String = f"snap-$id%05d"
 
-  /** Delete all but the newest `keep` snapshot data dirs (never the
-    * pointer's current one — it is always among the newest since ids
-    * are monotone). Also reaps orphaned dirs from crashed commits.
-    * Returns the number of deleted snapshot dirs. */
-  def expireSnapshots(spark: SparkSession, keep: Int): Int = {
-    if (keep <= 0) return 0
+  /** Delete all but the newest `retainSnapshots` snapshot data dirs
+    * (never the pointer's current one — it is always among the newest
+    * since ids are monotone). Also reaps orphaned dirs from crashed
+    * commits. */
+  private def expireSnapshots(spark: SparkSession): Unit = {
     val f = fs(spark)
     val rootPath = new Path(root)
-    if (!f.exists(rootPath)) return 0
+    if (!f.exists(rootPath)) return
     val snaps = f.listStatus(rootPath).toSeq
       .flatMap(s => snapId(s.getPath.getName).map(id => (id, s.getPath)))
       .sortBy(_._1)
     val current = currentSnapshot(spark).map(_.id)
-    val toDelete = snaps.dropRight(keep).filterNot(p =>
-      current.contains(p._1)).map(_._2)
-    toDelete.foreach(p => f.delete(p, true))
-    toDelete.size
+    snaps.dropRight(retainSnapshots).filterNot(p =>
+      current.contains(p._1)).foreach(p => f.delete(p._2, true))
   }
 
   /** Current snapshot's data as a DataFrame. A known `schema` skips

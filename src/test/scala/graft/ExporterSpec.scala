@@ -31,7 +31,7 @@ class ExporterSpec extends AnyFunSuite {
   test("count=10 split of 50 messages → parts 10/10/30 (reference golden)") {
     val msgs = (0 until 50).map(msg)
     val parts = Exporter.renderThread("c50", msgs, ZoneId.of("UTC"),
-      "light", SplitConf.parse("count=10"), "PINNED")
+      "light", SplitConf.parse("count=10"))
     assert(parts.map(p => p.content.sliding(5).count(_ == "## [u") +
       p.content.sliding(5).count(_ == "## [a")) === Seq(10, 10, 30))
     assert(parts.map(_.part_index) === Seq(1, 2, 3))
@@ -44,7 +44,7 @@ class ExporterSpec extends AnyFunSuite {
   test("size=1K split matches reference block distribution (14×2 + 22)") {
     val msgs = (0 until 50).map(msg)
     val parts = Exporter.renderThread("c50", msgs, ZoneId.of("UTC"),
-      "light", SplitConf.parse("size=1K"), "PINNED")
+      "light", SplitConf.parse("size=1K"))
     val blockCounts = parts.map(_.content.split("## \\[").length - 1)
     assert(blockCounts === Seq.fill(14)(2) :+ 22)
   }

@@ -897,6 +897,47 @@ class MainAppSpec extends AnyFunSuite {
     }
   }
 
+  test("chain --export-outdir: Markdown under it, JSONL under --outdir") {
+    val out = java.nio.file.Files.createTempDirectory("graft-chain-out")
+    val mdOut = java.nio.file.Files.createTempDirectory("graft-chain-md")
+    val cid = "68b3eea1-1fc4-832c-878a-23896288675a"
+    assert(Main.run(Array("chain",
+      "--input", TestSpark.resource("/fixtures/openai_sample_multi.json"),
+      "--outdir", out.toString, "--export-outdir", mdOut.toString)) === 0)
+    assert(java.nio.file.Files.isRegularFile(
+      out.resolve(s"openai/thread-$cid/parsed.jsonl")))
+    assert(mdFiles(mdOut).keySet === Set(s"thread-$cid.md"))
+    assert(!java.nio.file.Files.exists(out.resolve("md")))
+    assert(!java.nio.file.Files.exists(mdOut.resolve("openai")))
+  }
+
+  test("export: meta.model reaches the front matter models list, sorted and distinct") {
+    // a hand-written parsed tree: four messages, three with a model
+    // ("b" twice), one with no meta at all
+    val root = java.nio.file.Files.createTempDirectory("graft-models")
+    def msg(id: String, ts: Long, meta: String) =
+      s"""{"record_type": "message", "provider_id": "openai", """ +
+        s""""conversation_id": "cm", "message_id": "$id", """ +
+        s""""parent_id": null, "role": "assistant", "ts": $ts, """ +
+        s""""content": {"content_type": "text", "parts": ["x"]}, """ +
+        s""""text": "x"$meta}"""
+    val dir = root.resolve("openai/thread-cm")
+    java.nio.file.Files.createDirectories(dir)
+    java.nio.file.Files.writeString(dir.resolve("parsed.jsonl"), Seq(
+      """{"record_type": "thread", "provider_id": "openai", """ +
+        """"conversation_id": "cm", "message_count": 4}""",
+      msg("m1", 1000L, """, "meta": {"model": "b"}"""),
+      msg("m2", 2000L, """, "meta": {"model": "a"}"""),
+      msg("m3", 3000L, """, "meta": {"model": "b"}"""),
+      msg("m4", 4000L, "")).mkString("", "\n", "\n"))
+    assert(stdoutOf {
+      assert(Main.run(Array("export", "--parsed-root", root.toString,
+        "--outdir", root.toString)) === 0)
+    }.contains(""""parts":1"""))
+    val md = java.nio.file.Files.readString(root.resolve("md/thread-cm.md"))
+    assert(md.linesIterator.contains("""models: ["a", "b"]"""), md)
+  }
+
   test("export of a zero-thread parsed root reports parts:0 + schema 0/0, not 99") {
     // an existing root with no thread-*/parsed.jsonl underneath: both
     // export reads glob nothing — must be an empty export, not a crash

@@ -442,7 +442,7 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("connected components diameterSafe: 1000-node path the default cannot cluster") {
+  test("connected components: a path past maxIter fails loud; union-find solves a 1000-node path") {
     import spark.implicits._
     // min-label propagation needs O(diameter) rounds: on a path it
     // must fail LOUD at maxIter (30 nodes / 5 rounds keeps this cheap)
@@ -451,26 +451,19 @@ class OpsSpec extends AnyFunSuite {
         (1L to 29L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"),
         maxIter = 5, localMaxEdges = 0).count()
     }
-    // the alternating large-star/small-star variant contracts a
-    // 1,000-node path geometrically — ~1,000 propagation rounds
-    // collapse to ~a dozen star rounds, well inside the same bound
+    // the default-parameter route solves a 1,000-node path on the
+    // driver fast path, whose union-find has no diameter bound
     val path = (1L to 999L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val cc = Dedup.connectedComponents(path, maxIter = 50,
-        diameterSafe = true, localMaxEdges = 0).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(cc === (1L to 1000L).map(_ -> 1L).toMap)
-    // the default-parameter route solves the same path on the driver
-    // fast path — identical contract without the star machinery
     val ccLocal = Dedup.connectedComponents(path).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ccLocal === cc)
+    assert(ccLocal === (1L to 1000L).map(_ -> 1L).toMap)
   }
 
-  test("connected components diameterSafe: equals union-find oracle on a random graph") {
+  test("connected components: equals union-find oracle on a random graph") {
     import spark.implicits._
     // deterministic pseudo-random multi-component graph (fixed seed),
-    // checked against a driver-side union-find oracle AND against the
-    // default propagation variant — both algorithms, one contract
+    // checked against a driver-side union-find oracle: the propagation
+    // loop and the driver fast path, one contract
     val rnd = new scala.util.Random(42)
     val nNodes = 400
     val edges = Seq.fill(300) {
@@ -495,10 +488,6 @@ class OpsSpec extends AnyFunSuite {
       .map(n => n -> touched.filter(m => find(m.toInt) == find(n.toInt))
         .min).toMap
     val pairsDf = edges.toDF("doc_a", "doc_b")
-    val star = Dedup.connectedComponents(pairsDf, diameterSafe = true,
-        localMaxEdges = 0)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star === expected)
     val prop = Dedup.connectedComponents(pairsDf, localMaxEdges = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(prop === expected)

@@ -136,7 +136,8 @@ class PipelineSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("count"),
         min("ts_ms").as("ts_min"), max("ts_ms").as("ts_max"))
     val parts = Lineage.capturePartitions(
-      synth.filter(col("ts_ms").isNotNull), "ts_ms").collect().toSeq
+      synth.filter(col("ts_ms").isNotNull).withColumnRenamed("ts_ms", "ts"))
+      .collect().toSeq
     assert(parts.map(_.row_count).sum ===
       synth.filter(col("ts_ms").isNotNull).count())
     val tmp = java.nio.file.Files.createTempDirectory("graft-lin")

@@ -9,7 +9,7 @@ import graft.parse.{JsonSchemaCompiler, SchemaContract}
 /** Runtime JSON-Schema validation (P2) — expected outcomes pinned by
   * EXECUTING python-jsonschema 4.26 (the reference's validator,
   * schema_validation.py:188-211) on the same documents against the
-  * reference's message.schema.json / manifest.schema.json. Violation
+  * reference's message.schema.json. Violation
   * MESSAGE wording is ours; the violated (path, rule) set must match.
   */
 class SchemaContractSpec extends AnyFunSuite {
@@ -99,38 +99,15 @@ class SchemaContractSpec extends AnyFunSuite {
     assert(viols("{nope")(0) === Seq("$: not valid JSON"))
   }
 
-  test("manifest schema: additionalProperties/minItems/nested objects") {
-    val mf = JsonSchemaCompiler.compile(
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        TestSpark.resource("/fixtures/manifest.schema.json"))),
-        java.nio.charset.StandardCharsets.UTF_8))
-    def check(doc: String): Seq[String] =
-      Seq(doc).toDF("value")
-        .select(mf(try_parse_json(col("value"))).as("v"))
-        .as[Seq[String]].head()
-    val okDoc =
-      """{"schema":"1.0","providers":["openai"],
-         "generated_at":"2026-01-01T00:00:00Z","timezone_display":"UTC",
-         "index":{"shards":[{"path":"a","count":3}]},
-         "id_policy":{"strategy":"composite",
-           "composite":{"parts":["a","b"],"separator":"-"}}}"""
-    assert(check(okDoc) === Nil)
-    // python-jsonschema parity (executed): extra key at top level,
-    // empty shards, fractional count, 1-element composite.parts
-    assert(check(okDoc.replace(""""schema":"1.0"""",
-        """"schema":"1.0","bogus":1""")).toSet
-      === Set("$: additional property 'bogus'"))
-    assert(check(okDoc.replace("""[{"path":"a","count":3}]""", "[]"))
-      === Seq("$.index.shards: fewer than minItems 1"))
-    assert(check(okDoc.replace(""""count":3""", """"count":3.5"""))
-      === Seq("$.index.shards[0].count: not an integer"))
-    assert(check(okDoc.replace("""["a","b"]""", """["a"]"""))
-      === Seq("$.id_policy.composite.parts: fewer than minItems 2"))
-  }
-
   test("unsupported keyword fails at compile time, not silently") {
-    intercept[IllegalArgumentException] {
-      JsonSchemaCompiler.compile("""{"type":"string","pattern":"x"}""")
+    // keywords outside the message contract's subset, including the
+    // reference manifest schema's additionalProperties and minItems
+    Seq("""{"type":"string","pattern":"x"}""",
+        """{"type":"object","additionalProperties":false}""",
+        """{"type":"array","minItems":1}""").foreach { schema =>
+      intercept[IllegalArgumentException] {
+        JsonSchemaCompiler.compile(schema)
+      }
     }
   }
 

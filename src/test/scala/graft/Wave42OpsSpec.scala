@@ -58,4 +58,28 @@ class Wave42OpsSpec extends AnyFunSuite {
     assert(out((4L, 1L)) == ((1L, 3600000.0)))
     assert(out.size == 2)
   }
+
+  test("hour of week: pre-1970 ts_ms floor-mods into dow 0-6, hour 0-23") {
+    import spark.implicits._
+    // ts -1 is Wed 1969-12-31 23:59:59.999 (dow 3, hour 23); five days
+    // and a millisecond before epoch is Fri 1969-12-26 23:59 (dow 5):
+    // a sign-following % gave hour -1 and dow -2 for these
+    val fri = -5L * 86400000L - 1L
+    val t = Seq(
+      ("A", 0, "user", -3600001L),
+      ("A", 1, "assistant", -1L),
+      ("B", 0, "user", fri - 1000L),
+      ("B", 1, "assistant", fri))
+      .toDF("conv_id", "turn_idx", "role", "ts_ms")
+    val load = SftPrep.hourOfWeekLoad(t).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val lat = SftPrep.latencyByHour(t).collect()
+      .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    for (cells <- Seq(load.keys, lat.keys); (dow, hour) <- cells) {
+      assert(dow >= 0 && dow <= 6, s"dow $dow")
+      assert(hour >= 0 && hour <= 23, s"hour $hour")
+    }
+    assert(load === Map((3L, 22L) -> 1L, (3L, 23L) -> 1L, (5L, 23L) -> 2L))
+    assert(lat === Map((3L, 23L) -> 1L, (5L, 23L) -> 1L))
+  }
 }
