@@ -442,7 +442,7 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("connected components: a path past maxIter fails loud; union-find solves a 1000-node path") {
+  test("connected components: a path past maxIter fails loud; union-find solves 1000 nodes") {
     import spark.implicits._
     // min-label propagation needs O(diameter) rounds: on a path it
     // must fail LOUD at maxIter (30 nodes / 5 rounds keeps this cheap)
