@@ -112,7 +112,16 @@ object Main {
     spark.sparkContext.setLogLevel("WARN")
     withRunConfs(spark)(args.head match {
       case "parse" => parseMode(spark, args, None).fold(identity, _ => 0)
-      case "export" => exportMode(spark, args, exportConf(args))
+      case "export" =>
+        // each parsed.jsonl file → its thread's Markdown, in one scan
+        val (conf, root) = (exportConf(args), req(args, "parsed-root"))
+        if (fsExists(spark, root)) exportReport(spark, args,
+          Router.threadFiles(spark, root), Some(conf), 0L)
+        else {
+          System.err.println(
+            I18n.msg("cli.export.root_missing", "path" -> root))
+          4
+        }
       case "chain" =>
         // one DAG: the thread pass renders each thread's Markdown from
         // the conversation row it writes the thread's JSONL from, not
@@ -120,8 +129,8 @@ object Main {
         // an output, and it is what --validate-schema checks)
         val conf = exportConf(args)
         parseMode(spark, args, Some(conf)).fold(identity, parts =>
-          exportReport(spark, args, parts,
-            jsonlFiles(spark, req(args, "outdir"))))
+          exportReport(spark, args, if (!flag(args, "validate-schema")) Nil
+            else Router.threadFiles(spark, req(args, "outdir")), None, parts))
       case other =>
         System.err.println(I18n.msg("cli.unknown_mode", "mode" -> other))
         2
@@ -349,10 +358,10 @@ object Main {
           s"${t.provider_id}/thread-${t.conversation_id}/parsed.jsonl",
           Router.threadContent(thread))
         val parts = markdown.fold(0) { case (conf, out) =>
-          val ps = Exporter.renderConversation(thread, conf.tz,
-            conf.formatting, conf.split)
-          ps.foreach(p => out.write(p.file_name, p.content))
-          ps.size
+          Exporter.writeThread(t.messages.map(m => Exporter.ExportMsg(
+            t.conversation_id, t.provider_id, m.message_id, m.parent_id,
+            m.role, Some(m.ts), m.text, None)),
+            conf.tz, conf.formatting, conf.split, out)
         }
         val ts = t.messages.map(_.ts)
         ThreadDone(t.conversation_id, count, ts.min, ts.max, skipped, parts)
@@ -367,83 +376,42 @@ object Main {
     case _ => 0L
   }
 
-  /** export: parsed JSONL tree → Markdown files (split-aware). */
-  private def exportMode(spark: SparkSession, args: Array[String],
-      conf: ExportConf): Int = {
-    val root = req(args, "parsed-root")
-    if (!fsExists(spark, root)) {
-      System.err.println(
-        I18n.msg("cli.export.root_missing", "path" -> root))
-      return 4
-    }
-    // a parse run that produced zero threads leaves no JSONL, and a read
-    // of zero paths throws path-not-found — that is a legitimate empty
-    // export (parts:0, schema 0/0), not an exit-99 crash
-    val files = jsonlFiles(spark, root)
-    // writeParts counts via an accumulator inside the single write pass
-    // (a separate parts.count() re-executed the whole render+pack
-    // pipeline — round-1 double render)
-    val nParts = if (files.isEmpty) 0L else Exporter.writeParts(
-      Exporter.exportThreads(
-        spark.read.schema(jsonlSchema)
-          .option("encoding", "UTF-8")
-          .json(files: _*)
-          .filter(col("record_type") === "message")
-          .withColumn("model", col("meta.model"))
-          .drop("meta", "record_type"),
-        conf.tz.getId, conf.formatting, conf.split),
-      s"${conf.outdir}/md")
-    exportReport(spark, args, nParts, files)
-  }
-
   private def exportOutdir(args: Array[String]): String =
     opt(args, "export-outdir").getOrElse(req(args, "outdir"))
 
-  private val jsonlSchema = StructType(Seq(
-    StructField("record_type", StringType),
-    StructField("provider_id", StringType),
-    StructField("conversation_id", StringType),
-    StructField("message_id", StringType),
-    StructField("parent_id", StringType),
-    StructField("role", StringType),
-    StructField("ts", LongType),
-    StructField("text", StringType),
-    StructField("meta", StructType(Seq(StructField("model", StringType))))))
-
-  /** The per-thread JSONL files under a parsed root, listed once on the
-    * driver. Readers get these paths, not the glob: the glob is then
-    * expanded once, and Spark's metadata-dir probe no longer warns about
-    * a literal glob path that does not exist. Glob metacharacters in the
-    * listed names are escaped, because readers glob their paths again
-    * and a thread dir is named after its conversation id, which may hold
-    * `[` or `{` (the id falls back to the input file's stem). */
-  private def jsonlFiles(spark: SparkSession, root: String): Seq[String] = {
-    val glob = new org.apache.hadoop.fs.Path(s"$root/*/thread-*/parsed.jsonl")
-    Option(glob.getFileSystem(spark.sessionState.newHadoopConf())
-      .globStatus(glob)).toSeq.flatten
-      .map(_.getPath.toString.replaceAll("""([\\*?\[\]{}])""", """\\$1"""))
-  }
-
-  /** The export report shared by `export` and `chain`: optionally
-    * validate the JSONL files, print the part count. */
+  /** The export report of `export` and `chain`, after one scan of the
+    * listed parsed.jsonl files, a thread per file row (no regroup, no
+    * exchange) that writes each thread's parts with `markdown` and counts
+    * --validate-schema's message lines, both in one observation. */
   private def exportReport(spark: SparkSession, args: Array[String],
-      nParts: Long, jsonl: => Seq[String]): Int = {
-    // opt-in runtime JSON-Schema validation of the JSONL records as
-    // written (reference: schema_validation.py is likewise opt-in); one
-    // extra narrow text scan, only when requested
-    val validated = if (flag(args, "validate-schema")) {
-      val files = jsonl
-      val (records, invalid) = if (files.isEmpty) (0L, 0L) else {
-        val lines = spark.read.text(files: _*)
-          .filter(col("value").contains("\"record_type\": \"message\""))
-        val r = graft.parse.SchemaContract.summarize(
-          graft.parse.SchemaContract.validateJsonl(lines)).head()
-        (r.getLong(0), r.getLong(1))
-      }
-      s""","schema_records":$records,"schema_invalid":$invalid"""
-    } else ""
-    println(s"""{"mode":"export","parts":$nParts$validated}""")
-    System.err.println(I18n.msg("cli.export.done", "parts" -> nParts))
+      files: Seq[String], markdown: Option[ExportConf], parts: Long): Int = {
+    import spark.implicits._
+    val validate = flag(args, "validate-schema")
+    val obs = new Observation("export_metrics_" + java.util.UUID.randomUUID())
+    if (files.nonEmpty) { // none: an empty export, not a path-not-found
+      val all = Router.threadFileRows(spark, files)
+      // unread counts are pruned from the scan's projection
+      val rows = if (validate) all else
+        all.select(col("messages"), lit(0).as("records"), lit(0).as("invalid"))
+      markdown.fold(rows.select(lit(0), col("records"), col("invalid"))) {
+        conf =>
+          val out = AtomicFiles.writer(s"${conf.outdir}/md",
+            spark.sessionState.newHadoopConf())
+          rows.as[(Seq[Exporter.ExportMsg], Int, Int)].map { case (m, r, i) =>
+            (Exporter.writeThread(m, conf.tz, conf.formatting, conf.split,
+              out), r, i)
+          }.toDF()
+      }.toDF("parts", "records", "invalid")
+        .observe(obs, sum("parts").as("parts"), sum("records").as("records"),
+          sum("invalid").as("invalid"))
+        .write.format("noop").mode("overwrite").save()
+    }
+    def n(name: String) = if (files.isEmpty) 0L else observed(obs, name)
+    val validated = if (!validate) "" else
+      s""","schema_records":${n("records")},"schema_invalid":${n("invalid")}"""
+    val total = parts + n("parts")
+    println(s"""{"mode":"export","parts":$total$validated}""")
+    System.err.println(I18n.msg("cli.export.done", "parts" -> total))
     0
   }
 }

@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   * greedy split packer run per conversation row (the packer's decision
   * depends on the running *rendered-byte* sum, so it cannot be a SQL
   * window — SURVEY.md §2 E13). `Main chain` renders the conversation
-  * rows its thread pass already holds ([[renderConversation]]);
-  * `export` regroups the JSONL tree's message rows into one row per
-  * conversation first ([[exportThreads]]). Threads are bounded (~10^4
-  * turns by the reference's own model), so one thread per row is safe;
+  * rows its thread pass holds, `export` each parsed.jsonl file read as
+  * one row, both through [[writeThread]], with no message-row regroup.
+  * Threads are bounded (~10^4 turns by the reference's own model), so
+  * one thread per row is safe;
   * conversations themselves are unbounded in number and spread across
   * the cluster.
   *
@@ -274,22 +274,24 @@ object Exporter {
     }
   }
 
-  /** The Markdown parts of one conversation row: the renderer `Main`'s
-    * thread pass calls (a routed message carries no model). */
-  def renderConversation(
-      c: graft.model.Schemas.Conversation,
-      tz: ZoneId,
-      formatting: String,
-      split: SplitConf): Seq[MdPart] =
-    renderThread(c.conversation_id, c.messages.map(m => ExportMsg(
-      c.conversation_id, c.provider_id, m.message_id, m.parent_id, m.role,
-      Some(m.ts), m.text, None)), tz, formatting, split)
+  /** Render one thread's messages and write its parts through `out`;
+    * returns the part count (0 for no message). Both `Main` paths call
+    * it: `chain`'s thread pass and `export`'s file rows. */
+  def writeThread(msgs: Seq[ExportMsg], tz: ZoneId, formatting: String,
+      split: SplitConf, out: graft.util.AtomicFiles.Writer): Int =
+    msgs.headOption.fold(0) { m =>
+      val parts = renderThread(m.conversation_id, msgs, tz, formatting, split)
+      parts.foreach(p => out.write(p.file_name, p.content))
+      parts.size
+    }
 
   /** Distributed export of message rows: one conversation row per
     * conversation_id (`groupBy` + `sort_array(collect_list)`), each
     * rendered + packed by [[renderThread]]. Input needs columns:
     * conversation_id, provider_id, message_id, parent_id, role, ts,
-    * text [, model]. */
+    * text [, model]. No product entry point calls this: perfbench's
+    * `TracedPipeline` compiles against it; remove it in the benchmark PR
+    * that realigns `TracedPipeline`. */
   def exportThreads(
       msgs: DataFrame,
       tz: String = "UTC",
@@ -314,7 +316,9 @@ object Exporter {
   /** Write parts as files, executor-side and atomic per file
     * ([[graft.util.AtomicFiles]]); returns the number of parts
     * written, counted by accumulator inside this single pass — no
-    * second execution of the render+pack pipeline. */
+    * second execution of the render+pack pipeline. No product entry
+    * point calls this: perfbench's `TracedPipeline` compiles against it;
+    * remove it in the benchmark PR that realigns `TracedPipeline`. */
   def writeParts(parts: Dataset[MdPart], outDir: String): Long = {
     val acc = parts.sparkSession.sparkContext.longAccumulator("md_parts")
     val out = graft.util.AtomicFiles.writer(outDir,

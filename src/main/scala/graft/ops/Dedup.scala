@@ -389,8 +389,8 @@ object Dedup {
     * Scale: O(diameter) rounds of one equi-join + agg each, all
     * hash-partitioned on node id — dedup graphs are near-cliques of
     * duplicates (tiny diameter), so 3-4 rounds in practice. Each
-    * round's result is persisted and the previous unpersisted, so
-    * lineage stays O(1) deep (no exponential plan growth).
+    * round's result is checkpointed and the previous one freed, so the
+    * plan stays O(1) deep (no exponential plan growth).
     *
     * Output: (doc_id, cluster_id = min doc_id reachable) for every doc
     * that appears in at least one pair; singletons are their own
@@ -470,15 +470,9 @@ object Dedup {
           least(labels("cluster_id"),
             coalesce(col("nbr_min"), labels("cluster_id")))
             .as("cluster_id"))
-      // persist bounds DATA lineage but the LOGICAL plan still embeds
-      // both parents, doubling per round — past ~30 rounds even
-      // rendering the plan string OOMs the driver. A localCheckpoint
-      // every 8th round truncates the plan (≤2^8 nodes between cuts)
-      // while leaving the common ≤10-round dedup-clique case on the
-      // cheap persist path.
-      val next =
-        if ((i + 1) % 8 == 0) nextRaw.localCheckpoint(true)
-        else nextRaw.persist(lvl)
+      // the plan names `labels` twice, so it would double every round: a
+      // lazy localCheckpoint cuts it, materialized by labelSum's action
+      val next = nextRaw.localCheckpoint(eager = false)
       val s = labelSum(next)
       freeRound(labels)
       labels = next

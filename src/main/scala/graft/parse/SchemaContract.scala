@@ -2,7 +2,7 @@ package graft.parse
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Runtime JSON-Schema validation of emitted JSONL records — the
@@ -189,22 +189,12 @@ object SchemaContract {
   private lazy val messageViolations: Column => Column =
     JsonSchemaCompiler.compile(messageSchemaJson)
 
-  /** Validate raw JSONL lines in a `value` column (e.g. a routed
-    * parsed.jsonl sink read back): adds `violations: array<string>`;
-    * an unparseable line is itself a violation. One narrow codegen'd
-    * pass. */
-  def validateJsonl(lines: DataFrame): DataFrame = {
-    val v = try_parse_json(col("value"))
-    lines.withColumn("violations",
+  /** The violations of one JSONL line (`array<string>`, empty = valid;
+    * an unparseable line is itself one), for any pass that holds lines.
+    * A lambda binds the parsed value: inside a higher-order function no
+    * subexpression is shared, so each keyword would parse it again. */
+  def violations(line: Column): Column =
+    transform(array(try_parse_json(line)), v =>
       when(v.isNull, array(lit("$: not valid JSON")))
-        .otherwise(messageViolations(v)))
-  }
-
-  /** Record and invalid-record counts for a run summary (the
-    * reference's iter_validate_messages aggregate view). Two counters:
-    * the aggregation buffer stays the same size for any input. */
-  def summarize(validated: DataFrame): DataFrame =
-    validated.agg(
-      count(lit(1)).as("records"),
-      count(when(size(col("violations")) > 0, 1)).as("invalid"))
+        .otherwise(messageViolations(v)))(0)
 }

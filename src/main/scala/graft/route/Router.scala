@@ -1,7 +1,8 @@
 package graft.route
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.model.Schemas.{Conversation, Message, ThreadMessage}
 import graft.util.PyJson
@@ -163,6 +164,47 @@ object Router {
 
   private def inOrder(a: ThreadMessage, b: ThreadMessage): Boolean =
     a.ts < b.ts || (a.ts == b.ts && a.message_id.compareTo(b.message_id) <= 0)
+
+  /** The parsed.jsonl files under a parsed root, one per thread dir
+    * name: of several provider dirs holding `thread-<cid>`, the last in
+    * sorted order keeps it, whose render stays last in the reference's
+    * export over `sorted(rglob)` (cli.py:364). Listed on the driver with
+    * glob metacharacters escaped: readers glob the paths again, and a
+    * conversation id may hold `[` or `{`. */
+  def threadFiles(spark: SparkSession, root: String): Seq[String] = {
+    val glob = new org.apache.hadoop.fs.Path(s"$root/*/thread-*/parsed.jsonl")
+    Option(glob.getFileSystem(spark.sessionState.newHadoopConf())
+      .globStatus(glob)).toSeq.flatten.map(_.getPath)
+      .groupBy(_.getParent.getName).values
+      .map(_.maxBy(_.getParent.getParent.getName).toString).toSeq.sorted
+      .map(_.replaceAll("""([\\*?\[\]{}])""", """\\$1"""))
+  }
+
+  private lazy val lineSchema = StructType.fromDDL("record_type STRING, " +
+    "provider_id STRING, conversation_id STRING, message_id STRING, " +
+    "parent_id STRING, role STRING, ts BIGINT, text STRING, " +
+    "meta STRUCT<model: STRING>")
+
+  /** Each parsed.jsonl file as ONE row (`wholetext`), a whole thread:
+    * `messages`, its message records as [[graft.export.Exporter.ExportMsg]]
+    * (header, blank and broken lines skipped, as exporter.py:145-169
+    * skips them); `records`, its lines holding `"record_type": "message"`
+    * (broken ones too), and `invalid`, those breaking the contract. */
+  def threadFileRows(spark: SparkSession, files: Seq[String]): DataFrame = {
+    val marked =
+      filter(col("lines"), _.contains("\"record_type\": \"message\""))
+    spark.read.option("wholetext", "true").text(files: _*)
+      .select(split(col("value"), "\r?\n").as("lines"))
+      .select(
+        transform(filter(transform(col("lines"), from_json(_, lineSchema)),
+          _("record_type") === "message"), r => struct((Seq(
+            "conversation_id", "provider_id", "message_id", "parent_id",
+            "role", "ts", "text").map(f => r(f).as(f)) :+
+            r("meta")("model").as("model")): _*)).as("messages"),
+        size(marked).as("records"),
+        size(filter(marked, l => size(
+          graft.parse.SchemaContract.violations(l)) > 0)).as("invalid"))
+  }
 
   /** Message rows → one conversation row per conversation_id, messages
     * (ts, message_id)-sorted; the provider is its first message's. */

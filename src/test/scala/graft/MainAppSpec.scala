@@ -52,6 +52,25 @@ class MainAppSpec extends AnyFunSuite {
     buf.toString("UTF-8")
   }
 
+  /** A parsed root written by hand: thread dir under the root → the
+    * content of its parsed.jsonl. */
+  private def parsedTree(files: (String, String)*): java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft-parsed")
+    files.foreach { case (dir, body) =>
+      val d = root.resolve(dir)
+      java.nio.file.Files.createDirectories(d)
+      java.nio.file.Files.writeString(d.resolve("parsed.jsonl"), body)
+    }
+    root
+  }
+
+  /** One message line of a parsed.jsonl file, in the writer's format. */
+  private def messageLine(provider: String, cid: String, id: String,
+      ts: Long): String =
+    graft.route.Router.messageJsonLine(provider, cid,
+      graft.model.Schemas.ThreadMessage(id, Some(s"p-$id"), "user", None,
+        ts, "text", Seq(s"text $provider $id"), s"text $provider $id"))
+
   test("chain: raw fixture → parsed JSONL + routed sinks + manifest → markdown") {
     val out = java.nio.file.Files.createTempDirectory("graft-app")
     val rc = Main.run(Array("chain",
@@ -100,8 +119,8 @@ class MainAppSpec extends AnyFunSuite {
   }
 
   test("chain renders the same Markdown as parse + standalone export") {
-    // chain renders from the routed snapshot, export from the JSONL tree
-    // written from it: same rows, so the same files, byte for byte
+    // chain renders from its conversation rows, export from the JSONL
+    // tree written from them: same rows, so the same files, byte for byte
     val in = rawCorpus(120)
     Seq(Seq("--split", "count=7"),
         Seq("--formatting", "none", "--tz", "Asia/Tokyo")).foreach { opts =>
@@ -938,9 +957,115 @@ class MainAppSpec extends AnyFunSuite {
     assert(md.linesIterator.contains("""models: ["a", "b"]"""), md)
   }
 
+  test("export --validate-schema over hostile thread files: same parts, bytes, counts") {
+    import graft.route.Router.threadHeaderLine
+    def m(cid: String, id: String, ts: Long) = messageLine("openai", cid, id, ts)
+    def lines(cid: String) =
+      Seq(threadHeaderLine("openai", cid, 2), m(cid, "m1", 1000L))
+    val root = parsedTree(
+      "openai/thread-crlf" -> (lines("crlf") :+ m("crlf", "m2", 2000L))
+        .mkString("", "\r\n", "\r\n"),
+      "openai/thread-blank" -> (lines("blank") :+ "" :+
+        m("blank", "m2", 2000L)).mkString("", "\n", "\n"),
+      // a cut message line counts as a record and an invalid one; a
+      // broken line without the message marker is no record
+      "openai/thread-broken" -> (lines("broken") :+
+        """{"record_type": "message", "provider_id": "openai", "conv""" :+
+        "{nope" :+ m("broken", "m2", 2000L)).mkString("", "\n", "\n"),
+      "openai/thread-header" -> (threadHeaderLine("openai", "header", 0) +
+        "\n"),
+      "openai/thread-nonl" -> (lines("nonl") :+ m("nonl", "m2", 2000L))
+        .mkString("\n"))
+    val out = java.nio.file.Files.createTempDirectory("graft-hostile-out")
+    val report = stdoutOf {
+      assert(Main.run(Array("export", "--parsed-root", root.toString,
+        "--outdir", out.toString, "--validate-schema")) === 0)
+    }
+    // parts, bytes and counts of the message-row regroup export that the
+    // file-row pass replaced, recorded from it on this same tree
+    assert(report.contains(
+      """"parts":4,"schema_records":9,"schema_invalid":1}"""), report)
+    def sha256(b: Seq[Byte]) = java.security.MessageDigest
+      .getInstance("SHA-256").digest(b.toArray).map("%02x".format(_)).mkString
+    assert(mdFiles(out).map { case (n, b) => n -> sha256(b) } === Map(
+      "thread-blank.md" ->
+        "f62284cc891bd1cfabe25af448f9de0537f636e7dfde05371ec8cf12c30825cc",
+      "thread-broken.md" ->
+        "fa9ff3de6263a2794974438ff3695e40193090ae4c37fff20ffd8374f1d89014",
+      "thread-crlf.md" ->
+        "a0249a8b8af9cc54d73f9b9768b4307c5f0d28003db17241278df7349b241cf7",
+      "thread-nonl.md" ->
+        "1351ce2afafa35d2f0220f927e260c7de94b4fbac4d9b868af1ccd4d9dcad8a6"))
+  }
+
+  test("export: one thread id in two provider dirs keeps the last provider's file") {
+    // the reference exports sorted(rglob) file by file, so the last
+    // file's render is what stays under the shared name
+    val root = parsedTree(
+      "claude/thread-dup" -> Seq(
+        graft.route.Router.threadHeaderLine("claude", "dup", 1),
+        messageLine("claude", "dup", "c1", 1000L)).mkString("", "\n", "\n"),
+      "openai/thread-dup" -> Seq(
+        graft.route.Router.threadHeaderLine("openai", "dup", 2),
+        messageLine("openai", "dup", "o1", 2000L),
+        messageLine("openai", "dup", "o2", 3000L)).mkString("", "\n", "\n"))
+    assert(graft.route.Router.threadFiles(spark, root.toString)
+      .map(_.split("/").takeRight(3).mkString("/")) ===
+      Seq("openai/thread-dup/parsed.jsonl"))
+    val out = java.nio.file.Files.createTempDirectory("graft-dup-out")
+    val report = stdoutOf {
+      assert(Main.run(Array("export", "--parsed-root", root.toString,
+        "--outdir", out.toString, "--validate-schema")) === 0)
+    }
+    // the shadowed file is neither rendered nor validated
+    assert(report.contains(
+      """"parts":1,"schema_records":2,"schema_invalid":0}"""), report)
+    val md = new String(mdFiles(out)("thread-dup.md").toArray, "UTF-8")
+    assert(md.contains("\nprovider: openai\nmessages: 2\n"), md)
+    assert(md.contains("text openai o2") && !md.contains("c1"), md)
+  }
+
+  test("export: one scan of the thread files, no exchange; --validate-schema rides it") {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Nodes extends adaptive.AdaptiveSparkPlanHelper
+    // 20 threads: under Spark's parallel-listing threshold, so listing
+    // the files starts no job of its own
+    val in = rawCorpus(20)
+    val out = java.nio.file.Files.createTempDirectory("graft-export-pass")
+    def run(args: String*) = assert(Main.run(args.toArray) === 0)
+    val chain = jobsOf(run("chain", "--input", in, "--outdir", out.toString))
+    val chainChecked = jobsOf(run("chain", "--input", in,
+      "--outdir", out.toString, "--validate-schema"))
+    // the check is one more job: one scan of the JSONL tree just written
+    assert((chain, chainChecked) === ((5, 6)))
+    val exportArgs = Seq("export", "--parsed-root", out.toString,
+      "--outdir", out.toString)
+    // the message-row regroup export ran 4 jobs here: its exchange's map
+    // stage and the render, then a second read of the tree to validate
+    assert(jobsOf(run(exportArgs :+ "--validate-schema": _*)) === 1)
+    Seq(exportArgs, exportArgs :+ "--validate-schema").foreach { args =>
+      val plans = plansOf(run(args: _*)).map(_._2)
+      val scans = plans.flatMap(p => Nodes.collect(p) {
+        case s: FileSourceScanExec
+            if s.relation.inputFiles.exists(_.endsWith("parsed.jsonl")) => s
+      })
+      assert(scans.size === 1, plans.mkString("\n"))
+      assert(scans.head.relation.inputFiles.length === 20)
+      plans.foreach { p =>
+        assert(Nodes.collect(p) { case e: ShuffleExchangeExec => e }.isEmpty &&
+          Nodes.collect(p) { case a: aggregate.BaseAggregateExec => a }.isEmpty,
+          s"${args.mkString(" ")}:\n$p")
+        // the contract check runs only when asked for
+        assert(p.toString.contains("parseJson") ===
+          args.contains("--validate-schema"), s"${args.mkString(" ")}:\n$p")
+      }
+    }
+  }
+
   test("export of a zero-thread parsed root reports parts:0 + schema 0/0, not 99") {
-    // an existing root with no thread-*/parsed.jsonl underneath: both
-    // export reads glob nothing — must be an empty export, not a crash
+    // an existing root with no thread-*/parsed.jsonl underneath: the
+    // listing finds nothing — must be an empty export, not a crash
     val root = java.nio.file.Files.createTempDirectory("graft-empty-root")
     val out = java.nio.file.Files.createTempDirectory("graft-empty-out")
     val outStream = new java.io.ByteArrayOutputStream()

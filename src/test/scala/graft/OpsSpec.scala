@@ -496,6 +496,38 @@ class OpsSpec extends AnyFunSuite {
     assert(local === expected)
   }
 
+  test("connected components: 40 propagation rounds keep every query plan small") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    // min-label propagation takes one round per hop, so a 41-node path
+    // runs 40 rounds (41 with the convergence check); each round's plan
+    // names the previous labels twice, so a plan that is not cut every
+    // round doubles per round
+    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(action: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        sizes.add(qe.analyzed.collect { case p => p }.size)
+      override def onFailure(action: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val cc = try {
+      val r = Dedup.connectedComponents(
+        (1L to 40L).map(i => (i, i + 1)).toDF("doc_a", "doc_b"),
+        localMaxEdges = 0)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    assert(cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      (1L to 41L).map(_ -> 1L).toMap)
+    assert(sizes.size >= 40)
+    assert(sizes.asScala.max < 64, sizes.asScala.mkString(","))
+    assert(cc.queryExecution.analyzed.collect { case p => p }.size < 64)
+  }
+
   test("embedding near-dup: blocked equi-join — no nested-loop, matches all-pairs") {
     val res = Dedup.embeddingNearDups(embs, minCosine = 0.3)
     val plan = res.queryExecution.executedPlan.toString

@@ -22,8 +22,8 @@ class SchemaContractSpec extends AnyFunSuite {
       """"content":{"content_type":"text","parts":["a","b"]},"text":"a\nb"}"""
 
   private def viols(lines: String*): Seq[Seq[String]] =
-    SchemaContract.validateJsonl(lines.toDF("value"))
-      .select("violations").as[Seq[String]].collect().toSeq
+    lines.toDF("value").select(SchemaContract.violations(col("value")))
+      .as[Seq[String]].collect().toSeq
 
   test("valid message has zero violations") {
     assert(viols(valid) === Seq(Nil))
@@ -33,8 +33,7 @@ class SchemaContractSpec extends AnyFunSuite {
     val lines = spark.read.textFile(
         TestSpark.resource("/golden/sample_multi_parsed.jsonl"))
       .filter(col("value").contains("\"record_type\": \"message\""))
-    val bad = SchemaContract.validateJsonl(lines.toDF())
-      .filter(size(col("violations")) > 0)
+    val bad = lines.filter(size(SchemaContract.violations(col("value"))) > 0)
     assert(lines.count() === 16L)
     assert(bad.count() === 0L)
   }
@@ -112,18 +111,11 @@ class SchemaContractSpec extends AnyFunSuite {
   }
 
   test("validation plan is one narrow pass: zero Exchange, no UDF") {
-    val df = SchemaContract.validateJsonl(Seq(valid).toDF("value"))
+    val df = Seq(valid).toDF("value")
+      .select(SchemaContract.violations(col("value")))
     val plan = df.queryExecution.executedPlan
     assert(plan.collect { case e: Exchange => e }.isEmpty)
     assert(!plan.toString.toLowerCase.contains("batchevalpython") &&
       !plan.toString.contains("ScalaUDF"))
-  }
-
-  test("summarize: record and invalid counts") {
-    val df = SchemaContract.validateJsonl(
-      Seq(valid, "{nope", mod(""""ts":5""" -> """"ts":-1""")).toDF("value"))
-    val row = SchemaContract.summarize(df).head()
-    assert(row.getLong(0) === 3L)
-    assert(row.getLong(1) === 2L)
   }
 }
