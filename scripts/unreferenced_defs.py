@@ -31,9 +31,6 @@ import sys
 
 ALLOWED = {
     "graft.Verify": "sbt `runMain` main: the registry correctness dump",
-    "graft.tools.PlanDump": "sbt `runMain` main: prints a query's plans",
-    "SizeExpr.formatBytes": "the reference's operator E16, pinned by "
-                            "PropertySpec",
     "SparkEntry.entry": "the SparkEntry contract's flagship query, called "
                         "by name from outside the repo (QueriesSmokeSpec "
                         "checks rows > 0)",

@@ -20,7 +20,7 @@ import graft.util.AtomicFiles
   * Usage:
   *   graft.app.Main parse  --input FILE --outdir DIR [--provider P]
   *                         [--input-format json|text] [--resume]
-  *                         [--locale en|ja]
+  *                         [--hot-threshold N] [--locale en|ja]
   *   graft.app.Main export --parsed-root DIR --outdir DIR [--tz TZ]
   *                         [--formatting light|none] [--split SPEC]
   *                         [--validate-schema]
@@ -61,6 +61,18 @@ object Main {
   private def req(args: Array[String], name: String): String =
     opt(args, name).getOrElse(throw new UsageError(
       I18n.msg("cli.opt.required", "name" -> name)))
+
+  /** An option's value through `parse`, or `default` when it is
+    * absent; a value `parse` rejects is a usage error (exit 2), raised
+    * on the driver before anything is written. */
+  private def parsed[T](args: Array[String], name: String, default: T)(
+      parse: String => T): T =
+    opt(args, name).fold(default) { v =>
+      try parse(v) catch {
+        case scala.util.control.NonFatal(_) => throw new UsageError(
+          I18n.msg("cli.opt.invalid", "name" -> name, "value" -> v))
+      }
+    }
 
   private def flag(args: Array[String], name: String): Boolean =
     args.contains(s"--$name")
@@ -143,18 +155,11 @@ object Main {
   private final case class ExportConf(outdir: String, tz: ZoneId,
       formatting: String, split: Exporter.SplitConf)
 
-  private def exportConf(args: Array[String]): ExportConf = {
-    def parsed[T](name: String, default: T)(parse: String => T): T =
-      opt(args, name).fold(default) { v =>
-        try parse(v) catch {
-          case scala.util.control.NonFatal(_) => throw new UsageError(
-            I18n.msg("cli.opt.invalid", "name" -> name, "value" -> v))
-        }
-      }
-    ExportConf(exportOutdir(args), parsed("tz", ZoneId.of("UTC"))(ZoneId.of),
+  private def exportConf(args: Array[String]): ExportConf =
+    ExportConf(exportOutdir(args),
+      parsed(args, "tz", ZoneId.of("UTC"))(ZoneId.of),
       opt(args, "formatting").getOrElse("light"),
-      parsed("split", Exporter.SplitConf.none)(Exporter.SplitConf.parse))
-  }
+      parsed(args, "split", Exporter.SplitConf.none)(Exporter.SplitConf.parse))
 
   /** Path existence through the Hadoop FS of the path's scheme (local
     * java.nio checks would wrongly 404 hdfs:/s3a: inputs). */
@@ -181,8 +186,8 @@ object Main {
       return Left(2)
     }
 
-    val hotThreshold = opt(args, "hot-threshold").map(_.toLong)
-      .getOrElse(10000L) // ~ the reference's own max-thread-size model
+    // ~ the reference's own max-thread-size model
+    val hotThreshold = parsed(args, "hot-threshold", 10000L)(_.toLong)
 
     // every container parses to the conversation row (provider_id,
     // conversation_id, messages), so its kept-turn count is on the row

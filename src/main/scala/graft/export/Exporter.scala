@@ -30,23 +30,20 @@ import org.apache.spark.sql.functions._
   */
 object Exporter {
 
-  final case class SplitConf(
-      mode: Option[String], // size | count | auto
-      sizeLimit: Option[Long],
-      countLimit: Option[Int])
+  /** Split limits; no limit = no split. */
+  final case class SplitConf(sizeLimit: Option[Long], countLimit: Option[Int])
 
   object SplitConf {
-    val none: SplitConf = SplitConf(None, None, None)
+    val none: SplitConf = SplitConf(None, None)
 
     /** Parse "size=4M" | "count=1500" | "auto" (reference:
       * exporter.py:93-120; auto = size 4M & count 1500). */
     def parse(spec: String): SplitConf = spec.trim.toLowerCase match {
-      case "auto" => SplitConf(Some("auto"),
-        Some(SizeExpr.parse("4M")), Some(1500))
-      case s if s.startsWith("size=") => SplitConf(Some("size"),
-        Some(SizeExpr.parse(s.stripPrefix("size="))), None)
-      case s if s.startsWith("count=") => SplitConf(Some("count"),
-        None, Some(s.stripPrefix("count=").toInt))
+      case "auto" => SplitConf(Some(SizeExpr.parse("4M")), Some(1500))
+      case s if s.startsWith("size=") =>
+        SplitConf(Some(SizeExpr.parse(s.stripPrefix("size="))), None)
+      case s if s.startsWith("count=") =>
+        SplitConf(None, Some(s.stripPrefix("count=").toInt))
       case other => throw new IllegalArgumentException(
         s"invalid --split: $other")
     }
@@ -234,7 +231,7 @@ object Exporter {
     val tsMax = tss.maxOption.map(_.toDouble)
     val blocks = sorted.map(renderBlock(_, tz, formatting)).toIndexedSeq
 
-    if (split.mode.isEmpty) {
+    if (split == SplitConf.none) {
       val fm = Seq(
         "---",
         s"thread: $cid",

@@ -26,13 +26,4 @@ object SizeExpr {
       }
     case other => throw new IllegalArgumentException(s"Invalid size: $other")
   }
-
-  /** Human MiB-style formatting for logs (reference: utils.py:34-39). */
-  def formatBytes(n: Long): String = {
-    val units = Seq("B", "KiB", "MiB", "GiB", "TiB")
-    var v = n.toDouble
-    var i = 0
-    while (v >= 1024 && i < units.length - 1) { v /= 1024.0; i += 1 }
-    f"$v%.1f${units(i)}"
-  }
 }

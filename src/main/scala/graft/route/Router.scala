@@ -202,8 +202,8 @@ object Router {
             "role", "ts", "text").map(f => r(f).as(f)) :+
             r("meta")("model").as("model")): _*)).as("messages"),
         size(marked).as("records"),
-        size(filter(marked, l => size(
-          graft.parse.SchemaContract.violations(l)) > 0)).as("invalid"))
+        size(filter(marked, graft.parse.SchemaContract.invalid(_)))
+          .as("invalid"))
   }
 
   /** Message rows → one conversation row per conversation_id, messages

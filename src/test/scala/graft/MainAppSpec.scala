@@ -426,24 +426,31 @@ class MainAppSpec extends AnyFunSuite {
 
   test("a bad --split or --tz exits 2 before anything is written") {
     val in = rawCorpus(3)
-    Seq(Seq("--split", "bogus"), Seq("--split", "count=x"),
-        Seq("--tz", "Bad/Zone")).foreach { opts =>
+    val bad = Seq(Seq("--split", "bogus"), Seq("--split", "count=x"),
+      Seq("--tz", "Bad/Zone"), Seq("--hot-threshold", "x"))
+    bad.foreach { opts =>
       val out = java.nio.file.Files.createTempDirectory("graft-bad-opt")
-      val chain = intercept[RuntimeException](Main.run(
-        Array("chain", "--input", in, "--outdir", out.toString) ++ opts))
-      assert(Main.failure(chain) === 2, opts)
-      assert(chain.getMessage.contains(opts.head), opts)
-      Seq("openai/routed", "openai/thread_index", "md").foreach { d =>
-        assert(!java.nio.file.Files.exists(out.resolve(d)), s"$d $opts")
+      // --hot-threshold is a parse option, the others export options
+      val parse = opts.head == "--hot-threshold"
+      (if (parse) Seq("chain", "parse") else Seq("chain")).foreach { mode =>
+        val e = intercept[RuntimeException](Main.run(
+          Array(mode, "--input", in, "--outdir", out.toString) ++ opts))
+        assert(Main.failure(e) === 2, s"$mode $opts")
+        assert(e.getMessage.contains(opts.head), s"$mode $opts")
+        Seq("openai/routed", "openai/thread_index", "md").foreach { d =>
+          assert(!java.nio.file.Files.exists(out.resolve(d)), s"$d $opts")
+        }
+        assert(filesUnder(out, _ == "parsed.jsonl").isEmpty, opts)
       }
-      assert(filesUnder(out, _ == "parsed.jsonl").isEmpty, opts)
-      // export checks them before it renders, too
-      assert(Main.run(Array("parse", "--input", in, "--outdir",
-        out.toString)) === 0)
-      val export = intercept[RuntimeException](Main.run(Array("export",
-        "--parsed-root", out.toString, "--outdir", out.toString) ++ opts))
-      assert(Main.failure(export) === 2, opts)
-      assert(!java.nio.file.Files.exists(out.resolve("md")), opts)
+      if (!parse) {
+        // export checks them before it renders, too
+        assert(Main.run(Array("parse", "--input", in, "--outdir",
+          out.toString)) === 0)
+        val export = intercept[RuntimeException](Main.run(Array("export",
+          "--parsed-root", out.toString, "--outdir", out.toString) ++ opts))
+        assert(Main.failure(export) === 2, opts)
+        assert(!java.nio.file.Files.exists(out.resolve("md")), opts)
+      }
     }
   }
 

@@ -119,14 +119,6 @@ object PropertySpec extends Properties("graft") {
       d.isNaN || PyJson.pyFloatRepr(d).toDouble == d
   }
 
-  property("formatBytes matches reference format_bytes") = Prop.all(
-    Prop(SizeExpr.formatBytes(0L) == "0.0B"),
-    Prop(SizeExpr.formatBytes(1023L) == "1023.0B"),
-    Prop(SizeExpr.formatBytes(1024L) == "1.0KiB"),
-    Prop(SizeExpr.formatBytes(4 * 1024 * 1024L) == "4.0MiB"),
-    Prop(SizeExpr.formatBytes(1536L) == "1.5KiB"),
-    Prop(SizeExpr.formatBytes(5L * 1024 * 1024 * 1024 * 1024) == "5.0TiB"))
-
   // NgramRepetition kernel vs a naive Scala recomputation: counting
   // via sorted-groupBy must equal the one-pass hash count for any text
   property("ngram repetition matches naive recount") = {
